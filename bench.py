@@ -32,8 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from vtshaver_spark import Filters, style_to_filters
 from vtshaver_spark.functions import geo
 from vtshaver_spark.functions.s2 import with_s2_cell
-from vtshaver_spark.operators.ann import cosine_topk
-from vtshaver_spark.operators.dedup import exact_dedup, minhash_lsh_candidates
 from vtshaver_spark.operators.knn import knn_join_broadcast
 from vtshaver_spark.operators.pip import pip_rect_join
 from vtshaver_spark.operators.shave import shave
@@ -127,54 +125,6 @@ def run_suite(spark: SparkSession, sf_dir: str, replicate: int = REPLICATE, subs
         cached += [features, images]
     landmarks = spark.table("landmarks_v")
     polygons = spark.table("polygons_v")
-    # single-file parquet scans as one partition — spread text/vector
-    # work across cores; replicate with DISTINCT ids so dedup joins see
-    # realistic (not degenerate) duplicate structure
-    # Replicate documents with REALISTIC duplicate structure: the first
-    # 4 replicas of each doc are near-dups (suffix-perturbed, jaccard
-    # ~0.95 — what LSH must find), the rest are genuinely distinct (a
-    # replica-specific salt token injected every 4 tokens perturbs most
-    # shingles). An every-replica-near-dup corpus degenerates into
-    # x_factor-sized cliques whose size^2 pair expansion measures
-    # clique blow-up, not LSH (real corpora carry ~10-30% near-dup
-    # mass, not 64-way cliques of everything).
-    text_factor = min(256, max(1, replicate // 4))
-    documents = spark.table("documents").repartition(n_part)
-    if text_factor > 1:
-        salted = F.regexp_replace(
-            F.col("text"),
-            F.lit(r"((?:\S+ ){4})"),
-            F.concat(F.lit("$1u"), F.col("_rep").cast("string"), F.lit(" ")),
-        )
-        documents = (
-            documents.withColumn(
-                "_rep", F.explode(F.sequence(F.lit(0), F.lit(text_factor - 1)))
-            )
-            .withColumn("doc_id", F.col("doc_id") * 100 + F.col("_rep"))
-            .withColumn(
-                "text",
-                F.when(
-                    F.col("_rep") < 4,
-                    F.concat(F.col("text"), F.lit(" rep"), F.col("_rep")),
-                ).otherwise(salted),
-            )
-            .drop("_rep")
-        )
-    emb_base = spark.table("embeddings")
-    embeddings = emb_base.repartition(n_part)
-    # independent knob: ann_cosine's work is queries x corpus; the
-    # scaling harness raises this so ann sits well above the ~0.5s
-    # scheduling floor that otherwise shows zero scaling signal
-    emb_factor = int(os.environ.get("SPARK_GRAFT_EMB_REPLICATE", str(text_factor)))
-    if emb_factor > 1:
-        embeddings = (
-            embeddings.withColumn(
-                "_rep", F.explode(F.sequence(F.lit(0), F.lit(emb_factor - 1)))
-            )
-            .withColumn("vec_id", F.col("vec_id") * 1000 + F.col("_rep"))
-            .drop("_rep")
-        )
-
     # materialize the replicated corpus once (outside the timed section)
     feature_rows = features.count()
     image_rows = images.count()
@@ -196,11 +146,6 @@ def run_suite(spark: SparkSession, sf_dir: str, replicate: int = REPLICATE, subs
             .collect()[0][0],
         )
         timed("pip", lambda: pip_rect_join(images, polygons).count())
-        timed("dedup_exact", lambda: exact_dedup(documents).count())
-        timed(
-            "minhash_lsh",
-            lambda: minhash_lsh_candidates(documents, num_hashes=32, bands=8).count(),
-        )
     if kernels:
         if subset == "kernels":
             # default mult 32 (r5): the JVM column-math encode is ~6x
@@ -257,66 +202,6 @@ def run_suite(spark: SparkSession, sf_dir: str, replicate: int = REPLICATE, subs
         timed(
             "knn",
             lambda: knn_join_broadcast(images_knn, landmarks, k=3).count(),
-        )
-        # query-set size is the GEMM work multiplier; the scaling
-        # harness raises it so ann_cosine sits well above the ~0.5s
-        # per-query scheduling floor that otherwise masks its signal
-        n_ann_q = int(os.environ.get("SPARK_GRAFT_ANN_QUERIES", "8"))
-        q = emb_base.filter(F.col("vec_id") < n_ann_q).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        timed("ann_cosine", lambda: cosine_topk(embeddings, q, k=10).count())
-
-    # Curation group (r5): the LLM-pipeline operators get their own
-    # timed group so regressions are visible round-over-round. Reported
-    # SEPARATELY from the headline total ("curation" in the JSON) to
-    # keep the 9-query headline comparable with every prior round's
-    # artifact. Runs over the same realistically-duplicated documents
-    # corpus the LSH query uses; fast (xxhash) hash mode — the portable
-    # md5 mode exists for oracle replay, not throughput.
-    cur_timings: dict = {}
-    cur_counts: dict = {}
-    if subset in ("all", "curation"):
-        from vtshaver_spark.operators.bloom import bloom_anti_join
-        from vtshaver_spark.operators.contamination import contamination_report
-        from vtshaver_spark.operators.dedup import winnow_fingerprints
-        from vtshaver_spark.operators.packing import pack_token_sequences
-
-        def ctimed(name, fn):
-            t0 = time.perf_counter()
-            cur_counts[name] = fn()
-            cur_timings[name] = round(time.perf_counter() - t0, 3)
-
-        split = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(20))
-        ctimed(
-            "packing",
-            lambda: pack_token_sequences(documents, seq_len=512).count(),
-        )
-        ctimed(
-            "bloom_dedup",
-            lambda: bloom_anti_join(
-                documents.filter(split != 0),
-                documents.filter(split == 0),
-                lambda: F.md5(F.col("text")),
-                fpp=0.05,
-            ).count(),
-        )
-        ctimed(
-            "contamination",
-            lambda: contamination_report(
-                train=documents.filter(split != 0),
-                eval_df=documents.filter(split == 0),
-                shingle_n=3,
-                threshold=0.1,
-            ).count(),
-        )
-        ctimed(
-            "winnow",
-            lambda: winnow_fingerprints(
-                documents.filter(F.col("doc_id") % 7 == 0),
-                shingle_n=3,
-                window=4,
-            ).count(),
         )
 
     mvt_tiles = 0
@@ -377,9 +262,6 @@ def run_suite(spark: SparkSession, sf_dir: str, replicate: int = REPLICATE, subs
     if mvt_tiles:
         out["mvt_tiles"] = mvt_tiles
         out["mvt_tiles_per_sec"] = round(mvt_tiles / timings["mvt_shave"], 1)
-    if cur_timings:
-        out["curation_timings"] = cur_timings
-        out["curation_counts"] = cur_counts
     if subset == "all":
         shaved_and_joined = counts["shave"] + counts["knn"] + counts["pip"]
         out["shaved_joined_rows_per_sec"] = round(
@@ -425,11 +307,6 @@ def one_run(
             k: min(r["timings"][k] for r in results) for k in best["timings"]
         }
         best["total_sec"] = round(sum(best["timings"].values()), 3)
-        if "curation_timings" in best:
-            best["curation_timings"] = {
-                k: min(r["curation_timings"][k] for r in results)
-                for k in best["curation_timings"]
-            }
         # make the measurement discipline visible in the artifact: the
         # per-query numbers are minima over `passes` timed rounds (plus
         # one untimed warmup), per CLAUDE.md's noise rules — a consumer
@@ -467,9 +344,9 @@ def main():
     if scaling_mode:
         # Two suites, each measured on a core pair that is fair to its
         # execution model:
-        #  - relational (pure JVM codegen: shave/tile-rollup/PIP/dedup/
-        #    MinHash) at 8 vs 32 — task slots map 1:1 to cores;
-        #  - Arrow kernels (kNN/S2/ANN) at 2 vs 8 — each task slot
+        #  - relational (pure JVM codegen: shave/tile-rollup/PIP) at
+        #    8 vs 32 — task slots map 1:1 to cores;
+        #  - Arrow kernels (kNN/S2) at 2 vs 8 — each task slot
         #    drives a JVM thread AND a python worker (~2 cores/slot),
         #    so local[32] would oversubscribe this 32-core box 2x and
         #    understate true multi-executor scaling.
@@ -536,14 +413,6 @@ def main():
         if "relational" in wanted:
             runs["relational"] = pair_run(rel_pair, rel_repl, "relational")
         if "kernels" in wanted:
-            # 2048 queries / 512x corpus: the r4 blocked ANN kernel is
-            # ~5x faster per batch, which pushed the old 256-query
-            # sizing back under the ~0.5s scheduling floor (hi leg
-            # <1s, fake 0.48 "efficiency"); at 2048q the hi leg runs
-            # ~6s and the GEMM dominates the core-count-independent
-            # transport floor (probed eff 0.73-0.75 vs 0.48)
-            os.environ.setdefault("SPARK_GRAFT_ANN_QUERIES", "2048")
-            os.environ.setdefault("SPARK_GRAFT_EMB_REPLICATE", "512")
             runs["kernels"] = pair_run(ker_pair, ker_repl, "kernels")
         if "codec" in wanted:
             # default 128 (r5): at x32 the varint-fast codec's hi leg
@@ -574,7 +443,7 @@ def main():
     passes = int(os.environ.get("SPARK_GRAFT_PASSES", "3"))
     result = one_run(cpus, sf_dir, passes=passes)
     out = {
-        "metric": "engine suite wall time (shave + tile/s2 + knn + pip + dedup + lsh + ann)",
+        "metric": "engine suite wall time (shave + tile/s2 + knn + pip + mvt)",
         "value": result["total_sec"],
         "unit": "sec",
         "queries": result["timings"],
@@ -588,14 +457,6 @@ def main():
     if "mvt_tiles_per_sec" in result:
         out["mvt_tiles"] = result["mvt_tiles"]
         out["mvt_tiles_per_sec"] = result["mvt_tiles_per_sec"]
-    if "curation_timings" in result:
-        # separate group: NOT folded into "value" so the 9-query
-        # headline stays comparable with prior rounds' artifacts
-        out["curation"] = {
-            "total_sec": round(sum(result["curation_timings"].values()), 3),
-            "queries": result["curation_timings"],
-            "counts": result["curation_counts"],
-        }
     print(json.dumps(out))
 
 
@@ -621,8 +482,8 @@ Two structural fixes landed during r3:
    honest model of a packed production executor.
 2. **Floor-proof workloads**: sub-second queries carry no scaling
    signal (~0.5s scheduling floor at any core count). The kernels
-   suite sizes ann (`SPARK_GRAFT_EMB_REPLICATE`, `SPARK_GRAFT_ANN_QUERIES`)
-   and s2/knn (`SPARK_GRAFT_KER_REPLICATE=128`) so every timed query
+   suite sizes ann (since removed) and s2/knn
+   (`SPARK_GRAFT_KER_REPLICATE=128`) so every timed query
    runs >1.5s on the HIGH-core leg.
 
 Why hi-core legs are the noise victims: an 8-slot kernel config needs
@@ -793,7 +654,7 @@ def _write_bench_md(rel, ker, sf_dir, codec=None):
         "",
         "## Relational suite (pure JVM whole-stage codegen)",
         "",
-        f"shave + tile rollup + PIP range-join + exact dedup + MinHash-LSH, "
+        f"shave + tile rollup + PIP range-join, "
         f"corpus x{rel['replicate']} ({rel['hi']['feature_rows']} feature rows, "
         f"{rel['hi']['image_rows']} image rows). Measured at the core-fair "
         f"N={rel['cores'][0]} vs 4N={rel['cores'][1]} pair: this single-socket "
@@ -809,7 +670,7 @@ def _write_bench_md(rel, ker, sf_dir, codec=None):
         "",
         "## Arrow-kernel suite (vectorized numpy mapInArrow/mapInPandas)",
         "",
-        f"S2 cells + kNN + ANN cosine, corpus x{ker['replicate']} "
+        f"S2 cells + kNN, corpus x{ker['replicate']} "
         f"({ker['hi']['image_rows']} image rows). Each task slot drives a JVM "
         "thread AND a python worker (~2 cores per slot), so on this 32-core "
         "box the core-fair N vs 4N pair is 2 vs 8 (local[32] would "

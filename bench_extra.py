@@ -8,8 +8,7 @@ full suite re-runs. Usage:
     python bench_extra.py <leg>[,<leg>...] [--sf-dir DIR] [--passes N]
         [--replicate N]
 
-Legs: knn, minhash, mvt, s2, bloom, winnow, packing, contamination,
-tile_rollup, dedup_exact, pip, shave, ann.
+Legs: knn, mvt, s2, tile_rollup, pip, shave.
 """
 
 from __future__ import annotations
@@ -70,39 +69,11 @@ def main():
     landmarks = spark.table("landmarks_v")
     polygons = spark.table("polygons_v")
 
-    text_factor = min(256, max(1, replicate // 4))
-    documents = spark.table("documents").repartition(n_part)
-    if text_factor > 1:
-        salted = F.regexp_replace(
-            F.col("text"),
-            F.lit(r"((?:\S+ ){4})"),
-            F.concat(F.lit("$1u"), F.col("_rep").cast("string"), F.lit(" ")),
-        )
-        documents = (
-            documents.withColumn(
-                "_rep", F.explode(F.sequence(F.lit(0), F.lit(text_factor - 1)))
-            )
-            .withColumn("doc_id", F.col("doc_id") * 100 + F.col("_rep"))
-            .withColumn(
-                "text",
-                F.when(
-                    F.col("_rep") < 4,
-                    F.concat(F.col("text"), F.lit(" rep"), F.col("_rep")),
-                ).otherwise(salted),
-            )
-            .drop("_rep")
-        )
-
     def leg_fn(name):
         if name == "knn":
             from vtshaver_spark.operators.knn import knn_join_broadcast
             pts = images.select("image_id", "lon", "lat")
             return lambda: knn_join_broadcast(pts, landmarks, k=3).count()
-        if name == "minhash":
-            from vtshaver_spark.operators.dedup import minhash_lsh_candidates
-            return lambda: minhash_lsh_candidates(
-                documents, num_hashes=32, bands=8
-            ).count()
         if name == "shave":
             from vtshaver_spark.operators.shave import shave
             from vtshaver_spark import Filters, style_to_filters
@@ -124,9 +95,6 @@ def main():
                 .select(F.sum("n"), F.sum("c"))
                 .collect()[0][0]
             )
-        if name == "dedup_exact":
-            from vtshaver_spark.operators.dedup import exact_dedup
-            return lambda: exact_dedup(documents).count()
         if name == "s2":
             from vtshaver_spark.functions.s2 import with_s2_cell
             return (
@@ -134,49 +102,6 @@ def main():
                 .select(F.countDistinct("cell_s2").alias("c"))
                 .collect()[0][0]
             )
-        if name == "ann":
-            from vtshaver_spark.operators.ann import cosine_topk
-            emb_base = spark.table("embeddings")
-            embeddings = emb_base.repartition(n_part)
-            emb_factor = text_factor
-            if emb_factor > 1:
-                embeddings = (
-                    embeddings.withColumn(
-                        "_rep", F.explode(F.sequence(F.lit(0), F.lit(emb_factor - 1)))
-                    )
-                    .withColumn("vec_id", F.col("vec_id") * 1000 + F.col("_rep"))
-                    .drop("_rep")
-                )
-            q = emb_base.filter(F.col("vec_id") < 8).select(
-                F.col("vec_id").alias("query_id"), "embedding"
-            )
-            return lambda: cosine_topk(embeddings, q, k=10).count()
-        if name == "bloom":
-            from vtshaver_spark.operators.bloom import bloom_anti_join
-            split = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(20))
-            return lambda: bloom_anti_join(
-                documents.filter(split != 0),
-                documents.filter(split == 0),
-                lambda: F.md5(F.col("text")),
-                fpp=0.05,
-            ).count()
-        if name == "contamination":
-            from vtshaver_spark.operators.contamination import contamination_report
-            split = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(20))
-            return lambda: contamination_report(
-                train=documents.filter(split != 0),
-                eval_df=documents.filter(split == 0),
-                shingle_n=3,
-                threshold=0.1,
-            ).count()
-        if name == "winnow":
-            from vtshaver_spark.operators.dedup import winnow_fingerprints
-            return lambda: winnow_fingerprints(
-                documents.filter(F.col("doc_id") % 7 == 0), shingle_n=3, window=4
-            ).count()
-        if name == "packing":
-            from vtshaver_spark.operators.packing import pack_token_sequences
-            return lambda: pack_token_sequences(documents, seq_len=512).count()
         if name == "mvt":
             from vtshaver_spark.operators.shave import shave
             from vtshaver_spark.sources.mvt import decode_tiles, encode_tiles_mvt

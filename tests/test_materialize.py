@@ -1,55 +1,7 @@
-"""Tile blob materialization: round-trip, gzip, salted two-phase
-equality, raster mosaic determinism."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Raster tile materialization: mosaic determinism."""
 
 from vtshaver_spark.functions.codecs import rawi_decode
-from vtshaver_spark.operators.materialize import (
-    decode_tile,
-    encode_tiles,
-    render_tile_mosaic,
-)
-from vtshaver_spark.sources.synthetic import SF_TILE
-
-
-def test_encode_decode_roundtrip(spark, features):
-    tiles = encode_tiles(features).collect()
-    assert len(tiles) == 3  # sf tile, housenum tile, fixtures tile
-    by_key = {(r["z"], r["x"], r["y"]): r for r in tiles}
-    sf = by_key[SF_TILE]
-    assert sf["n_features"] == 49
-    records = decode_tile(sf["blob"])
-    assert len(records) == 49
-    layers = {r[0] for r in records}
-    assert layers == {
-        "poi_label", "road", "landuse", "water", "building",
-        "road_label", "housenum_label",
-    }
-    cafe = [r for r in records if r[5].get("maki") == "cafe"]
-    assert len(cafe) == 1 and cafe[0][1] == 101
-
-
-def test_gzip_output(spark, features):
-    tiles = {
-        (r["z"], r["x"], r["y"]): r
-        for r in encode_tiles(features, compress=True).collect()
-    }
-    blob = bytes(tiles[SF_TILE]["blob"])
-    assert blob[:2] == b"\x1f\x8b"
-    assert len(decode_tile(blob)) == 49
-
-
-def test_salted_two_phase_identical(spark, features):
-    plain = {
-        (r["z"], r["x"], r["y"]): bytes(r["blob"])
-        for r in encode_tiles(features).collect()
-    }
-    salted = {
-        (r["z"], r["x"], r["y"]): bytes(r["blob"])
-        for r in encode_tiles(features, salt_partials=4).collect()
-    }
-    assert plain == salted  # canonical ordering makes the merge exact
+from vtshaver_spark.operators.materialize import render_tile_mosaic
 
 
 def test_mosaic_deterministic(spark):

@@ -8,6 +8,7 @@ equality per SURVEY §1.2.
 """
 
 import gzip
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -570,3 +571,62 @@ def test_tile_to_rows_gzip_corruption_is_mvterror():
     ):
         with pytest.raises(MVTError):
             tile_to_rows(blob)
+
+
+def _gzip_bomb() -> bytes:
+    """~65 KB of gzip that inflates to 65 MiB, one MiB past the 64 MiB
+    cap. The leading byte is an invalid protobuf tag (wire type 7), so
+    a decoder without the cap fails fast on the inflated bytes with a
+    different message instead of parsing 65 MiB of zeros."""
+    enc = zlib.compressobj(9, zlib.DEFLATED, 31)
+    parts = [enc.compress(b"\x0f")]
+    zeros = bytes(1 << 20)
+    for _ in range(65):
+        parts.append(enc.compress(zeros))
+    parts.append(enc.flush())
+    return b"".join(parts)
+
+
+def _small_tile() -> bytes:
+    rows = [
+        {
+            "layer": "poi_label",
+            "feature_id": i,
+            "geom_type": "Point",
+            "geometry": bytes([0x09, 2 * i, 2]),  # MoveTo(1) (i, 1)
+            "props": {"maki": "cafe"},
+            "prop_types": {"maki": "string"},
+        }
+        for i in range(1, 4)
+    ]
+    return rows_to_tile(rows)
+
+
+def test_tile_to_rows_gzip_bomb_is_mvterror():
+    bomb = _gzip_bomb()
+    assert len(bomb) < 80_000
+    with pytest.raises(MVTError, match="inflates past"):
+        tile_to_rows(bomb)
+
+
+def test_tile_to_rows_gzip_members_concatenate():
+    # gzip.decompress semantics: every member decodes, zero padding
+    # between members is ignored
+    tile = _small_tile()
+    cut = len(tile) // 2
+    multi = gzip.compress(tile[:cut]) + b"\x00\x00" + gzip.compress(tile[cut:])
+    assert tile_to_rows(multi) == tile_to_rows(tile)
+    assert len(tile_to_rows(tile)) == 3
+
+
+def test_decode_tiles_on_error_skip_drops_gzip_bomb(spark):
+    tiles = spark.createDataFrame(
+        [
+            (16, 1, 1, bytearray(gzip.compress(_small_tile()))),
+            (16, 2, 2, bytearray(_gzip_bomb())),
+        ],
+        "z int, x bigint, y bigint, tile binary",
+    )
+    out = decode_tiles(tiles, on_error="skip")
+    assert out.count() == 3
+    assert {r["x"] for r in out.select("x").collect()} == {1}

@@ -379,19 +379,6 @@ def test_minhash_bands_validated_and_capped_sink(spark):
     assert sorted(rows[0]["docs"]) == list(range(8))
 
 
-def test_srp_probe_masks_all_flip_counts():
-    from vtshaver_spark.operators.ann import srp_probe_masks
-
-    from math import comb
-
-    for n, p in [(8, 3), (6, 4), (4, 6)]:
-        masks = srp_probe_masks(n, p)
-        want = sum(comb(n, k) for k in range(0, min(p, n) + 1))
-        assert len(masks) == want
-        assert len(set(masks)) == want
-        assert all(bin(m).count("1") <= p for m in masks)
-
-
 def test_hamming_block_join_bucket_cap(spark):
     from vtshaver_spark.operators.dedup import hamming_block_join
 

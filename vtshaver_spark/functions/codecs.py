@@ -109,7 +109,7 @@ def synth_gradient_image(seed: int, w: int, h: int) -> np.ndarray:
     oracle-replayable sibling of :func:`synth_image` (whose crc32 seed
     has no SQL twin). Every channel is integer arithmetic on
     (x, y, seed), so a closed-form SQL expression can reproduce any
-    pixel — and hence the average-hash — exactly (the phash_near_dups
+    pixel — and hence the average-hash — exactly (the video_frame_phash
     oracle does)."""
     yy, xx = np.mgrid[0:h, 0:w]
     base = (xx * 255 // max(w - 1, 1)).astype(np.uint8)

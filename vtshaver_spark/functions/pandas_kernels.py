@@ -5,7 +5,6 @@ pandas_udf resolves the type hints at definition time, and PEP-563
 stringified hints break its signature inspection.
 """
 
-import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
@@ -27,14 +26,3 @@ def make_tile_encoder(compress: bool, level=None):
         )
 
     return _encode
-
-
-@pandas_udf("double")
-def cosine_pairs_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine between two array<double> columns (per Arrow
-    batch: one einsum + two norms, no per-row Python)."""
-    ma = np.array(list(a), dtype=np.float64)
-    mb = np.array(list(b), dtype=np.float64)
-    num = np.einsum("ij,ij->i", ma, mb)
-    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    return pd.Series(num / den)

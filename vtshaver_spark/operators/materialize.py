@@ -1,221 +1,19 @@
-"""Tile materialization: feature rows -> per-tile blobs (O19/G5).
+"""Raster tile materialization (O19/G5).
 
-The row model is the engine's working representation; blobs exist only
-at the sink edge (same discipline as the reference, which re-encodes
-the protobuf only after all filtering — /root/reference/src/
-shave.cpp:289-297). Two sinks:
-
- - ``encode_tiles``: serialize each (z,x,y) group's features into one
-   deterministic binary blob (VTB1 format below), optionally gzipped.
-   **Skew handling (G6)**: hot tiles (cities) can exceed a single
-   task's memory in ``applyInPandas`` — grouped-map kernels are not
-   AQE-splittable — so ``salt_partials=N`` switches to a two-phase
-   encode: phase 1 groups by (z,x,y,salt) and emits partial blobs,
-   phase 2 merges the ≤N small partials per tile. Output is verified
-   identical to the unsalted path (partials merge by re-sorting
-   feature records, and encoding is order-canonical).
- - ``render_tile_mosaic``: raster materialization — stamps each
-   feature's image thumbnail into a fixed-size RGB tile canvas (RAWI
-   bytes), deterministic placement from in-tile position.
-
-Blob format VTB1 (little-endian):
-  magic 'VTB1' | u32 n_features | per feature:
-  u8 has_id | i64 id | u8 geom_code | f64 lon | f64 lat |
-  u16 layer_len | layer utf8 | u16 n_props | per prop:
-  u16 klen | key | u32 vlen | value
-Features are sorted by (layer, feature_id, lon, lat) — canonical,
-so encode(decode(b)) == b and partial merges are associative.
+``render_tile_mosaic`` stamps each feature's image thumbnail into a
+fixed-size RGB tile canvas (RAWI bytes), with deterministic placement
+from the feature's in-tile position. Vector tiles have one encoder,
+``sources.mvt.encode_tiles_mvt``.
 """
 
 from __future__ import annotations
 
-import gzip as _gzip
-import struct
-from typing import Iterator, Optional
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vtshaver_spark.functions.codecs import rawi_encode, synth_image
-
-VTB_MAGIC = b"VTB1"
-_GEOM_CODE = {"Point": 1, "LineString": 2, "Polygon": 3, "Unknown": 0}
-_GEOM_NAME = {v: k for k, v in _GEOM_CODE.items()}
-
-TILE_SCHEMA = T.StructType(
-    [
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.LongType(), False),
-        T.StructField("y", T.LongType(), False),
-        T.StructField("n_features", T.IntegerType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-    ]
-)
-
-
-def _pack_feature(rec: tuple) -> bytes:
-    layer, fid, geom, lon, lat, props = rec
-    out = [
-        struct.pack(
-            "<Bq B dd",
-            0 if fid is None else 1,
-            -1 if fid is None else int(fid),
-            _GEOM_CODE.get(geom, 0),
-            0.0 if lon is None else float(lon),
-            0.0 if lat is None else float(lat),
-        )
-    ]
-    lb = layer.encode()
-    out.append(struct.pack("<H", len(lb)))
-    out.append(lb)
-    items = sorted((props or {}).items())
-    out.append(struct.pack("<H", len(items)))
-    for k, v in items:
-        kb, vb = k.encode(), v.encode()
-        out.append(struct.pack("<H", len(kb)))
-        out.append(kb)
-        out.append(struct.pack("<I", len(vb)))
-        out.append(vb)
-    return b"".join(out)
-
-
-def _sort_key(rec: tuple):
-    layer, fid, geom, lon, lat, _ = rec
-    return (layer, fid if fid is not None else -1, lon or 0.0, lat or 0.0)
-
-
-def _encode_records(records: list, compress: bool, level=None) -> bytes:
-    records = sorted(records, key=_sort_key)
-    blob = VTB_MAGIC + struct.pack("<I", len(records)) + b"".join(
-        _pack_feature(r) for r in records
-    )
-    if compress:
-        return _gzip.compress(
-            blob, compresslevel=9 if level is None else level, mtime=0
-        )
-    return blob
-
-
-def decode_tile(blob: bytes) -> list:
-    """Inverse of the encoder (for round-trip tests and consumers)."""
-    blob = bytes(blob)
-    if blob[:2] == b"\x1f\x8b":
-        blob = _gzip.decompress(blob)
-    assert blob[:4] == VTB_MAGIC
-    (n,) = struct.unpack_from("<I", blob, 4)
-    off = 8
-    out = []
-    for _ in range(n):
-        has_id, fid, geom, lon, lat = struct.unpack_from("<Bq B dd", blob, off)
-        off += struct.calcsize("<Bq B dd")
-        (llen,) = struct.unpack_from("<H", blob, off)
-        off += 2
-        layer = blob[off : off + llen].decode()
-        off += llen
-        (np_,) = struct.unpack_from("<H", blob, off)
-        off += 2
-        props = {}
-        for _ in range(np_):
-            (klen,) = struct.unpack_from("<H", blob, off)
-            off += 2
-            k = blob[off : off + klen].decode()
-            off += klen
-            (vlen,) = struct.unpack_from("<I", blob, off)
-            off += 4
-            props[k] = blob[off : off + vlen].decode()
-            off += vlen
-        out.append(
-            (layer, None if not has_id else fid, _GEOM_NAME[geom], lon, lat, props)
-        )
-    return out
-
-
-def _records_from_pdf(pdf: pd.DataFrame) -> list:
-    return [
-        (
-            row.layer,
-            None if pd.isna(row.feature_id) else int(row.feature_id),
-            row.geom_type,
-            None if pd.isna(row.lon) else float(row.lon),
-            None if pd.isna(row.lat) else float(row.lat),
-            dict(row.props) if row.props is not None else {},
-        )
-        for row in pdf.itertuples()
-    ]
-
-
-def encode_tiles(
-    df: DataFrame,
-    compress: bool = False,
-    salt_partials: Optional[int] = None,
-) -> DataFrame:
-    """features (z,x,y,layer,feature_id,geom_type,lon,lat,props) ->
-    one VTB1 blob row per tile. ``compress`` accepts the validated
-    ``{type: none|gzip}`` contract (src/shave.cpp:412-446) or a bool."""
-    from vtshaver_spark.errors import compress_level, validate_compress
-
-    level = compress_level(compress)
-    compress = validate_compress(compress)
-    cols = ["z", "x", "y", "layer", "feature_id", "geom_type", "lon", "lat", "props"]
-    slim = df.select(*cols)
-
-    if not salt_partials:
-        def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            z, x, y = key
-            blob = _encode_records(_records_from_pdf(pdf), compress, level)
-            return pd.DataFrame(
-                {
-                    "z": [z], "x": [x], "y": [y],
-                    "n_features": [len(pdf)], "blob": [blob],
-                }
-            )
-
-        return slim.groupBy("z", "x", "y").applyInPandas(encode, TILE_SCHEMA)
-
-    # two-phase: salted partial encode, then small merge per tile
-    n_salt = int(salt_partials)
-    salted = slim.withColumn(
-        "_salt", F.pmod(F.xxhash64("layer", "feature_id", "lon"), F.lit(n_salt))
-    )
-
-    partial_schema = T.StructType(
-        [
-            T.StructField("z", T.IntegerType(), False),
-            T.StructField("x", T.LongType(), False),
-            T.StructField("y", T.LongType(), False),
-            T.StructField("n_features", T.IntegerType(), False),
-            T.StructField("blob", T.BinaryType(), False),
-        ]
-    )
-
-    def encode_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y, _salt = key
-        blob = _encode_records(_records_from_pdf(pdf), compress=False)
-        return pd.DataFrame(
-            {"z": [z], "x": [x], "y": [y], "n_features": [len(pdf)], "blob": [blob]}
-        )
-
-    partials = salted.groupBy("z", "x", "y", "_salt").applyInPandas(
-        encode_partial, partial_schema
-    )
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = key
-        records = []
-        for blob in pdf["blob"]:
-            records.extend(decode_tile(blob))
-        blob = _encode_records(records, compress, level)
-        return pd.DataFrame(
-            {
-                "z": [z], "x": [x], "y": [y],
-                "n_features": [int(pdf["n_features"].sum())], "blob": [blob],
-            }
-        )
-
-    return partials.groupBy("z", "x", "y").applyInPandas(merge, TILE_SCHEMA)
 
 
 def render_tile_mosaic(

@@ -1,12 +1,7 @@
 """Sessionization: gap-based event sessions (batch).
 
-The batch counterpart of ``streaming.stateful.stream_sessionize``:
-classic lag + cumulative-sum session assignment, entirely in window
-functions (whole-stage codegen, one shuffle on the user key). At
-10^12 rows the per-user window is the right shape: AQE splits skewed
-users only if the key is salted first — hot "users" (bots) should be
-pre-split with plans.partitioning.salt when their event counts are
-pathological.
+Classic lag + cumulative-sum session assignment, entirely in window
+functions (whole-stage codegen, one shuffle on the user key).
 """
 
 from __future__ import annotations
@@ -53,7 +48,7 @@ def session_rollup(
     value_col: str = "value",
 ) -> DataFrame:
     """Per-session aggregates: start/end, event count, value sum
-    (``value_col``, matching stream_sessionize's parameter)."""
+    (``value_col``)."""
     s = sessionize(df, user_col, ts_col, gap_minutes)
     return s.groupBy(user_col, "session_idx").agg(
         F.min(ts_col).alias("session_start"),

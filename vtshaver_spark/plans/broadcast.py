@@ -1,7 +1,7 @@
 """Shipping driver-collected kernel operands to executors.
 
-Dimension-sized matrices (landmark tables, query sets, hyperplanes,
-centroids) ride into Arrow kernels either way; the QUESTION is the
+Dimension-sized matrices (the kNN landmark table) ride into Arrow
+kernels either way; the QUESTION is the
 transport. Task-closure capture serializes the payload into every
 task's launch message — fine for a few hundred KB, pathological past a
 few MB (N_tasks copies through the driver's RPC path). Torrent

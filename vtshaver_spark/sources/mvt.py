@@ -246,6 +246,36 @@ def is_gzipped(buf: bytes) -> bool:
     return len(buf) >= 2 and buf[0] == 0x1F and buf[1] == 0x8B
 
 
+# Largest inflated size ``tile_to_rows`` accepts from a gzip blob. Real
+# tiles inflate to well under 1 MiB; the cap bounds a gzip bomb's
+# memory at a fixed size instead of its compression ratio.
+MAX_INFLATED_BYTES = 64 << 20
+
+
+def _gunzip(buf: bytes) -> bytes:
+    """``gzip.decompress`` with the inflated size capped at
+    ``MAX_INFLATED_BYTES``. Decodes concatenated members and ignores
+    zero padding between them, as ``gzip.decompress`` does."""
+    out: list[bytes] = []
+    total = 0
+    data = buf
+    while data:
+        d = zlib.decompressobj(31)  # 16 + MAX_WBITS: gzip header + trailer
+        # max_length=0 means "unbounded" to zlib: ask for one byte past
+        # the remaining budget so the overflow is observable
+        chunk = d.decompress(data, MAX_INFLATED_BYTES - total + 1)
+        total += len(chunk)
+        if total > MAX_INFLATED_BYTES:
+            raise MVTError(
+                f"gzip tile inflates past {MAX_INFLATED_BYTES} bytes"
+            )
+        if not d.eof:
+            raise MVTError("corrupt gzip tile: truncated stream")
+        out.append(chunk)
+        data = d.unused_data.lstrip(b"\x00")
+    return b"".join(out)
+
+
 def tile_to_rows(buf: bytes) -> list[dict]:
     """Decode an MVT blob (gzip tolerated) into one dict per feature.
 
@@ -260,8 +290,8 @@ def tile_to_rows(buf: bytes) -> list[dict]:
         # contract and decode_tiles(on_error='skip') share ONE
         # exception type (ADVICE r2)
         try:
-            buf = gzip.decompress(buf)
-        except (OSError, EOFError, zlib.error) as exc:
+            buf = _gunzip(buf)
+        except zlib.error as exc:
             raise MVTError(f"corrupt gzip tile: {exc}") from exc
     rows: list[dict] = []
     try:
@@ -586,58 +616,28 @@ def decode_tiles(
     return df.select(*carry, tile_col).mapInArrow(kernel, schema=schema)
 
 
-def encode_tiles_mvt(
-    df,
-    compress=False,
-    tile_cols: tuple = ("z", "x", "y"),
-    strategy: str = "agg",
-):
+def encode_tiles_mvt(df, compress=False, tile_cols: tuple = ("z", "x", "y")):
     """Group feature rows into MVT blobs per tile. ``compress`` takes
     the reference's validated ``{type: none|gzip}`` contract or a bool.
 
-    ``strategy="agg"`` (default): ``collect_list(struct)`` per tile +
-    a scalar Arrow-batched pandas UDF encoding MANY tiles per batch —
-    per-tile cost is one python loop iteration. ``"grouped"`` uses
-    ``applyInPandas`` per (z,x,y); its per-group pandas machinery costs
-    ~ms per tile, which dominates for web-scale tile counts (tiles are
-    ~50 features). Pair with
-    ``vtshaver_spark.plans.partitioning.repartition_for_tiles`` before
-    wide writes at scale."""
-    import pandas as pd
+    ``collect_list(struct)`` per tile feeds a scalar Arrow-batched
+    pandas UDF that encodes MANY tiles per batch, so per-tile cost is
+    one python loop iteration (a grouped ``applyInPandas`` pays ~ms of
+    per-group pandas machinery per ~50-feature tile)."""
+    from pyspark.sql import functions as F
 
     from vtshaver_spark.errors import compress_level, validate_compress
+    from vtshaver_spark.functions.pandas_kernels import make_tile_encoder
 
     level = compress_level(compress)
     compress = validate_compress(compress)
     tile_cols = list(tile_cols)
-
-    if strategy == "agg":
-        from pyspark.sql import functions as F
-
-        from vtshaver_spark.functions.pandas_kernels import make_tile_encoder
-
-        data_cols = [c for c in df.columns if c not in tile_cols]
-        grouped = df.groupBy(*tile_cols).agg(
-            F.collect_list(F.struct(*data_cols)).alias("_rows")
-        )
-        enc_udf = make_tile_encoder(compress, level)
-        return grouped.select(*tile_cols, enc_udf(F.col("_rows")).alias("tile"))
-
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in tile_cols
+    data_cols = [c for c in df.columns if c not in tile_cols]
+    grouped = df.groupBy(*tile_cols).agg(
+        F.collect_list(F.struct(*data_cols)).alias("_rows")
     )
-    schema = key_schema + ", tile binary"
-
-    def enc(key, pdf):
-        rows = pdf.to_dict("records")
-        blob = rows_to_tile(rows, compress=compress, level=level)
-        rec = dict(zip(tile_cols, key))
-        rec["tile"] = blob
-        return pd.DataFrame([rec])
-
-    return df.groupBy(*tile_cols).applyInPandas(enc, schema=schema)
+    enc_udf = make_tile_encoder(compress, level)
+    return grouped.select(*tile_cols, enc_udf(F.col("_rows")).alias("tile"))
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 BASE_TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events",
 )
 
 IMAGES_SQL = """
@@ -154,33 +154,11 @@ JOIN nation n
                           ELSE 4 END
 """
 
-# Variant-pair image corpus for phash near-dup detection: two rows per
-# sampled order key — variant 'a' (seeded gradient image, dims derived
-# from k) and variant 'b' (its channel-rolled 2x nearest upscale,
-# generated by an actual image transform in
-# operators/multimodal.py:generate_variant_images and provably
-# phash-identical to 'a'). Every column the phash depends on (seed, w,
-# h) is integer arithmetic on k, so the oracle can replay the 8x8
-# average-hash closed-form in SQL.
-VARIANT_IMAGES_SQL = """
-SELECT
-  o_orderkey AS k,
-  CONCAT('img_', LPAD(CAST(o_orderkey AS STRING), 8, '0'), '_', v.variant)
-    AS image_id,
-  v.variant,
-  16 + o_orderkey % 17 AS w,
-  16 + (o_orderkey * 7) % 13 AS h,
-  (o_orderkey * 48271) % 251 AS seed
-FROM orders
-CROSS JOIN (SELECT 'a' AS variant UNION ALL SELECT 'b' AS variant) v
-WHERE o_orderkey % 41 = 0
-"""
-
 # Video corpus for the frame-sampling pipeline: a "video" is a RAWI
 # frame concatenation (operators/multimodal.py:generate_video_bytes);
 # frame i's pixels are the integer closed-form gradient image at seed
 # + i*997, so the oracle can replay any sampled frame's average-hash
-# in SQL (same machinery as the phash_near_dups oracle).
+# in SQL.
 VIDEOS_SQL = """
 SELECT
   o_orderkey AS k,
@@ -233,7 +211,6 @@ DERIVED_VIEWS = {
     # in Spark registration order and in with_cte CTE order)
     "vertices_v": VERTICES_SQL,
     "polygons_v": POLYGONS_SQL,
-    "variant_images_v": VARIANT_IMAGES_SQL,
     "audio_clips_v": AUDIO_CLIPS_SQL,
     "videos_v": VIDEOS_SQL,
 }
