@@ -3,6 +3,7 @@ codes, --sources subsetting incl. missing-source error) plus the
 compress option-validation contract (src/shave.cpp:412-446)."""
 
 import json
+from collections import Counter
 
 import pytest
 
@@ -142,3 +143,69 @@ def test_shave_cli_with_vertices(spark, tmp_path, capsys):
     assert report["features_before"] == 2 and report["features_after"] == 1
     kept = {r["feature_id"] for r in spark.read.parquet(out + "/shaved").collect()}
     assert kept == {3}
+
+
+def test_shave_tile_cli_matches_shave(spark, style_file, tmp_path, capsys):
+    """shave-tile on an in-repo multi-layer tile: the written tile
+    decodes to exactly what ``shave`` keeps of the same rows, and the
+    report counts features before and after."""
+    from vtshaver_spark import Filters, style_to_filters
+    from vtshaver_spark.operators.shave import shave
+    from vtshaver_spark.sources.mvt import (
+        MVT_ROW_FIELDS,
+        MVT_ROW_SCHEMA,
+        rows_to_tile,
+        tile_to_rows,
+    )
+
+    point = bytes([0x09, 2, 2])
+    line = bytes([0x09, 0, 0, 0x0A, 4, 4])
+    square = bytes([0x09, 0, 0, 0x1A, 4, 0, 0, 4, 3, 0, 0x0F])
+
+    def feat(layer, fid, geom_type, geometry, props):
+        return {
+            "layer": layer, "feature_id": fid, "geom_type": geom_type,
+            "geometry": geometry, "props": props,
+            "prop_types": {k: "string" for k in props},
+        }
+
+    tile = rows_to_tile([
+        feat("poi_label", 1, "Point", point, {"maki": "cafe", "name": "A"}),
+        feat("poi_label", 2, "Point", point, {"maki": "bar", "name": "B"}),
+        feat("poi_label", None, "Point", point, {"maki": "cafe"}),
+        feat("water", 10, "Polygon", square, {"class": "lake"}),
+        feat("water", 2**64 - 1, "Polygon", square, {}),
+        feat("road", 20, "LineString", line, {"class": "street"}),
+    ])
+    tile_path = tmp_path / "in.mvt"
+    tile_path.write_bytes(tile)
+    out_file = tmp_path / "out.mvt"
+    rc = main([
+        "shave-tile", "--tile", str(tile_path), "--style", style_file,
+        "--zoom", "16", "--out", str(out_file),
+    ])
+    assert rc == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["features_before"] == 6
+    assert report["features_after"] == 4
+    assert report["bytes_after"] == out_file.stat().st_size
+
+    def key(r):
+        return (
+            r["layer"], r["layer_version"], r["layer_extent"], r["feature_id"],
+            r["geom_type"], bytes(r["geometry"]),
+            tuple(sorted((k, v, r["prop_types"][k]) for k, v in r["props"].items())),
+        )
+
+    with open(style_file) as f:
+        filters = Filters(style_to_filters(json.load(f)))
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in MVT_ROW_FIELDS) for r in tile_to_rows(tile)],
+        MVT_ROW_SCHEMA,
+    )
+    expected = Counter(key(r) for r in shave(df, filters, zoom=16).collect())
+    got = Counter(key(r) for r in tile_to_rows(out_file.read_bytes()))
+    assert got == expected
+    assert {(k[0], k[3]) for k in got} == {
+        ("poi_label", 1), ("poi_label", None), ("water", 10), ("water", -1)
+    }

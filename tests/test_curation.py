@@ -1,170 +1,6 @@
-"""Contamination check + stratified sampling (operators/contamination.py,
-operators/sampling.py)."""
+"""Session rollup (operators/sessions.py)."""
 
-import pytest
 from pyspark.sql import functions as F
-
-from vtshaver_spark.operators.contamination import (
-    contamination_report,
-    decontaminate,
-)
-from vtshaver_spark.operators.sampling import sample_by_rate, sample_quota
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_contamination_report_fractions(spark):
-    train = _docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "pack my box with five dozen liquor jugs"),
-    ])
-    ev = _docs(spark, [
-        # identical to train doc 1 -> fully contaminated
-        (10, "the quick brown fox jumps over the lazy dog"),
-        # shares zero 3-grams with train
-        (11, "completely novel evaluation sentence nothing shared here"),
-        # first 5 tokens of train doc 2 -> 3 of its 4 shingles leak
-        (12, "pack my box with five shiny things"),
-        # too short for a 3-gram
-        (13, "hi there"),
-    ])
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in contamination_report(train, ev, threshold=0.5).collect()
-    }
-    assert set(got) == {10, 11, 12, 13}
-
-    r10 = got[10]
-    assert r10["n_shingles"] == 7  # 9 tokens -> 7 3-grams
-    assert r10["n_contaminated"] == 7
-    assert r10["contamination"] == 1.0 and r10["is_contaminated"]
-
-    r11 = got[11]
-    assert r11["n_contaminated"] == 0
-    assert r11["contamination"] == 0.0 and not r11["is_contaminated"]
-
-    r12 = got[12]
-    # shingles: "pack my box", "my box with", "box with five" leak;
-    # "with five shiny", "five shiny things" don't
-    assert r12["n_shingles"] == 5 and r12["n_contaminated"] == 3
-    assert r12["is_contaminated"]  # 0.6 >= 0.5
-
-    r13 = got[13]
-    assert r13["n_shingles"] == 0 and r13["contamination"] == 0.0
-    assert not r13["is_contaminated"]
-
-
-def test_contamination_portable_matches_fast(spark):
-    # hash mode changes join keys, never results
-    train = _docs(spark, [(1, "alpha beta gamma delta epsilon")])
-    ev = _docs(spark, [(9, "beta gamma delta zeta"), (8, "unrelated words only")])
-    a = sorted(contamination_report(train, ev, hash_mode="fast").collect())
-    b = sorted(contamination_report(train, ev, hash_mode="portable").collect())
-    assert a == b
-
-
-def test_decontaminate_drops_leaky_train_docs(spark):
-    train = _docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "pack my box with five dozen liquor jugs"),
-        (3, "an entirely innocent training document about spark plans"),
-    ])
-    ev = _docs(spark, [(10, "the quick brown fox jumps over the lazy dog")])
-    kept = sorted(
-        r["doc_id"] for r in decontaminate(train, ev, threshold=0.5).collect()
-    )
-    assert kept == [2, 3]
-
-
-@pytest.mark.parametrize("hash_mode", ["fast", "portable"])
-def test_sample_by_rate_determinism_and_bounds(spark, hash_mode):
-    rows = [(i, "en" if i % 2 == 0 else "de") for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = sample_by_rate(
-        df, {"en": 0.5, "de": 1.0}, group_col="lang", id_col="doc_id",
-        hash_mode=hash_mode,
-    )
-    got = {(r["doc_id"], r["lang"]) for r in out.collect()}
-    # rate 1.0 keeps everything
-    assert sum(1 for _, l in got if l == "de") == 200
-    # rate 0.5 keeps a uniform-ish fraction (binomial 200@0.5: wide gate)
-    n_en = sum(1 for _, l in got if l == "en")
-    assert 60 <= n_en <= 140
-    # deterministic: identical second run
-    got2 = {(r["doc_id"], r["lang"]) for r in out.collect()}
-    assert got == got2
-    # salt decorrelates
-    other = {
-        (r["doc_id"], r["lang"])
-        for r in sample_by_rate(
-            df, {"en": 0.5, "de": 1.0}, group_col="lang",
-            id_col="doc_id", salt="mix2", hash_mode=hash_mode,
-        ).collect()
-    }
-    assert other != got
-
-
-def test_sample_by_rate_default_rate_zero_drops_unlisted(spark):
-    df = spark.createDataFrame(
-        [(1, "en"), (2, "fr")], "doc_id long, lang string"
-    )
-    out = sample_by_rate(df, {"en": 1.0}, group_col="lang", id_col="doc_id")
-    assert [r["lang"] for r in out.collect()] == ["en"]
-
-
-def test_sample_by_rate_validates_rates(spark):
-    df = spark.createDataFrame([(1, "en")], "doc_id long, lang string")
-    with pytest.raises(ValueError):
-        sample_by_rate(df, {"en": 1.5}, group_col="lang", id_col="doc_id")
-    with pytest.raises(ValueError):
-        sample_by_rate(df, {}, default_rate=-0.1, group_col="lang",
-                       id_col="doc_id")
-
-
-def test_sample_quota_exact_counts(spark):
-    rows = [(i, ["en", "de", "fr"][i % 3]) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = sample_quota(
-        df, {"en": 10, "de": 100, "fr": 0}, group_col="lang", id_col="doc_id"
-    )
-    counts = {
-        r["lang"]: r["count"]
-        for r in out.groupBy("lang").count().collect()
-    }
-    assert counts == {"en": 10, "de": 100}
-    # quota above group size keeps the whole group
-    out2 = sample_quota(df, {"fr": 500}, group_col="lang", id_col="doc_id")
-    assert out2.count() == 100
-    # deterministic membership
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(
-        r["doc_id"]
-        for r in sample_quota(
-            df, {"en": 10, "de": 100, "fr": 0},
-            group_col="lang", id_col="doc_id",
-        ).collect()
-    )
-    assert a == b
-
-
-def test_sample_quota_plan_has_window_group_limit(spark):
-    """Scale contract: the literal max-quota conjunct is what lets
-    InferWindowGroupLimit insert the map-side partial top-N (the rule
-    only fires on rank <= IntegerLiteral — the CASE quota expression
-    alone would sort whole groups on single tasks)."""
-    from vtshaver_spark.operators.sampling import sample_quota
-
-    df = spark.createDataFrame(
-        [(i, "en" if i % 2 else "de") for i in range(40)],
-        "doc_id long, lang string",
-    )
-    out = sample_quota(df, {"en": 3, "de": 5})
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
-    got = out.groupBy("lang").count().collect()
-    assert {r["lang"]: r["count"] for r in got} == {"en": 3, "de": 5}
 
 
 def test_session_rollup_value_col_param(spark):

@@ -23,7 +23,6 @@ from vtshaver_spark.operators.multimodal import (
     generate_image_bytes,
     generate_variant_images,
     phash_fingerprints,
-    phash_near_dups,
     resize_images,
     verify_roundtrip_psnr,
 )
@@ -164,7 +163,7 @@ def test_pil_stub_flag():
 
 
 # ---------------------------------------------------------------------------
-# phash near-dups (variant-pair corpus)
+# phash fingerprints (variant-pair corpus)
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -201,44 +200,3 @@ def test_variant_phash_identity(variant_corpus):
     }
     for k in range(1, 30):
         assert fps[f"img_{k:08d}_a"] == fps[f"img_{k:08d}_b"], k
-
-
-def test_phash_near_dups_equals_brute_force(variant_corpus):
-    # pigeonhole recall is exact for blocks > max_hamming: operator
-    # output must equal the all-pairs scan, at both (4,3) and (8,6)
-    fps = {
-        r["image_id"]: r["phash"]
-        for r in phash_fingerprints(variant_corpus).collect()
-    }
-
-    def brute(max_h):
-        out = set()
-        ids = sorted(fps)
-        for i, a in enumerate(ids):
-            for b in ids[i + 1:]:
-                d = bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1")
-                if d <= max_h:
-                    out.add((a, b, d))
-        return out
-
-    for max_h, blocks in ((3, 4), (6, 8)):
-        got = {
-            (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in phash_near_dups(
-                variant_corpus, max_hamming=max_h, blocks=blocks
-            ).collect()
-        }
-        assert got == brute(max_h), (max_h, blocks)
-        # every planted (a, b) pair surfaces at Hamming 0
-        for k in range(1, 30):
-            assert (f"img_{k:08d}_a", f"img_{k:08d}_b", 0) in got
-
-
-def test_hamming_block_join_validates_args(variant_corpus):
-    from vtshaver_spark.operators.dedup import hamming_block_join
-
-    fps = phash_fingerprints(variant_corpus)
-    with pytest.raises(ValueError, match="blocks > max_hamming"):
-        hamming_block_join(fps, "image_id", "phash", max_hamming=4, blocks=4)
-    with pytest.raises(ValueError, match="must divide"):
-        hamming_block_join(fps, "image_id", "phash", max_hamming=3, blocks=7)

@@ -630,3 +630,30 @@ def test_decode_tiles_on_error_skip_drops_gzip_bomb(spark):
     out = decode_tiles(tiles, on_error="skip")
     assert out.count() == 3
     assert {r["x"] for r in out.select("x").collect()} == {1}
+
+
+def test_uint64_feature_id_roundtrips_through_spark(spark):
+    # MVT ids are uint64; the bigint column holds 2^64-1 as -1 and the
+    # encoder writes the same ten-byte varint back
+    rows = [
+        {
+            "layer": "poi_label",
+            "feature_id": fid,
+            "geom_type": "Point",
+            "geometry": bytes([0x09, 2, 2]),
+            "props": {"maki": "cafe"},
+            "prop_types": {"maki": "string"},
+        }
+        for fid in (7, 2**64 - 1)
+    ]
+    tile = rows_to_tile(rows)
+    id_varint = b"\x08" + b"\xff" * 9 + b"\x01"
+    assert id_varint in tile
+    tiles = spark.createDataFrame(
+        [(16, 1, 1, bytearray(tile))], "z int, x bigint, y bigint, tile binary"
+    )
+    decoded = decode_tiles(tiles)
+    assert sorted(r["feature_id"] for r in decoded.collect()) == [-1, 7]
+    out = bytes(encode_tiles_mvt(decoded).collect()[0]["tile"])
+    assert id_varint in out
+    assert sorted(r["feature_id"] for r in tile_to_rows(out)) == [-1, 7]

@@ -6,8 +6,7 @@ Mapbox-GL style compilation -> Spark Column predicates, per-tile shaving
 (layer semi-join, zoom gating, feature filtering, property projection),
 plus web-scale additions: H3/S2-style cell indexing, point-in-polygon,
 kNN joins, full-geometry ``within``, MVT decode/encode and raster tile
-materialization, and the text dedup / contamination / sampling
-operators.
+materialization.
 
 Everything is DataFrame-first: predicates compile to Catalyst expressions
 (whole-stage codegen), joins broadcast small sides, and Python only runs

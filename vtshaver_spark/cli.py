@@ -66,7 +66,9 @@ def cmd_shave(args) -> int:
     )
     shaved.write.mode("overwrite").parquet(f"{args.output}/shaved")
     metrics.write.mode("overwrite").parquet(f"{args.output}/metrics")
-    summary = metrics.agg(
+    # aggregate the ~1 row per tile just written, not the lazy metrics
+    # plan (that would re-run the per-tile groupBy over the full input)
+    summary = spark.read.parquet(f"{args.output}/metrics").agg(
         F.sum("features_before").alias("features_before"),
         F.sum("features_after").alias("features_after"),
         F.sum("prop_bytes_before").alias("prop_bytes_before"),
@@ -97,7 +99,12 @@ def cmd_shave_tile(args) -> int:
     from vtshaver_spark.errors import ShaveError, validate_compress
     from vtshaver_spark.operators.shave import shave
     from vtshaver_spark.session import build_session
-    from vtshaver_spark.sources.mvt import rows_to_tile, tile_to_rows
+    from vtshaver_spark.sources.mvt import (
+        MVT_ROW_FIELDS,
+        MVT_ROW_SCHEMA,
+        rows_to_tile,
+        tile_to_rows,
+    )
     from vtshaver_spark.style.compile import style_to_filters
     from vtshaver_spark.style.filters import Filters
 
@@ -126,34 +133,10 @@ def cmd_shave_tile(args) -> int:
     )
     try:
         df = spark.createDataFrame(
-            [
-                (
-                    r["layer"],
-                    r["layer_version"],
-                    r["layer_extent"],
-                    r["feature_id"],
-                    r["geom_type"],
-                    bytearray(r["geometry"]),
-                    r["props"],
-                    r["prop_types"],
-                )
-                for r in rows
-            ],
-            "layer string, layer_version int, layer_extent int, "
-            "feature_id bigint, geom_type string, geometry binary, "
-            "props map<string,string>, prop_types map<string,string>",
+            [tuple(r[c] for c in MVT_ROW_FIELDS) for r in rows], MVT_ROW_SCHEMA
         )
         survivors = [
-            {
-                "layer": r["layer"],
-                "layer_version": r["layer_version"],
-                "layer_extent": r["layer_extent"],
-                "feature_id": r["feature_id"],
-                "geom_type": r["geom_type"],
-                "geometry": bytes(r["geometry"]) if r["geometry"] is not None else b"",
-                "props": r["props"],
-                "prop_types": r["prop_types"],
-            }
+            r.asDict()
             for r in shave(
                 df, filters, zoom=args.zoom, maxzoom=args.maxzoom
             ).collect()

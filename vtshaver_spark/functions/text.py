@@ -1,9 +1,4 @@
-"""Text-analysis Columns for training-data pipelines (all JVM-side).
-
-Token counting, quality scoring, language-ID heuristics, and document
-fingerprinting as pure Column expressions — whole-stage codegen, no
-Python in the row path.
-"""
+"""Token counting as a pure Column expression (JVM-side, codegen'd)."""
 
 from __future__ import annotations
 
@@ -11,14 +6,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TOKEN_PATTERN = "[A-Za-z0-9]+"
-
-# Tiny built-in stopword inventories for the n-gram language heuristic.
-_STOPWORDS = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "with"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "auf"],
-    "fr": ["le", "la", "les", "et", "est", "une", "dans", "pour", "que"],
-    "es": ["el", "la", "los", "y", "es", "una", "en", "por", "con", "para"],
-}
 
 
 def tokens(col: Column) -> Column:
@@ -28,126 +15,3 @@ def tokens(col: Column) -> Column:
 
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-flavored subword proxy: alnum runs split every 4 chars plus
-    standalone punctuation marks — a deterministic stand-in for a real
-    tokenizer's token count (stubbed: real BPE needs a vocab file).
-
-    Pure regex, fully codegen'd: a greedy ``[A-Za-z0-9]{1,4}`` match
-    consumes each maximal alnum run 4 chars at a time (remainder makes
-    one final short match), so its match COUNT equals
-    sum(ceil(run_len/4)) — no per-element ``aggregate`` fold (the
-    interpreted-lambda pathology measured 2-6x slower)."""
-    subwords = F.regexp_count(col, F.lit("[A-Za-z0-9]{1,4}")).cast("int")
-    punct = F.regexp_count(col, F.lit(r"[^\sA-Za-z0-9]")).cast("int")
-    return subwords + punct
-
-
-def alpha_ratio(col: Column, n_chars: Column) -> Column:
-    alpha = F.length(F.regexp_replace(col, "[^A-Za-z]", ""))
-    return F.when(n_chars > 0, alpha.cast("double") / n_chars).otherwise(F.lit(0.0))
-
-
-def punct_ratio(col: Column, n_chars: Column) -> Column:
-    punct = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
-    return F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    words = _STOPWORDS[lang]
-    toks = tokens(col)
-    hits = F.size(
-        F.filter(toks, lambda t: t.isin(*[F.lit(w) for w in words]))
-    )
-    n = F.size(toks)
-    return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column, n_chars: Column) -> Column:
-    """Composite [0,1] quality heuristic: enough length, alphabetic
-    density, sane punctuation, some stopwords (English prior)."""
-    length_term = F.least(n_chars.cast("double") / F.lit(500.0), F.lit(1.0))
-    alpha_term = alpha_ratio(col, n_chars)
-    punct_term = F.lit(1.0) - F.least(
-        punct_ratio(col, n_chars) * F.lit(4.0), F.lit(1.0)
-    )
-    stop_term = F.least(stopword_ratio(col) * F.lit(4.0), F.lit(1.0))
-    return (
-        length_term * F.lit(0.25)
-        + alpha_term * F.lit(0.35)
-        + punct_term * F.lit(0.2)
-        + stop_term * F.lit(0.2)
-    )
-
-
-def lang_guess(col: Column) -> Column:
-    """Stopword-vote language ID over the built-in inventories.
-
-    Returns the language with the most stopword hits, 'und' when no
-    language scores. Pure Column expression: one score per language,
-    combined with greatest/when — no UDF."""
-    toks = tokens(col)
-    scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*[F.lit(w) for w in words])))
-        for lang, words in _STOPWORDS.items()
-    }
-    best = F.greatest(*scores.values())
-    out = F.lit("und")
-    # iterate in fixed order so ties resolve deterministically
-    for lang in sorted(_STOPWORDS):
-        out = F.when((best > 0) & (scores[lang] == best), F.lit(lang)).otherwise(out)
-    return out
-
-
-def fingerprint64(col: Column) -> Column:
-    """Stable 64-bit document fingerprint of normalized content
-    (whitespace-collapsed, lowercased) — the exact-dedup key."""
-    normalized = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-    return F.xxhash64(normalized)
-
-
-def md5_fingerprint(col: Column) -> Column:
-    """Oracle-friendly content hash (md5 exists in DuckDB too)."""
-    return F.md5(col)
-
-
-# DuckDB-parity modulus for portable_hash60 (2^60).
-PORTABLE60_MOD = 1 << 60
-
-
-def portable_hash60(col: Column) -> Column:
-    """60-bit hash computable bit-identically in DuckDB.
-
-    Equals ``md5_number_lower(x) % 2^60`` in DuckDB: the little-endian
-    uint64 of md5-digest bytes 8..15, keeping the low 60 bits so the
-    value fits a signed BIGINT on both engines with identical numeric
-    ordering (MIN/MAX/compare parity — required for MinHash oracles).
-    Used by the correctness-gate "portable" hash mode; production paths
-    use xxhash64 (one JVM codegen op, no hex round-trip).
-    """
-    h = F.md5(col)
-    # LE byte reversal: hex pairs for bytes 15..8 are chars
-    # (31,32),(29,30),...,(17,18); dropping the leading nibble of
-    # byte 15 leaves the low 60 bits as 15 hex chars.
-    rev60 = F.concat(
-        F.substring(h, 32, 1),
-        *[F.substring(h, 31 - 2 * i, 2) for i in range(1, 8)],
-    )
-    return F.conv(rev60, 16, 10).cast("long")
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array column (for MinHash/Jaccard).
-
-    One JVM regex pass with a capturing lookahead over the normalized
-    token string: the match consumes a separator, the lookahead
-    captures the n-token window, so every token position yields one
-    overlapping shingle. Measured 6x faster than the
-    transform+slice higher-order-function formulation (interpreted
-    per element) on 4.2M shingles — byte-identical output.
-    """
-    norm = F.concat_ws(" ", tokens(col))
-    pat = "(?:^| )(?=(" + " ".join(["[^ ]+"] * n) + "))"
-    return F.regexp_extract_all(norm, F.lit(pat), 1)

@@ -109,7 +109,7 @@ def generate_variant_images(
     average-hash sample grid of an exact-2x nearest upscale lands on
     the same source pixels (floor identity: for integer ``i,h``,
     ``(i*2h//8)//2 == i*h//8``), so each corpus row plants one
-    guaranteed Hamming-0 duplicate pair for the near-dup join to find.
+    guaranteed Hamming-0 duplicate pair (pinned by the phash tests).
 
     Adds: bytes (RAWI), out_w, out_h, fmt.
     """
@@ -178,40 +178,6 @@ def phash_fingerprints(
             )
 
     return df.select(id_col, bytes_col).mapInPandas(kernel, schema=schema)
-
-
-def phash_near_dups(
-    df: DataFrame,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    max_hamming: int = 3,
-    blocks: int = 4,
-    max_bucket_size: int | None = 100_000,
-    capped_sink: list | None = None,
-) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash Hamming distance:
-    decode -> 64-bit average-hash (Arrow kernel) -> exact pigeonhole
-    block join (operators/dedup.py hamming_block_join — the same core
-    the simhash text path uses, recall-exact for blocks > max_hamming).
-
-    100 TB shape: one map-only decode+hash pass over pruned (id, bytes)
-    columns, then candidate generation by equi-join on 64/blocks-bit
-    chunk values — never an all-pairs product. Output:
-    (doc_a, doc_b, hamming), doc_a < doc_b.
-    """
-    from vtshaver_spark.operators.dedup import hamming_block_join
-
-    fps = phash_fingerprints(df, id_col=id_col, bytes_col=bytes_col)
-    return hamming_block_join(
-        fps,
-        id_col=id_col,
-        fp_col="phash",
-        max_hamming=max_hamming,
-        blocks=blocks,
-        n_bits=64,
-        max_bucket_size=max_bucket_size,
-        capped_sink=capped_sink,
-    )
 
 
 def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:

@@ -283,6 +283,11 @@ def tile_to_rows(buf: bytes) -> list[dict]:
     the optional id is absent), geom_type, geometry (raw packed
     command bytes), props {key: rendered string}, prop_types
     {key: value type tag}.
+
+    The uint64 feature id is read as two's-complement int64 to fit the
+    ``feature_id bigint`` column: ids of 2^63 and above come back
+    negative (``_write_varint`` re-encodes them to the same varint), and
+    ``["id"]`` comparisons in styles see that signed value.
     """
     if is_gzipped(buf):
         # corrupt/truncated gzip is the most common real-world blob
@@ -351,7 +356,8 @@ def _decode_feature(
     geometry = b""
     for field, wt, val, _ in _fields(buf, start, end):
         if field == 1 and wt == 0:
-            fid = val
+            # uint64 id as signed int64, as _decode_value reads int
+            fid = val - (1 << 64) if val >= 1 << 63 else val
         elif field == 3 and wt == 0:
             gtype = val
         elif field == 2 and wt == 2:
@@ -526,6 +532,10 @@ MVT_ROW_SCHEMA = (
     "geom_type string, geometry binary, props map<string,string>, "
     "prop_types map<string,string>"
 )
+MVT_ROW_FIELDS = (
+    "layer", "layer_version", "layer_extent", "feature_id",
+    "geom_type", "geometry", "props", "prop_types",
+)
 
 
 def decode_tiles(
@@ -573,10 +583,7 @@ def decode_tiles(
     out_struct = _parse_datatype_string(schema)
     pa_types = {f.name: to_arrow_type(f.dataType) for f in out_struct.fields}
 
-    row_fields = (
-        "layer", "layer_version", "layer_extent", "feature_id",
-        "geom_type", "geometry", "props", "prop_types",
-    )
+    row_fields = MVT_ROW_FIELDS
     map_fields = ("props", "prop_types")
 
     def kernel(batches):
