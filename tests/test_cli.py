@@ -209,3 +209,31 @@ def test_shave_tile_cli_matches_shave(spark, style_file, tmp_path, capsys):
     assert {(k[0], k[3]) for k in got} == {
         ("poi_label", 1), ("poi_label", None), ("water", 10), ("water", -1)
     }
+
+
+def test_shave_cli_stops_owned_session_on_failure(style_file, tmp_path, monkeypatch):
+    """A session ``cli shave`` creates is stopped when the job fails."""
+    from pyspark.sql import SparkSession
+
+    import vtshaver_spark.session as session_mod
+
+    class Reader:
+        def parquet(self, path):
+            raise FileNotFoundError(path)
+
+    class StubSession:
+        read = Reader()
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    stub = StubSession()
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    monkeypatch.setattr(session_mod, "build_session", lambda **kw: stub)
+    with pytest.raises(FileNotFoundError):
+        main([
+            "shave", "--style", style_file, "--input", str(tmp_path / "missing"),
+            "--output", str(tmp_path / "out"),
+        ])
+    assert stub.stopped

@@ -17,6 +17,8 @@ from vtshaver_spark import Filters, style_to_filters
 from vtshaver_spark.operators.shave import shave
 from vtshaver_spark.sources.mvt import (
     MVTError,
+    _write_len_field,
+    _write_varint,
     decode_tiles,
     encode_tiles_mvt,
     rows_to_tile,
@@ -657,3 +659,45 @@ def test_uint64_feature_id_roundtrips_through_spark(spark):
     out = bytes(encode_tiles_mvt(decoded).collect()[0]["tile"])
     assert id_varint in out
     assert sorted(r["feature_id"] for r in tile_to_rows(out)) == [-1, 7]
+
+
+def _one_feature_tile(fid=1, version=2, extent=4096) -> bytes:
+    """A one-layer, one-Point tile with the given varint values."""
+    feat = bytearray()
+    _write_varint(feat, 1 << 3)  # id, varint
+    _write_varint(feat, fid)
+    _write_varint(feat, 3 << 3)  # type, varint
+    _write_varint(feat, 1)  # Point
+    _write_len_field(feat, 4, bytes([0x09, 2, 2]))
+    layer = bytearray()
+    _write_varint(layer, 15 << 3)  # version, varint
+    _write_varint(layer, version)
+    _write_len_field(layer, 1, b"poi_label")
+    _write_len_field(layer, 2, bytes(feat))
+    _write_varint(layer, 5 << 3)  # extent, varint
+    _write_varint(layer, extent)
+    tile = bytearray()
+    _write_len_field(tile, 3, bytes(layer))
+    return bytes(tile)
+
+
+def test_out_of_range_varints_are_mvterror(spark):
+    # values the row schema cannot hold: a ten-byte varint past 2^64
+    # (feature_id bigint) and a version/extent past 2^31 (int columns)
+    assert len(tile_to_rows(_one_feature_tile())) == 1
+    bad = [
+        _one_feature_tile(fid=2**65),
+        _one_feature_tile(version=2**40),
+        _one_feature_tile(extent=2**33),
+    ]
+    for blob in bad:
+        with pytest.raises(MVTError):
+            tile_to_rows(blob)
+    tiles = spark.createDataFrame(
+        [(16, 1, 1, bytearray(_small_tile()))]
+        + [(16, i, i, bytearray(b)) for i, b in enumerate(bad, start=2)],
+        "z int, x bigint, y bigint, tile binary",
+    )
+    out = decode_tiles(tiles, on_error="skip").collect()
+    assert len(out) == 3
+    assert {r["x"] for r in out} == {1}

@@ -6,6 +6,8 @@ per-tile row-set equality over the synthetic census features table
 census — see vtshaver_spark/sources/synthetic.py).
 """
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -270,13 +272,23 @@ def test_per_row_zoom_binding(spark, features):
 
 def test_metrics(spark, features):
     filters = Filters(style_to_filters(CAFE_STYLE))
-    _, metrics = shave_with_metrics(features, filters, zoom=16)
+    shaved, metrics = shave_with_metrics(features, filters, zoom=16)
     z, x, y = SF_TILE
     row = [r for r in metrics.collect() if (r["z"], r["x"], r["y"]) == (z, x, y)][0]
     assert row["features_before"] == 49
     assert row["features_after"] == 1
     assert row["prop_bytes_after"] < row["prop_bytes_before"]
     assert 0.0 < row["shave_ratio"] <= 1.0
+
+    # the shaved frame is shave()'s, and the metrics count exactly it
+    def census(df):
+        return Counter(
+            (r["layer"], r["feature_id"], tuple(sorted(r["props"].items())))
+            for r in df.collect()
+        )
+
+    assert census(shaved) == census(shave(features, filters, zoom=16))
+    assert metrics.agg(F.sum("features_after")).first()[0] == shaved.count()
 
 
 def test_tile_layer_summary(spark, features):

@@ -7,8 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from vtshaver_spark import Filters, style_to_filters
+from vtshaver_spark.operators.shave import shave
 from vtshaver_spark.sources.synthetic import FEATURES_SCHEMA, sf_tile_rows
-from vtshaver_spark.streaming.shave_stream import shave_stream, windowed_tile_counts
+from vtshaver_spark.streaming.shave_stream import windowed_tile_counts
 
 
 def test_stream_shave(spark, tmp_path):
@@ -25,7 +26,7 @@ def test_stream_shave(spark, tmp_path):
             {"layers": [{"source-layer": "poi_label", "filter": ["==", "maki", "cafe"]}]}
         )
     )
-    shaved = shave_stream(stream, filters, zoom=16)
+    shaved = shave(stream, filters, zoom=16)
     counts = windowed_tile_counts(shaved)
 
     q = (
@@ -44,7 +45,7 @@ def test_stream_shave(spark, tmp_path):
     q.stop()
 
     # complete-mode variant without watermark gives the final counts
-    shaved2 = shave_stream(stream, filters, zoom=16)
+    shaved2 = shave(stream, filters, zoom=16)
     q2 = (
         shaved2.groupBy("layer")
         .count()

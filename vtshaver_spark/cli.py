@@ -49,43 +49,33 @@ def cmd_shave(args) -> int:
     with open(args.style) as f:
         style = json.load(f)
     filters = Filters(style_to_filters(style))
+    summary_cols = (
+        "features_before", "features_after", "prop_bytes_before", "prop_bytes_after",
+    )
     active = SparkSession.getActiveSession()
     owns = active is None
     spark = active or build_session(app_name="vtshaver-shave")
-    df = spark.read.parquet(args.input)
-    zoom = args.zoom if args.zoom is not None else F.col("z").cast("double")
-    # optional per-vertex table: routes any ["within"]/["distance"] in
-    # the style through full-geometry evaluation (operators/within.py)
-    vertex_df = (
-        spark.read.parquet(args.vertices)
-        if getattr(args, "vertices", None)
-        else None
-    )
-    shaved, metrics = shave_with_metrics(
-        df, filters, zoom=zoom, maxzoom=args.maxzoom, vertex_df=vertex_df
-    )
-    shaved.write.mode("overwrite").parquet(f"{args.output}/shaved")
-    metrics.write.mode("overwrite").parquet(f"{args.output}/metrics")
-    # aggregate the ~1 row per tile just written, not the lazy metrics
-    # plan (that would re-run the per-tile groupBy over the full input)
-    summary = spark.read.parquet(f"{args.output}/metrics").agg(
-        F.sum("features_before").alias("features_before"),
-        F.sum("features_after").alias("features_after"),
-        F.sum("prop_bytes_before").alias("prop_bytes_before"),
-        F.sum("prop_bytes_after").alias("prop_bytes_after"),
-    ).collect()[0]
-    print(
-        json.dumps(
-            {
-                "features_before": summary["features_before"],
-                "features_after": summary["features_after"],
-                "prop_bytes_before": summary["prop_bytes_before"],
-                "prop_bytes_after": summary["prop_bytes_after"],
-            }
+    try:
+        df = spark.read.parquet(args.input)
+        # optional per-vertex table: routes any ["within"]/["distance"]
+        # in the style through full-geometry evaluation
+        # (operators/within.py)
+        vertex_df = spark.read.parquet(args.vertices) if args.vertices else None
+        shaved, metrics = shave_with_metrics(
+            df, filters, zoom=args.zoom, maxzoom=args.maxzoom, vertex_df=vertex_df
         )
-    )
-    if owns:
-        spark.stop()
+        shaved.write.mode("overwrite").parquet(f"{args.output}/shaved")
+        metrics.write.mode("overwrite").parquet(f"{args.output}/metrics")
+        # aggregate the ~1 row per tile just written, not the lazy
+        # metrics plan (that would re-run the per-tile groupBy over the
+        # full input)
+        summary = spark.read.parquet(f"{args.output}/metrics").agg(
+            *[F.sum(c).alias(c) for c in summary_cols]
+        ).collect()[0]
+    finally:
+        if owns:
+            spark.stop()
+    print(json.dumps({c: summary[c] for c in summary_cols}))
     return 0
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from vtshaver_spark.errors import ShaveError
 from vtshaver_spark import errors as E
 from vtshaver_spark.functions.expr import FilterContext, filter_to_column
+from vtshaver_spark.sources.mvt import FEATURE_KEY, TILE_KEY
 from vtshaver_spark.style.filters import Filters, LayerFilter
 
 _GEOM_TYPES = ("Point", "LineString", "Polygon")
@@ -55,14 +56,11 @@ def compile_shave_columns(
     filters: Filters,
     zoom: Union[float, Column, None] = None,
     maxzoom: Optional[float] = None,
-    layer_col: str = "layer",
-    props_col: str = "props",
-    geom_type_col: str = "geom_type",
-    feature_id_col: str = "feature_id",
     within_resolver=None,
     distance_resolver=None,
 ) -> tuple:
-    """Compile a style into (keep predicate, projected-props Column).
+    """Compile a style into (keep predicate, projected-props Column)
+    over feature rows (``sources.mvt.MVT_ROW_FIELDS``).
 
     Shared by ``shave`` (filter + withColumn) and
     ``shave_with_metrics`` (ONE conditional aggregation over both) —
@@ -79,7 +77,7 @@ def compile_shave_columns(
     elif isinstance(zoom, Column):
         zoom_col = zoom
     elif zoom is None:
-        zoom_col = F.col("z").cast("double")
+        zoom_col = F.col(TILE_KEY[0]).cast("double")  # the tile's own z
     else:
         raise ShaveError(E.MSG_ZOOM_TYPE)
     if maxzoom is not None and (
@@ -88,14 +86,11 @@ def compile_shave_columns(
         raise ShaveError(E.MSG_MAXZOOM_TYPE)
 
     ctx = FilterContext(
-        props=props_col,
-        geom_type=geom_type_col,
-        feature_id=feature_id_col,
         zoom=zoom_col,
         within_resolver=within_resolver,
         distance_resolver=distance_resolver,
     )
-    layer = F.col(layer_col)
+    layer = F.col("layer")
 
     # OR-of-layers row predicate (inlined broadcast semi-join).
     keep: Optional[Column] = None
@@ -110,7 +105,7 @@ def compile_shave_columns(
             feature_pred = filter_to_column(lf.filter, ctx)
             branch = (
                 branch
-                & F.col(geom_type_col).isin(*_GEOM_TYPES)
+                & F.col("geom_type").isin(*_GEOM_TYPES)
                 & feature_pred
             )
         keep = branch if keep is None else (keep | branch)
@@ -120,7 +115,7 @@ def compile_shave_columns(
     # CASE-of-layers property projection (O17). Keep-all layers fall
     # through to the identity branch.
     proj: Optional[Column] = None
-    props = F.col(props_col)
+    props = F.col("props")
     for lf in filters:
         if lf.keep_all_properties:
             continue
@@ -142,14 +137,11 @@ def shave(
     filters: Filters,
     zoom: Union[float, Column, None] = None,
     maxzoom: Optional[float] = None,
-    layer_col: str = "layer",
-    props_col: str = "props",
-    geom_type_col: str = "geom_type",
-    feature_id_col: str = "feature_id",
     vertex_df: Optional[DataFrame] = None,
-    within_keys=("z", "x", "y", "layer", "feature_id"),
 ) -> DataFrame:
-    """Shave a features DataFrame with a compiled style.
+    """Shave a DataFrame of feature rows (``sources.mvt.MVT_ROW_FIELDS``
+    plus any other columns, e.g. the ``TILE_KEY``) with a compiled
+    style.
 
     ``zoom`` may be a number (whole-job binding, reference parity), a
     Column (per-row, e.g. ``F.col("z")`` to shave every zoom level in
@@ -165,51 +157,35 @@ def shave(
     Without it, ``within`` falls back to the row-level point form
     (documented in functions/expr._op_within). All distinct within
     geometries share ONE window+aggregate pass over the vertex table
-    and ONE equi-join on ``within_keys`` — two keyed shuffles total
-    at any style complexity; features with no vertex rows count as
-    not-within.
+    and ONE equi-join on the ``FEATURE_KEY`` columns both tables have —
+    two keyed shuffles total at any style complexity; features with
+    no vertex rows count as not-within.
     """
-    aug, keep, projected, flag_cols = _compile_with_geometry(
-        df, filters, zoom, maxzoom, layer_col, props_col, geom_type_col,
-        feature_id_col, vertex_df, within_keys,
-    )
-    return aug.filter(keep).withColumn(props_col, projected).drop(*flag_cols)
+    return _plan(df, filters, zoom, maxzoom, vertex_df)[3]
 
 
-def _compile_with_geometry(
+def _plan(
     df: DataFrame,
     filters: Filters,
     zoom,
     maxzoom,
-    layer_col: str,
-    props_col: str,
-    geom_type_col: str,
-    feature_id_col: str,
     vertex_df: Optional[DataFrame],
-    within_keys,
 ) -> tuple:
-    """Compile (keep, projected) and, when the style contains
-    ``["within"]`` / ``["distance"]`` and a vertex table is supplied,
-    bind each distinct geometry's per-feature verdict (boolean) /
-    min-vertex-distance (meters) as a joined column.
+    """Plan a shave: (rows, keep, projected, shaved), where ``rows`` is
+    ``df`` with any bound verdict columns, ``keep`` and ``projected``
+    are the compiled Columns over ``rows``, and ``shaved`` is the
+    shaved frame.
 
-    Returns (augmented df, keep, projected, bound columns to drop).
-    All distinct geometries — within polygons AND distance points —
-    share ONE window+aggregate pass over the vertex table and ONE
-    equi-join: two keyed shuffles total at any style complexity.
-    Features with no vertex rows count as not-within, and their
-    distances stay NULL (every comparison on them is false — GL
+    When the style contains ``["within"]`` / ``["distance"]`` and a
+    vertex table is supplied, each distinct geometry's per-feature
+    verdict (boolean) / min-vertex-distance (meters) is bound as a
+    joined column. All distinct geometries — within polygons AND
+    distance points — share ONE window+aggregate pass over the vertex
+    table and ONE equi-join: two keyed shuffles total at any style
+    complexity. Features with no vertex rows count as not-within, and
+    their distances stay NULL (every comparison on them is false — GL
     absent-geometry semantics).
     """
-    if vertex_df is None:
-        keep, projected = compile_shave_columns(
-            filters, zoom, maxzoom, layer_col, props_col, geom_type_col,
-            feature_id_col,
-        )
-        return df, keep, projected, []
-
-    from vtshaver_spark.operators.within import feature_within_multi
-
     geoms: list = []
     points: list = []
 
@@ -227,25 +203,29 @@ def _compile_with_geometry(
         points.append((plon, plat))
         return F.col(f"_dist_{len(points) - 1}")
 
+    routed = vertex_df is not None
     keep, projected = compile_shave_columns(
-        filters, zoom, maxzoom, layer_col, props_col, geom_type_col,
-        feature_id_col, within_resolver=resolver,
-        distance_resolver=dist_resolver,
+        filters, zoom, maxzoom,
+        within_resolver=resolver if routed else None,
+        distance_resolver=dist_resolver if routed else None,
     )
-    if not geoms and not points:
-        return df, keep, projected, []
+    rows, bound = df, []
+    if geoms or points:
+        from vtshaver_spark.operators.within import feature_within_multi
 
-    keys = [k for k in within_keys if k in df.columns and k in vertex_df.columns]
-    flag_cols = [f"_within_{i}" for i in range(len(geoms))]
-    dist_cols = [f"_dist_{j}" for j in range(len(points))]
-    verdicts = feature_within_multi(
-        vertex_df, geoms, keys=keys, geom_type_col=geom_type_col,
-        out_cols=flag_cols, distance_points=points, distance_cols=dist_cols,
-    ).select(*keys, *flag_cols, *dist_cols)
-    aug = df.join(verdicts, on=keys, how="left")
-    for c in flag_cols:
-        aug = aug.withColumn(c, F.coalesce(F.col(c), F.lit(False)))
-    return aug, keep, projected, flag_cols + dist_cols
+        keys = [k for k in FEATURE_KEY if k in df.columns and k in vertex_df.columns]
+        flag_cols = [f"_within_{i}" for i in range(len(geoms))]
+        dist_cols = [f"_dist_{j}" for j in range(len(points))]
+        verdicts = feature_within_multi(
+            vertex_df, geoms, keys=keys, out_cols=flag_cols,
+            distance_points=points, distance_cols=dist_cols,
+        ).select(*keys, *flag_cols, *dist_cols)
+        rows = df.join(verdicts, on=keys, how="left")
+        for c in flag_cols:
+            rows = rows.withColumn(c, F.coalesce(F.col(c), F.lit(False)))
+        bound = flag_cols + dist_cols
+    shaved = rows.filter(keep).withColumn("props", projected).drop(*bound)
+    return rows, keep, projected, shaved
 
 
 def shave_with_metrics(
@@ -254,30 +234,18 @@ def shave_with_metrics(
     zoom: Union[float, Column, None] = None,
     maxzoom: Optional[float] = None,
     vertex_df: Optional[DataFrame] = None,
-    within_keys=("z", "x", "y", "layer", "feature_id"),
-    **kwargs,
 ) -> tuple:
-    """Shave plus a per-tile metrics DataFrame (the vtshave CLI
+    """``shave`` plus a per-tile metrics DataFrame (the vtshave CLI
     contract, /root/reference/bin/vtshave.js:75-93: before/after sizes).
 
     Single-pass metrics: before/after feature counts and property
-    bytes come from ONE conditional aggregation over the input — no
-    second scan, no join (at 10^12 rows a re-scan is real money).
-
-    ``vertex_df``: same full-geometry ``["within"]`` routing as
-    ``shave`` — when supplied, the metrics aggregation runs over the
+    bytes come from ONE conditional aggregation over the input, keyed
+    by ``TILE_KEY`` — no second scan, no join (at 10^12 rows a re-scan
+    is real money). With ``vertex_df`` the aggregation runs over the
     verdict-augmented rows, so before/after counts reflect whole-
     geometry semantics too.
     """
-    props_col = kwargs.get("props_col", "props")
-    df, keep, projected, flag_cols = _compile_with_geometry(
-        df, filters, zoom, maxzoom,
-        kwargs.get("layer_col", "layer"), props_col,
-        kwargs.get("geom_type_col", "geom_type"),
-        kwargs.get("feature_id_col", "feature_id"),
-        vertex_df, within_keys,
-    )
-    shaved = df.filter(keep).withColumn(props_col, projected).drop(*flag_cols)
+    rows, keep, projected, shaved = _plan(df, filters, zoom, maxzoom, vertex_df)
 
     # Approximate encoded size of a row: sum of key/value lengths of its
     # retained properties (a stable stand-in for MVT bytes in row-model).
@@ -292,11 +260,11 @@ def shave_with_metrics(
         )
 
     metrics = (
-        df.groupBy("z", "x", "y")
+        rows.groupBy(*TILE_KEY)
         .agg(
             F.count(F.lit(1)).alias("features_before"),
             F.sum(F.when(keep, 1).otherwise(0)).alias("features_after"),
-            F.sum(prop_bytes(F.col(props_col))).alias("prop_bytes_before"),
+            F.sum(prop_bytes(F.col("props"))).alias("prop_bytes_before"),
             F.sum(
                 F.when(keep, prop_bytes(projected)).otherwise(0)
             ).alias("prop_bytes_after"),
@@ -317,12 +285,12 @@ def tile_layer_summary(shaved: DataFrame) -> DataFrame:
     reference's tests assert on (layer names + feature counts +
     property key sets, test/vtshaver.test.js:13-26)."""
     return (
-        shaved.groupBy("z", "x", "y", "layer")
+        shaved.groupBy(*TILE_KEY, "layer")
         .agg(
             F.count(F.lit(1)).alias("feature_count"),
             F.array_sort(
                 F.array_distinct(F.flatten(F.collect_list(F.map_keys(F.col("props")))))
             ).alias("property_keys"),
         )
-        .orderBy("z", "x", "y", "layer")
+        .orderBy(*TILE_KEY, "layer")
     )

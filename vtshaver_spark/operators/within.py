@@ -47,17 +47,15 @@ from vtshaver_spark.functions.geo import (
     point_segment_distance_m,
     segment_crosses_col,
 )
+from vtshaver_spark.sources.mvt import FEATURE_KEY, VERTEX_FIELDS
+
+_PATH, _VERTEX, _LON, _LAT = VERTEX_FIELDS
 
 
 def feature_within_multi(
     vertex_df: DataFrame,
     geoms: Sequence[dict],
-    keys: Sequence[str] = ("z", "x", "y", "layer", "feature_id"),
-    geom_type_col: str = "geom_type",
-    path_col: str = "path_idx",
-    vertex_col: str = "vertex_idx",
-    lon: str = "lon",
-    lat: str = "lat",
+    keys: Sequence[str] = FEATURE_KEY,
     out_cols: Sequence[str] = None,
     distance_points: Sequence[tuple] = (),
     distance_cols: Sequence[str] = None,
@@ -67,10 +65,11 @@ def feature_within_multi(
     single window + aggregate pass (one keyed shuffle regardless of
     how many ``within`` expressions a style contains).
 
-    ``vertex_df`` needs one row per geometry vertex carrying ``keys``,
-    the geometry type, a path index (ring/part; pass ``None`` for
-    single-path data), a vertex order column, and lon/lat.
-    ``out_cols`` names the verdict columns (default within_0..n-1).
+    ``vertex_df`` has the ``sources.mvt.decode_tile_points`` row shape:
+    one row per geometry vertex carrying ``keys``, ``geom_type`` and
+    the ``VERTEX_FIELDS`` (``path_idx`` may be absent for single-path
+    data). ``out_cols`` names the verdict columns (default
+    within_0..n-1).
 
     ``distance_points``: (lon, lat) literal points; each adds a
     ``distance_cols[j]`` column = MIN meters from the point to the
@@ -109,16 +108,15 @@ def feature_within_multi(
         out_cols = [f"within_{i}" for i in range(len(geoms))]
     if distance_cols is None:
         distance_cols = [f"dist_{j}" for j in range(len(distance_points))]
-    order = [path_col, vertex_col] if path_col and path_col in vertex_df.columns else [vertex_col]
+    has_path = _PATH in vertex_df.columns
+    order = [_PATH, _VERTEX] if has_path else [_VERTEX]
     w = Window.partitionBy(*keys).orderBy(*order)
 
-    lon_c, lat_c = F.col(lon), F.col(lat)
-    nlon, nlat = F.lead(lon).over(w), F.lead(lat).over(w)
+    lon_c, lat_c = F.col(_LON), F.col(_LAT)
+    nlon, nlat = F.lead(_LON).over(w), F.lead(_LAT).over(w)
     # a segment exists only toward the next vertex of the SAME path
     same_path = (
-        (F.lead(path_col).over(w) == F.col(path_col))
-        if path_col and path_col in vertex_df.columns
-        else F.lit(True)
+        (F.lead(_PATH).over(w) == F.col(_PATH)) if has_path else F.lit(True)
     )
     flags = vertex_df
     for i, geom in enumerate(geoms):
@@ -160,7 +158,7 @@ def feature_within_multi(
         ).otherwise(0)
         flags = flags.withColumn(f"_c_{j}", cross_cnt)
 
-    agg = flags.groupBy(*keys, geom_type_col).agg(
+    agg = flags.groupBy(*keys, "geom_type").agg(
         *[F.bool_and(f"_in_{i}").alias(f"_all_in_{i}") for i in range(len(geoms))],
         *[F.bool_or(f"_cross_{i}").alias(f"_any_cross_{i}") for i in range(len(geoms))],
         *[F.min(f"_d_{j}").alias(f"_dmin_{j}") for j in range(len(distance_points))],
@@ -169,9 +167,9 @@ def feature_within_multi(
     verdicts = []
     for i, name in enumerate(out_cols):
         verdicts.append(
-            F.when(F.col(geom_type_col) == "Point", F.col(f"_all_in_{i}"))
+            F.when(F.col("geom_type") == "Point", F.col(f"_all_in_{i}"))
             .when(
-                F.col(geom_type_col) == "LineString",
+                F.col("geom_type") == "LineString",
                 F.col(f"_all_in_{i}") & ~F.col(f"_any_cross_{i}"),
             )
             .otherwise(F.lit(False))
@@ -179,46 +177,29 @@ def feature_within_multi(
         )
     dists = [
         F.when(
-            (F.col(geom_type_col) == "Polygon") & (F.col(f"_cx_{j}") % 2 == 1),
+            (F.col("geom_type") == "Polygon") & (F.col(f"_cx_{j}") % 2 == 1),
             F.lit(0.0),
         )
         .otherwise(F.col(f"_dmin_{j}"))
         .alias(name)
         for j, name in enumerate(distance_cols)
     ]
-    return agg.select(*keys, geom_type_col, *verdicts, *dists)
+    return agg.select(*keys, "geom_type", *verdicts, *dists)
 
 
 def feature_within(
-    vertex_df: DataFrame,
-    geom: dict,
-    keys: Sequence[str] = ("z", "x", "y", "layer", "feature_id"),
-    geom_type_col: str = "geom_type",
-    path_col: str = "path_idx",
-    vertex_col: str = "vertex_idx",
-    lon: str = "lon",
-    lat: str = "lat",
+    vertex_df: DataFrame, geom: dict, keys: Sequence[str] = FEATURE_KEY
 ) -> DataFrame:
     """Reduce vertex rows to one ``within: boolean`` row per feature
     (single-polygon form of ``feature_within_multi``)."""
-    return feature_within_multi(
-        vertex_df,
-        [geom],
-        keys=keys,
-        geom_type_col=geom_type_col,
-        path_col=path_col,
-        vertex_col=vertex_col,
-        lon=lon,
-        lat=lat,
-        out_cols=["within"],
-    )
+    return feature_within_multi(vertex_df, [geom], keys=keys, out_cols=["within"])
 
 
 def shave_within(
     features_df: DataFrame,
     vertex_df: DataFrame,
     geom: dict,
-    keys: Sequence[str] = ("z", "x", "y", "layer", "feature_id"),
+    keys: Sequence[str] = FEATURE_KEY,
 ) -> DataFrame:
     """Keep only features whose full geometry is within the polygon —
     a left-semi join of the feature rows against the per-feature

@@ -55,6 +55,8 @@ def _read_varint(buf: bytes, pos: int, end: int) -> tuple[int, int]:
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
+            if result >> 64:
+                raise MVTError("varint exceeds 64 bits")
             return result, pos
         shift += 7
         if shift > 63:
@@ -79,80 +81,37 @@ def _fields(buf: bytes, pos: int, end: int) -> list[tuple[int, int, object, int]
     value, next_pos). Length-delimited fields carry (start, end)
     slices; varints carry ints; fixed carry raw bytes.
 
-    Hot path: varint decoding is inlined (a tile decode reads one
-    varint per ~2.8 payload bytes — at 400k varints/tile-batch the
-    function-call and generator overhead of the naive form was ~45% of
-    decode wall time, measured by cProfile)."""
+    Hot path: single-byte varints are decoded inline (a tile decode
+    reads one varint per ~2.8 payload bytes — at 400k varints/tile-batch
+    the function-call and generator overhead of the naive form was
+    ~45% of decode wall time, measured by cProfile); longer ones go
+    through ``_read_varint``."""
     out = []
     append = out.append
     while pos < end:
-        # inline varint: field key (single-byte fast path)
         b = buf[pos]
-        pos += 1
         if b < 0x80:
             key = b
+            pos += 1
         else:
-            key = b & 0x7F
-            shift = 7
-            while True:
-                if pos >= end:
-                    raise MVTError("truncated varint")
-                b = buf[pos]
-                pos += 1
-                key |= (b & 0x7F) << shift
-                if b < 0x80:
-                    break
-                shift += 7
-                if shift > 63:
-                    raise MVTError("varint too long")
+            key, pos = _read_varint(buf, pos, end)
         field, wt = key >> 3, key & 7
-        if wt == 0:
+        if wt == 0 or wt == 2:
             if pos >= end:
                 raise MVTError("truncated varint")
             b = buf[pos]
-            pos += 1
             if b < 0x80:
                 val = b
+                pos += 1
             else:
-                val = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= end:
-                        raise MVTError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    val |= (b & 0x7F) << shift
-                    if b < 0x80:
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise MVTError("varint too long")
-            append((field, 0, val, pos))
-        elif wt == 2:
-            if pos >= end:
-                raise MVTError("truncated varint")
-            b = buf[pos]
-            pos += 1
-            if b < 0x80:
-                ln = b
+                val, pos = _read_varint(buf, pos, end)
+            if wt == 0:
+                append((field, 0, val, pos))
             else:
-                ln = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= end:
-                        raise MVTError("truncated varint")
-                    b = buf[pos]
-                    pos += 1
-                    ln |= (b & 0x7F) << shift
-                    if b < 0x80:
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise MVTError("varint too long")
-            if pos + ln > end:
-                raise MVTError("truncated length-delimited field")
-            append((field, 2, (pos, pos + ln), pos + ln))
-            pos += ln
+                if pos + val > end:
+                    raise MVTError("truncated length-delimited field")
+                append((field, 2, (pos, pos + val), pos + val))
+                pos += val
         elif wt == 5:
             if pos + 4 > end:
                 raise MVTError("truncated fixed32")
@@ -334,6 +293,9 @@ def _decode_layer(buf: bytes, start: int, end: int) -> list[dict]:
             feature_spans.append(val)
     if name is None:
         raise MVTError("layer missing required name field")
+    # the row schema holds both in signed 32-bit int columns
+    if version >= 1 << 31 or extent >= 1 << 31:
+        raise MVTError(f"layer {name!r} version or extent past 2^31")
     rows = []
     for s, e in feature_spans:
         rows.append(_decode_feature(buf, s, e, name, version, extent, keys, values))
@@ -367,24 +329,12 @@ def _decode_feature(
             while pos < e:
                 # inline varint: tag indices are almost always < 128
                 b = buf[pos]
-                pos += 1
                 if b < 0x80:
                     tags_append(b)
-                    continue
-                v = b & 0x7F
-                shift = 7
-                while True:
-                    if pos >= e:
-                        raise MVTError("truncated varint")
-                    b = buf[pos]
                     pos += 1
-                    v |= (b & 0x7F) << shift
-                    if b < 0x80:
-                        break
-                    shift += 7
-                    if shift > 63:
-                        raise MVTError("varint too long")
-                tags_append(v)
+                else:
+                    v, pos = _read_varint(buf, pos, e)
+                    tags_append(v)
         elif field == 4 and wt == 2:
             s, e = val
             geometry = buf[s:e]
@@ -527,6 +477,8 @@ def rows_to_tile(rows: list[dict], compress: bool = False, level: int = None) ->
 # Spark operators
 # ---------------------------------------------------------------------------
 
+# The feature-row format every Spark operator of the engine reads and
+# writes: one row per feature, addressed by its tile.
 MVT_ROW_SCHEMA = (
     "layer string, layer_version int, layer_extent int, feature_id bigint, "
     "geom_type string, geometry binary, props map<string,string>, "
@@ -536,17 +488,23 @@ MVT_ROW_FIELDS = (
     "layer", "layer_version", "layer_extent", "feature_id",
     "geom_type", "geometry", "props", "prop_types",
 )
+TILE_KEY = ("z", "x", "y")
+FEATURE_KEY = (*TILE_KEY, "layer", "feature_id")
+# ``decode_tile_points`` rows: the feature key and geometry type plus
+# one geometry vertex (path, position on the path, lon/lat)
+VERTEX_FIELDS = ("path_idx", "vertex_idx", "lon", "lat")
+VERTEX_ROW_FIELDS = (*FEATURE_KEY, "geom_type", *VERTEX_FIELDS)
+VERTEX_ROW_SCHEMA = (
+    "z int, x bigint, y bigint, layer string, feature_id bigint, "
+    "geom_type string, path_idx int, vertex_idx int, lon double, lat double"
+)
 
 
-def decode_tiles(
-    df,
-    tile_col: str = "tile",
-    carry_cols: tuple = ("z", "x", "y"),
-    on_error: str = "fail",
-):
-    """Explode a DataFrame of MVT blobs into feature rows
-    (mapInPandas; gzip sniffed per blob). ``carry_cols`` pass through
-    to every emitted feature row.
+def decode_tiles(df, on_error: str = "fail"):
+    """Explode a DataFrame of MVT blobs (column ``tile``) into feature
+    rows (gzip sniffed per blob). The ``TILE_KEY`` columns present in
+    ``df`` pass through to every emitted feature row, ahead of the
+    ``MVT_ROW_FIELDS``.
 
     ``on_error``: "fail" raises on the first malformed blob (the
     reference's decode-must-error contract); "skip" drops corrupt
@@ -565,12 +523,12 @@ def decode_tiles(
     if on_error not in ("fail", "skip"):
         raise ValueError("on_error must be 'fail' or 'skip'")
 
-    carry = [c for c in carry_cols if c in df.columns]
+    carry = [c for c in TILE_KEY if c in df.columns]
     # mapInArrow binds emitted record-batch columns to this schema BY
     # POSITION (unlike mapInPandas, which assigned by name), so the
     # declared carry fields must follow `carry` order — iterating
     # df.schema here would silently swap carry values whenever the
-    # input column order differs from carry_cols
+    # input column order differs from TILE_KEY
     fields = {f.name: f for f in df.schema.fields}
     carry_schema = ", ".join(
         f"{c} {fields[c].dataType.simpleString()}" for c in carry
@@ -594,7 +552,7 @@ def decode_tiles(
             # construction measured ~3x slower per feature)
             cols: dict = {c: [] for c in (*carry, *row_fields)}
             carry_series = [rb.column(c).to_pylist() for c in carry]
-            for i, blob in enumerate(rb.column(tile_col).to_pylist()):
+            for i, blob in enumerate(rb.column("tile").to_pylist()):
                 try:
                     rows = tile_to_rows(bytes(blob))
                 except MVTError:
@@ -620,12 +578,14 @@ def decode_tiles(
                     names=[*carry, *row_fields],
                 )
 
-    return df.select(*carry, tile_col).mapInArrow(kernel, schema=schema)
+    return df.select(*carry, "tile").mapInArrow(kernel, schema=schema)
 
 
-def encode_tiles_mvt(df, compress=False, tile_cols: tuple = ("z", "x", "y")):
-    """Group feature rows into MVT blobs per tile. ``compress`` takes
-    the reference's validated ``{type: none|gzip}`` contract or a bool.
+def encode_tiles_mvt(df, compress=False):
+    """Group feature rows into one MVT blob per ``TILE_KEY``, in column
+    ``tile``. Only the ``MVT_ROW_FIELDS`` present in ``df`` are packed;
+    other columns do not ride the shuffle. ``compress`` takes the
+    reference's validated ``{type: none|gzip}`` contract or a bool.
 
     ``collect_list(struct)`` per tile feeds a scalar Arrow-batched
     pandas UDF that encodes MANY tiles per batch, so per-tile cost is
@@ -638,13 +598,12 @@ def encode_tiles_mvt(df, compress=False, tile_cols: tuple = ("z", "x", "y")):
 
     level = compress_level(compress)
     compress = validate_compress(compress)
-    tile_cols = list(tile_cols)
-    data_cols = [c for c in df.columns if c not in tile_cols]
-    grouped = df.groupBy(*tile_cols).agg(
+    data_cols = [c for c in df.columns if c in MVT_ROW_FIELDS]
+    grouped = df.groupBy(*TILE_KEY).agg(
         F.collect_list(F.struct(*data_cols)).alias("_rows")
     )
     enc_udf = make_tile_encoder(compress, level)
-    return grouped.select(*tile_cols, enc_udf(F.col("_rows")).alias("tile"))
+    return grouped.select(*TILE_KEY, enc_udf(F.col("_rows")).alias("tile"))
 
 
 # ---------------------------------------------------------------------------
@@ -715,40 +674,28 @@ def tile_px_to_lonlat(z: int, x: int, y: int, px: float, py: float, extent: int 
     return lon, lat
 
 
-def decode_tile_points(df, tile_col: str = "tile"):
-    """Explode MVT blobs into one row per geometry VERTEX with lon/lat
-    (Point features contribute their point; lines/polygons their
-    vertices) — the bridge from the wire format to the engine's
-    point-based spatial operators.
+def decode_tile_points(df):
+    """Explode MVT blobs (column ``tile``) into ``VERTEX_ROW_FIELDS``
+    rows, one per geometry VERTEX with lon/lat (Point features
+    contribute their point; lines/polygons their vertices) — the bridge
+    from the wire format to the engine's point-based spatial operators.
 
-    Requires ``z``/``x``/``y`` tile-address columns: they are inputs
-    to the Web-Mercator vertex projection, not optional carry-through
-    (the former ``carry_cols`` parameter was a lie — ADVICE r2)."""
+    Requires the ``TILE_KEY`` columns: they are inputs to the
+    Web-Mercator vertex projection, not optional carry-through."""
     import pandas as pd
 
-    missing = [c for c in ("z", "x", "y") if c not in df.columns]
+    missing = [c for c in TILE_KEY if c not in df.columns]
     if missing:
         raise ValueError(
-            f"decode_tile_points requires tile-address columns z/x/y; missing {missing}"
+            f"decode_tile_points requires tile-address columns {TILE_KEY}; "
+            f"missing {missing}"
         )
-    schema = (
-        "z int, x bigint, y bigint, layer string, feature_id bigint, "
-        "geom_type string, path_idx int, vertex_idx int, "
-        "lon double, lat double"
-    )
 
     def kernel(batches):
         for pdf in batches:
-            cols: dict = {
-                k: []
-                for k in (
-                    "z", "x", "y", "layer", "feature_id", "geom_type",
-                    "path_idx", "vertex_idx", "lon", "lat",
-                )
-            }
+            out = []
             for zt, xt, yt, blob in zip(
-                pdf["z"].tolist(), pdf["x"].tolist(), pdf["y"].tolist(),
-                pdf[tile_col].tolist(),
+                *(pdf[c].tolist() for c in (*TILE_KEY, "tile"))
             ):
                 for r in tile_to_rows(bytes(blob)):
                     paths = decode_geometry(r["geometry"]) if r["geometry"] else []
@@ -756,20 +703,16 @@ def decode_tile_points(df, tile_col: str = "tile"):
                     for pi, path in enumerate(paths):
                         for vi, (px, py) in enumerate(path):
                             lon, lat = tile_px_to_lonlat(zt, xt, yt, px, py, extent)
-                            cols["z"].append(zt)
-                            cols["x"].append(xt)
-                            cols["y"].append(yt)
-                            cols["layer"].append(r["layer"])
-                            cols["feature_id"].append(r["feature_id"])
-                            cols["geom_type"].append(r["geom_type"])
-                            cols["path_idx"].append(pi)
-                            cols["vertex_idx"].append(vi)
-                            cols["lon"].append(lon)
-                            cols["lat"].append(lat)
-            if cols["layer"]:
-                yield pd.DataFrame(cols)
+                            out.append((
+                                zt, xt, yt, r["layer"], r["feature_id"],
+                                r["geom_type"], pi, vi, lon, lat,
+                            ))
+            if out:
+                yield pd.DataFrame(out, columns=VERTEX_ROW_FIELDS)
 
-    return df.select("z", "x", "y", tile_col).mapInPandas(kernel, schema=schema)
+    return df.select(*TILE_KEY, "tile").mapInPandas(
+        kernel, schema=VERTEX_ROW_SCHEMA
+    )
 
 
 def register_sql_functions(spark) -> None:

@@ -2,33 +2,17 @@
 
 The reference is batch-only (one tile per async callback); the graft
 adds a streaming surface: a features stream (file/rate/kafka source)
-flows through the SAME compiled shave predicate — filter_to_column is
-source-agnostic — with watermarked per-tile aggregation for late rows.
+flows through ``operators.shave.shave`` unchanged — the predicate/
+projection plan contains no batch-only operators, so it lowers to a
+streaming map — with watermarked per-tile aggregation for late rows.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Union
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vtshaver_spark.operators.shave import shave
-from vtshaver_spark.style.filters import Filters
-
-
-def shave_stream(
-    stream_df: DataFrame,
-    filters: Filters,
-    zoom: Union[float, Column, None] = None,
-    maxzoom: Optional[float] = None,
-) -> DataFrame:
-    """Apply the shave plan to a streaming features DataFrame.
-
-    Identical semantics to batch shave — the predicate/projection plan
-    contains no batch-only operators, so it lowers to a streaming map.
-    """
-    return shave(stream_df, filters, zoom=zoom, maxzoom=maxzoom)
+from vtshaver_spark.sources.mvt import TILE_KEY
 
 
 def windowed_tile_counts(
@@ -43,11 +27,11 @@ def windowed_tile_counts(
         shaved.withWatermark(event_time_col, watermark)
         .groupBy(
             F.window(F.col(event_time_col), window_duration).alias("w"),
-            "z", "x", "y", "layer",
+            *TILE_KEY, "layer",
         )
         .agg(F.count(F.lit(1)).alias("feature_count"))
         .select(
             F.col("w.start").alias("window_start"),
-            "z", "x", "y", "layer", "feature_count",
+            *TILE_KEY, "layer", "feature_count",
         )
     )
