@@ -237,3 +237,41 @@ def test_shave_cli_stops_owned_session_on_failure(style_file, tmp_path, monkeypa
             "--output", str(tmp_path / "out"),
         ])
     assert stub.stopped
+
+
+@pytest.mark.parametrize("damage", ["truncated", "bit_flipped"])
+def test_shave_tile_cli_malformed_tile(damage, style_file, tmp_path, capsys, monkeypatch):
+    """A malformed tile is reported as ``Error: <MVTError message>``
+    with exit status 1, before any Spark session starts and without
+    writing ``--out``."""
+    from pyspark.sql import SparkSession
+
+    import vtshaver_spark.session as session_mod
+    from vtshaver_spark.sources.mvt import MVTError, rows_to_tile, tile_to_rows
+
+    tile = rows_to_tile([{
+        "layer": "poi_label", "feature_id": 1, "geom_type": "Point",
+        "geometry": bytes([0x09, 2, 2]), "props": {"maki": "cafe"},
+        "prop_types": {"maki": "string"},
+    }])
+    bad = tile[:-3] if damage == "truncated" else bytes([tile[0] ^ 0x01]) + tile[1:]
+    with pytest.raises(MVTError) as ex:
+        tile_to_rows(bad)
+    tile_path = tmp_path / "bad.mvt"
+    tile_path.write_bytes(bad)
+    out_file = tmp_path / "out.mvt"
+
+    def no_session(**kw):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    monkeypatch.setattr(session_mod, "build_session", no_session)
+    rc = main([
+        "shave-tile", "--tile", str(tile_path), "--style", style_file,
+        "--zoom", "16", "--out", str(out_file),
+    ])
+    assert rc == 1
+    captured = capsys.readouterr()
+    assert captured.err == f"Error: {ex.value}\n"
+    assert captured.out == ""
+    assert not out_file.exists()

@@ -11,18 +11,34 @@ materialization.
 Everything is DataFrame-first: predicates compile to Catalyst expressions
 (whole-stage codegen), joins broadcast small sides, and Python only runs
 inside Arrow-batched pandas UDFs at the edges.
+
+Every kernel unpickled in a Python worker imports this package first,
+so it installs the worker hook (``worker.py``) and nothing else: the
+public names below load on first use (PEP 562), keeping the style
+compiler and ``functions/expr.py`` out of codec-only workers.
 """
+
+import importlib
+
+from vtshaver_spark import worker
 
 __version__ = "0.1.0"
 
-from vtshaver_spark.errors import FilterError, ShaveError
-from vtshaver_spark.style.compile import style_to_filters
-from vtshaver_spark.style.filters import Filters
+worker.install()
 
-__all__ = [
-    "FilterError",
-    "ShaveError",
-    "style_to_filters",
-    "Filters",
-    "__version__",
-]
+_LAZY = {
+    "FilterError": "vtshaver_spark.errors",
+    "ShaveError": "vtshaver_spark.errors",
+    "style_to_filters": "vtshaver_spark.style.compile",
+    "Filters": "vtshaver_spark.style.filters",
+}
+
+__all__ = [*_LAZY, "__version__"]
+
+
+def __getattr__(name):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_LAZY[name]), name)
+    globals()[name] = value
+    return value

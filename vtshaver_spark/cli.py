@@ -92,6 +92,7 @@ def cmd_shave_tile(args) -> int:
     from vtshaver_spark.sources.mvt import (
         MVT_ROW_FIELDS,
         MVT_ROW_SCHEMA,
+        MVTError,
         rows_to_tile,
         tile_to_rows,
     )
@@ -106,11 +107,11 @@ def cmd_shave_tile(args) -> int:
         compress = validate_compress(
             {"type": args.compress} if args.compress else None
         )
-    except ShaveError as ex:
+        rows = tile_to_rows(buf)
+    except (ShaveError, MVTError) as ex:
         sys.stderr.write(f"Error: {ex}\n")
         return 1
     filters = Filters(style_to_filters(style))
-    rows = tile_to_rows(buf)
     from pyspark.sql import SparkSession
 
     # only stop a session we created: getOrCreate() reuses any active
