@@ -634,6 +634,20 @@ def test_decode_tiles_on_error_skip_drops_gzip_bomb(spark):
     assert {r["x"] for r in out.select("x").collect()} == {1}
 
 
+def test_null_tile_is_mvterror(spark):
+    with pytest.raises(MVTError, match="tile is null"):
+        tile_to_rows(None)
+    tiles = spark.createDataFrame(
+        [(16, 1, 1, bytearray(_small_tile())), (16, 2, 2, None)],
+        "z int, x bigint, y bigint, tile binary",
+    )
+    with pytest.raises(Exception, match="MVTError: tile is null"):
+        decode_tiles(tiles).collect()
+    out = decode_tiles(tiles, on_error="skip").collect()
+    assert len(out) == 3
+    assert {r["x"] for r in out} == {1}
+
+
 def test_uint64_feature_id_roundtrips_through_spark(spark):
     # MVT ids are uint64; the bigint column holds 2^64-1 as -1 and the
     # encoder writes the same ten-byte varint back

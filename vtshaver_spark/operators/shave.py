@@ -33,11 +33,12 @@ from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from vtshaver_spark.errors import ShaveError
 from vtshaver_spark import errors as E
 from vtshaver_spark.functions.expr import FilterContext, filter_to_column
-from vtshaver_spark.sources.mvt import FEATURE_KEY, TILE_KEY
+from vtshaver_spark.sources.mvt import FEATURE_KEY, TILE_KEY, _decode_tiles
 from vtshaver_spark.style.filters import Filters, LayerFilter
 
 _GEOM_TYPES = ("Point", "LineString", "Polygon")
@@ -160,8 +161,31 @@ def shave(
     and ONE equi-join on the ``FEATURE_KEY`` columns both tables have —
     two keyed shuffles total at any style complexity; features with
     no vertex rows count as not-within.
+
+    Layer pushdown: given exactly the frame ``sources.mvt.decode_tiles``
+    returned (not derived, not cached or persisted), ``shave`` re-plans
+    that decode to skip the features of layers the style never names,
+    as the reference does (src/shave.cpp:253-263); Catalyst cannot push
+    a filter into the decode kernel. The keep predicate still runs
+    unchanged, so the shaved rows are the same, except that corruption
+    inside a skipped layer no longer raises (see ``decode_tiles``).
+    ``shave_with_metrics`` never pushes down: its census counts every
+    feature.
     """
-    return _plan(df, filters, zoom, maxzoom, vertex_df)[3]
+    return _plan(_skip_unstyled_layers(df, filters), filters, zoom, maxzoom, vertex_df)[3]
+
+
+def _skip_unstyled_layers(df: DataFrame, filters: Filters) -> DataFrame:
+    """``df``, or, when ``df`` is the uncached frame ``decode_tiles``
+    returned, that decode re-planned with ``filters``' layer set."""
+    source = getattr(df, "_mvt_decode_source", None)
+    if (
+        source is None
+        or not isinstance(filters, Filters)
+        or df.storageLevel != StorageLevel.NONE
+    ):
+        return df
+    return _decode_tiles(*source, frozenset(filters.layers()))
 
 
 def _plan(

@@ -248,6 +248,17 @@ def tile_to_rows(buf: bytes) -> list[dict]:
     negative (``_write_varint`` re-encodes them to the same varint), and
     ``["id"]`` comparisons in styles see that signed value.
     """
+    return _tile_to_rows(buf)
+
+
+def _tile_to_rows(buf: Optional[bytes], layers: Optional[frozenset] = None) -> list[dict]:
+    """``tile_to_rows``, decoding only the layers named in ``layers``
+    (every layer when None). A layer outside the set still has its
+    framing, name, version and extent read and checked; its keys,
+    values and features are not read, so corruption inside them does
+    not raise."""
+    if buf is None:
+        raise MVTError("tile is null")
     if is_gzipped(buf):
         # corrupt/truncated gzip is the most common real-world blob
         # corruption — fold it into MVTError so the decode-must-error
@@ -262,18 +273,20 @@ def tile_to_rows(buf: bytes) -> list[dict]:
         for field, wt, val, _ in _fields(buf, 0, len(buf)):
             if field == 3 and wt == 2:
                 s, e = val
-                rows.extend(_decode_layer(buf, s, e))
+                rows.extend(_decode_layer(buf, s, e, layers))
     except UnicodeDecodeError as exc:
         raise MVTError(f"invalid UTF-8 in tile strings: {exc}") from exc
     return rows
 
 
-def _decode_layer(buf: bytes, start: int, end: int) -> list[dict]:
+def _decode_layer(
+    buf: bytes, start: int, end: int, layers: Optional[frozenset]
+) -> list[dict]:
     name: Optional[str] = None
     version = 1
     extent = 4096
-    keys: list[str] = []
-    values: list[tuple[str, str]] = []
+    key_spans: list[tuple[int, int]] = []
+    value_spans: list[tuple[int, int]] = []
     feature_spans: list[tuple[int, int]] = []
     for field, wt, val, _ in _fields(buf, start, end):
         if field == 1 and wt == 2:
@@ -284,11 +297,9 @@ def _decode_layer(buf: bytes, start: int, end: int) -> list[dict]:
         elif field == 5 and wt == 0:
             extent = val
         elif field == 3 and wt == 2:
-            s, e = val
-            keys.append(buf[s:e].decode("utf-8"))
+            key_spans.append(val)
         elif field == 4 and wt == 2:
-            s, e = val
-            values.append(_decode_value(buf, s, e))
+            value_spans.append(val)
         elif field == 2 and wt == 2:
             feature_spans.append(val)
     if name is None:
@@ -296,10 +307,14 @@ def _decode_layer(buf: bytes, start: int, end: int) -> list[dict]:
     # the row schema holds both in signed 32-bit int columns
     if version >= 1 << 31 or extent >= 1 << 31:
         raise MVTError(f"layer {name!r} version or extent past 2^31")
-    rows = []
-    for s, e in feature_spans:
-        rows.append(_decode_feature(buf, s, e, name, version, extent, keys, values))
-    return rows
+    if layers is not None and name not in layers:
+        return []
+    keys = [buf[s:e].decode("utf-8") for s, e in key_spans]
+    values = [_decode_value(buf, s, e) for s, e in value_spans]
+    return [
+        _decode_feature(buf, s, e, name, version, extent, keys, values)
+        for s, e in feature_spans
+    ]
 
 
 def _decode_feature(
@@ -506,11 +521,19 @@ def decode_tiles(df, on_error: str = "fail"):
     ``df`` pass through to every emitted feature row, ahead of the
     ``MVT_ROW_FIELDS``.
 
-    ``on_error``: "fail" raises on the first malformed blob (the
-    reference's decode-must-error contract); "skip" drops corrupt
+    ``on_error``: "fail" raises on the first malformed or null blob
+    (the reference's decode-must-error contract); "skip" drops such
     tiles and keeps going — at fleet scale one bad object must not
     kill a 10^6-task job (count skips by anti-joining the output's
     tile keys against the input).
+
+    Layer pushdown: ``operators.shave.shave`` given exactly the frame
+    returned here (not derived, not cached or persisted) re-plans this
+    decode to skip the features of layers its style never names. A
+    skipped layer's framing, name, version and extent are still
+    checked, but corruption inside its keys, values or features no
+    longer raises, and under "skip" no longer drops the tile. Without
+    ``shave`` every layer is decoded and checked.
 
     The kernel is ``mapInArrow`` with direct Arrow-array assembly
     (r6): the pandas form spent more time in DataFrame construction
@@ -522,7 +545,15 @@ def decode_tiles(df, on_error: str = "fail"):
     walk; emitted rows are identical."""
     if on_error not in ("fail", "skip"):
         raise ValueError("on_error must be 'fail' or 'skip'")
+    out = _decode_tiles(df, on_error, None)
+    # operators.shave re-plans the decode from this with a layer set
+    out._mvt_decode_source = (df, on_error)
+    return out
 
+
+def _decode_tiles(df, on_error: str, layers: Optional[frozenset]):
+    """The ``decode_tiles`` plan, decoding only the layers in
+    ``layers`` (every layer when None)."""
     carry = [c for c in TILE_KEY if c in df.columns]
     # mapInArrow binds emitted record-batch columns to this schema BY
     # POSITION (unlike mapInPandas, which assigned by name), so the
@@ -554,7 +585,7 @@ def decode_tiles(df, on_error: str = "fail"):
             carry_series = [rb.column(c).to_pylist() for c in carry]
             for i, blob in enumerate(rb.column("tile").to_pylist()):
                 try:
-                    rows = tile_to_rows(bytes(blob))
+                    rows = _tile_to_rows(blob, layers)
                 except MVTError:
                     if on_error == "skip":
                         continue
