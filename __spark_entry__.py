@@ -535,10 +535,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["video_frame_phash"] = video_frame_phash
 
     def events_window_rollup(spark, sf_dir):
-        # temporal tumbling-window rollup over the event stream table —
-        # the batch counterpart of the streaming watermark rollups
-        # (streaming/shave_stream.py), with per-window distincts and a
-        # JSON-ish property extraction kept JVM-side (regexp, no UDF)
+        # temporal tumbling-window rollup over the event stream table,
+        # with per-window distincts and a JSON-ish property extraction
+        # kept JVM-side (regexp, no UDF)
         register_views(spark, sf_dir)
         e = spark.table("events")
         k = F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("int")

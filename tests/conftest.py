@@ -38,7 +38,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def features(spark):
-    from vtshaver_spark.sources.synthetic import features_df
+    from synthetic import features_df
 
     df = features_df(spark).cache()
     df.count()

@@ -1,7 +1,7 @@
 """Deterministic synthetic fixture tables (no RNG, no wall clock).
 
 The features census reproduces the reference's canonical test tile
-``sf_16_10465_25329.vector.pbf`` (7 layers — /root/reference/test/
+``sf_16_10465_25329.vector.pbf`` (7 layers — the reference's test/
 vtshaver.test.js:55-59) as rows, with the exact per-layer feature
 counts and property keys the reference's tests pin (FIXTURES.md §2):
 
@@ -162,7 +162,7 @@ def sf_tile_rows() -> list:
 
 def housenum_tile_rows() -> list:
     """The z16-housenum analogue: 7 layers dominated by housenum_label
-    (/root/reference/test/propertyKeyValueFilter.test.js:61)."""
+    (the reference's test/propertyKeyValueFilter.test.js:61)."""
     t = HOUSENUM_TILE
     rows = []
     rows += _rows(t, "housenum_label", [
@@ -187,7 +187,7 @@ def housenum_tile_rows() -> list:
 def value_types_tile_rows() -> list:
     """mvt-fixtures analogue: one layer exercising every MVT value type
     as canonical strings plus a Point/LineString mix for geometry-type
-    filters (/root/reference/test/mvtfixtures.test.js:16-81)."""
+    filters (the reference's test/mvtfixtures.test.js:16-81)."""
     t = (0, 0, 0)
     specs = [
         (1, "Point", {

@@ -67,6 +67,8 @@ def test_compress_validation_messages():
     with pytest.raises(ShaveError) as ex:
         validate_compress({"type": "gzip", "level": -1})
     assert str(ex.value) == E.MSG_COMPRESS_LEVEL
+    with pytest.raises(ShaveError, match="at most 9"):
+        validate_compress({"type": "gzip", "level": 10})
 
 
 def test_shave_tile_cli(style_file, tmp_path, capsys):

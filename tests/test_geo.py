@@ -199,18 +199,6 @@ def test_s2_column_plan_is_codegen(spark):
     assert "*(1) Project" in plan
 
 
-def test_grid_disk_tile():
-    from vtshaver_spark.functions.geo import grid_disk_tile
-
-    c = (5 << 58) + (0 << 29) + 3
-    disk = grid_disk_tile(c, 1)
-    assert len(disk) == 9 and c in disk
-    # antimeridian wrap: x=0 at z5 neighbors x=31
-    assert (5 << 58) + (31 << 29) + 3 in disk
-    # pole clamp: y=0 drops the out-of-range row
-    assert len(grid_disk_tile((5 << 58) + (4 << 29) + 0, 1)) == 6
-
-
 def test_tile_pyramid_cascade(spark):
     # 4 points: two in the same z2 tile, two elsewhere
     pts = spark.createDataFrame(

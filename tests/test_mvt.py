@@ -19,6 +19,7 @@ from vtshaver_spark.sources.mvt import (
     MVTError,
     _write_len_field,
     _write_varint,
+    decode_tile_points,
     decode_tiles,
     encode_tiles_mvt,
     rows_to_tile,
@@ -446,8 +447,6 @@ def test_decode_geometry_real_tile(sf_rows):
 
 
 def test_decode_tile_points_spark(spark):
-    from vtshaver_spark.sources.mvt import decode_tile_points
-
     with open(SF_TILE, "rb") as f:
         blob = f.read()
     tiles = spark.createDataFrame(
@@ -646,6 +645,8 @@ def test_null_tile_is_mvterror(spark):
     out = decode_tiles(tiles, on_error="skip").collect()
     assert len(out) == 3
     assert {r["x"] for r in out} == {1}
+    with pytest.raises(Exception, match="MVTError: tile is null"):
+        decode_tile_points(tiles).collect()
 
 
 def test_uint64_feature_id_roundtrips_through_spark(spark):

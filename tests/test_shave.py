@@ -3,7 +3,7 @@
 Each case re-states a reference test outcome (file:line cited) as
 per-tile row-set equality over the synthetic census features table
 (which mirrors the canonical sf_16_10465_25329 tile layer/feature
-census — see vtshaver_spark/sources/synthetic.py).
+census — see tests/synthetic.py).
 """
 
 from collections import Counter
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from vtshaver_spark import Filters, style_to_filters
 from vtshaver_spark.errors import FilterError, ShaveError
 from vtshaver_spark.operators.shave import shave, shave_with_metrics, tile_layer_summary
-from vtshaver_spark.sources.synthetic import SF_TILE
+from synthetic import SF_TILE
 
 
 def sf_tile(df):

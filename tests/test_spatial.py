@@ -16,7 +16,7 @@ from vtshaver_spark.operators.pip import (
     pip_rect_join,
     rect_rings,
 )
-from vtshaver_spark.sources.synthetic import landmarks_df, polygons_df, _u
+from synthetic import landmarks_df, polygons_df, _u
 
 
 @pytest.fixture(scope="module")

@@ -4,9 +4,8 @@ Built from scratch with the query/data-processing capabilities of
 mapbox/vtshaver (reference at /root/reference, studied for semantics only):
 Mapbox-GL style compilation -> Spark Column predicates, per-tile shaving
 (layer semi-join, zoom gating, feature filtering, property projection),
-plus web-scale additions: H3/S2-style cell indexing, point-in-polygon,
-kNN joins, full-geometry ``within``, MVT decode/encode and raster tile
-materialization.
+plus web-scale additions: S2 cell indexing, point-in-polygon, kNN
+joins, full-geometry ``within`` and MVT decode/encode.
 
 Everything is DataFrame-first: predicates compile to Catalyst expressions
 (whole-stage codegen), joins broadcast small sides, and Python only runs

@@ -68,6 +68,9 @@ def validate_compress(compress) -> bool:
         level = compress["level"]
         if not isinstance(level, int) or isinstance(level, bool) or level < 0:
             raise ShaveError(MSG_COMPRESS_LEVEL)
+        if level > 9:
+            # zlib's range; past it every encode task dies mid-job
+            raise ShaveError("compress option 'level' must be at most 9")
     return ctype == "gzip"
 
 

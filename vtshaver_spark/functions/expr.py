@@ -1115,10 +1115,6 @@ def _validate_arity(op: str, e: list) -> None:
         raise FilterError(f"'{op}' expects a GeoJSON object")
 
 
-def _xor(a: Column, b: Column) -> Column:
-    return (a | b) & ~(a & b)
-
-
 def _number_to_string(n: Column) -> Column:
     """GL to-string for numbers: integral values print without '.0'."""
     as_long = n.cast("long")

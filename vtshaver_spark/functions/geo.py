@@ -427,24 +427,3 @@ def haversine_m_sql(lon_expr: str, lat_expr: str, lon2: float, lat2: float) -> s
     )
     # antipodal clamp, mirroring haversine_m
     return f"(12742000.0 * ASIN(SQRT(LEAST({a}, 1.0))))"
-
-
-def grid_disk_tile(cell: int, k: int = 1) -> list:
-    """Neighbor disk of a packed tile cell (``tile_cell`` layout):
-    the (2k+1)^2 cells within Chebyshev distance k — x wraps at the
-    antimeridian, y clamps at the poles. The H3-less counterpart of
-    ``h3.grid_disk`` for candidate generation (same ring contract
-    knn_join_cells uses)."""
-    z = cell >> 58
-    x = (cell >> 29) & ((1 << 29) - 1)
-    y = cell & ((1 << 29) - 1)
-    n = 1 << z
-    out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            ny = y + dy
-            if ny < 0 or ny >= n:
-                continue
-            nx = (x + dx) % n
-            out.append((z << 58) + (nx << 29) + ny)
-    return out

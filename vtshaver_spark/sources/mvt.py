@@ -728,7 +728,7 @@ def decode_tile_points(df):
             for zt, xt, yt, blob in zip(
                 *(pdf[c].tolist() for c in (*TILE_KEY, "tile"))
             ):
-                for r in tile_to_rows(bytes(blob)):
+                for r in tile_to_rows(blob):
                     paths = decode_geometry(r["geometry"]) if r["geometry"] else []
                     extent = r["layer_extent"] or 4096
                     for pi, path in enumerate(paths):
