@@ -299,3 +299,30 @@ def polygons_df(spark: SparkSession, n: int = 50) -> DataFrame:
         )
     )
     return spark.createDataFrame(rows, POLYGONS_SCHEMA)
+
+
+def flat_jpeg(sof: int = 0xC0) -> bytes:
+    """A complete 8x8 flat-gray JFIF stream (value 128), assembled
+    marker by marker: one component, all-ones quantization, one-code
+    DC and AC Huffman tables, and a two-bit scan (DC diff 0, EOB).
+    ``sof`` picks the frame marker: 0xC0 baseline, 0xC2 progressive,
+    0xC9 arithmetic sequential (the scan is only valid for 0xC0).
+    The engine has no JPEG decoder; this is the input that checks how
+    the image router handles JPEG bytes."""
+    import struct
+
+    def seg(marker: int, body: bytes) -> bytes:
+        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+    huff_one_symbol = bytes([1] + [0] * 15) + b"\x00"
+    return b"".join([
+        b"\xff\xd8",  # SOI
+        seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
+        seg(0xDB, b"\x00" + b"\x01" * 64),  # DQT 0
+        seg(sof, b"\x08\x00\x08\x00\x08\x01\x01\x11\x00"),
+        seg(0xC4, b"\x00" + huff_one_symbol),  # DC table 0
+        seg(0xC4, b"\x10" + huff_one_symbol),  # AC table 0
+        seg(0xDA, b"\x01\x01\x00\x00\x3f\x00"),  # SOS
+        b"\x3f",  # bits 0 (DC diff 0), 0 (EOB), then 1-padding
+        b"\xff\xd9",  # EOI
+    ])

@@ -16,6 +16,7 @@ import zlib
 
 import numpy as np
 import pytest
+from synthetic import flat_jpeg, sf_tile_rows
 
 from vtshaver_spark.functions.codecs import (
     decode_image,
@@ -26,8 +27,14 @@ from vtshaver_spark.functions.codecs import (
     wav_encode,
 )
 from vtshaver_spark.functions.gif_tiff import gif_encode, tiff_encode
-from vtshaver_spark.functions.jpeg import jpeg_encode
 from vtshaver_spark.functions.webp import webp_encode
+from vtshaver_spark.sources.mvt import (
+    MVTError,
+    _write_varint,
+    decode_geometry,
+    rows_to_tile,
+    tile_to_rows,
+)
 
 # every exception a decoder may legitimately raise on garbage: the
 # explicit validation family plus the unavoidable low-level errors of
@@ -51,7 +58,7 @@ def _streams():
     return {
         "rawi": rawi_encode(img),
         "png": png_encode(img),
-        "jpeg": jpeg_encode(img, quality=90),
+        "jpeg": flat_jpeg(),
         "gif": gif_encode(pal3),
         "tiff": tiff_encode(img),
         "webp": webp_encode(pal3, palette=True),
@@ -134,3 +141,73 @@ def test_mvt_truncation_and_flips():
         except ALLOWED:
             continue
         assert isinstance(rows, list)
+
+
+def _command_stream(geom_type, i):
+    """Packed MVT geometry for feature ``i``: a MoveTo point, a
+    three-vertex LineString or a closed four-vertex Polygon ring."""
+    def zz(n):
+        return (n << 1) ^ (n >> 31)
+
+    x0, y0 = 64 * i % 4000, 4000 - 48 * i % 4000
+    out = bytearray()
+    _write_varint(out, (1 << 3) | 1)  # MoveTo(1)
+    _write_varint(out, zz(x0))
+    _write_varint(out, zz(y0))
+    if geom_type == "Point":
+        return bytes(out)
+    steps = [(30, 0), (0, -30), (-30, 0)][: 2 if geom_type == "LineString" else 3]
+    _write_varint(out, (len(steps) << 3) | 2)  # LineTo(n)
+    for dx, dy in steps:
+        _write_varint(out, zz(dx))
+        _write_varint(out, zz(dy))
+    if geom_type == "Polygon":
+        _write_varint(out, (1 << 3) | 7)  # ClosePath
+    return bytes(out)
+
+
+def _fuzz_tiles():
+    """A raw and a gzip tile of the synthetic SF census: 7 layers,
+    real command-stream geometry, int and string values, and no id on
+    every fifth feature besides the census's own id-less one."""
+    rows = []
+    for i, (_, _, _, layer, fid, geom_type, *_, props, _) in enumerate(sf_tile_rows()):
+        rows.append({
+            "layer": layer,
+            "feature_id": None if i % 5 == 0 else fid,
+            "geom_type": geom_type,
+            "geometry": _command_stream(geom_type, i),
+            "props": props,
+            "prop_types": {
+                k: "int" if v.isdigit() else "string" for k, v in props.items()
+            },
+        })
+    return {"raw": rows_to_tile(rows), "gzip": rows_to_tile(rows, compress=True)}
+
+
+def _check_tile(blob):
+    """Decode ``blob`` and every decoded geometry: each either
+    succeeds or raises MVTError, the one exception decode_tiles'
+    on_error="skip" catches."""
+    try:
+        for r in tile_to_rows(blob):
+            decode_geometry(r["geometry"])
+    except MVTError:
+        pass
+
+
+def test_mvt_truncation_and_flips_in_repo():
+    """Every truncation prefix and seeded one- to three-byte flips of
+    both tiles decode or raise MVTError, and nothing else."""
+    rng = np.random.default_rng(11)
+    for blob in _fuzz_tiles().values():
+        rows = tile_to_rows(blob)
+        assert len({r["layer"] for r in rows}) == 7
+        assert any(r["feature_id"] is None for r in rows)
+        for n in range(len(blob)):
+            _check_tile(blob[:n])
+        for _ in range(1500):
+            mut = bytearray(blob)
+            for pos in rng.integers(0, len(blob), rng.integers(1, 4)):
+                mut[int(pos)] ^= int(rng.integers(1, 256))
+            _check_tile(bytes(mut))

@@ -40,13 +40,15 @@ def test_rawi_rejects_unknown_format():
     # strict decoder: anything non-RAWI points at the sniffing router
     with pytest.raises(ValueError):
         rawi_decode(b"JUNKxxxx")
-    # the router itself: truly unknown formats (no RAWI/PNG magic)
-    # raise NotImplementedError unless PIL is importable
+    # the router itself: formats it cannot decode natively (unknown
+    # magic, or JPEG: the engine has no JPEG decoder) raise
+    # NotImplementedError unless PIL is importable
     from vtshaver_spark.functions.codecs import HAS_PIL, decode_image
 
     if not HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            decode_image(b"JUNKxxxx")
+        for blob in (b"JUNKxxxx", b"\xff\xd8\xff\xd9"):
+            with pytest.raises(NotImplementedError):
+                decode_image(blob)
 
 
 def test_resize_psnr():

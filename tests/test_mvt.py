@@ -22,6 +22,7 @@ from vtshaver_spark.sources.mvt import (
     decode_tile_points,
     decode_tiles,
     encode_tiles_mvt,
+    register_sql_functions,
     rows_to_tile,
     tile_to_rows,
 )
@@ -475,8 +476,6 @@ def test_decode_geometry_malformed():
 
 def test_mvt_features_udtf(spark):
     # SQL-surface access to the codec: LATERAL mvt_features(tile)
-    from vtshaver_spark.sources.mvt import register_sql_functions
-
     register_sql_functions(spark)
     with open(SF_TILE, "rb") as f:
         blob = f.read()
@@ -647,6 +646,15 @@ def test_null_tile_is_mvterror(spark):
     assert {r["x"] for r in out} == {1}
     with pytest.raises(Exception, match="MVTError: tile is null"):
         decode_tile_points(tiles).collect()
+    # the SQL UDTF yields decode_tiles' rows and fails the same way
+    register_sql_functions(spark)
+    udtf_sql = "SELECT t.z, t.x, t.y, f.* FROM {t} t, LATERAL mvt_features(t.tile) f"
+    good = tiles.where("tile IS NOT NULL")
+    udtf_rows = spark.sql(udtf_sql, t=good).collect()
+    assert len(udtf_rows) == 3
+    assert sorted(udtf_rows) == sorted(decode_tiles(good).collect())
+    with pytest.raises(Exception, match="MVTError: tile is null"):
+        spark.sql(udtf_sql, t=tiles).collect()
 
 
 def test_uint64_feature_id_roundtrips_through_spark(spark):

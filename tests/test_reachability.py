@@ -79,3 +79,32 @@ def test_every_engine_module_is_reached():
     seen, modules = reached_modules()
     unreached = sorted(modules - seen)
     assert not unreached, f"only tests import: {', '.join(unreached)}"
+
+
+def test_no_dangling_engine_imports():
+    """Every absolute ``import vtshaver_spark.X`` and ``from
+    vtshaver_spark.X import ...``, function-local ones included,
+    names a module file. The walk above skips names that resolve to
+    no module, so a lazy import of a deleted module inside a kernel
+    would otherwise surface only when the kernel runs."""
+    modules = package_modules()
+    paths = [path for path, _ in modules.values()]
+    for pattern in ROOT_FILES + ("tests/**/*.py",):
+        paths += glob.glob(os.path.join(REPO, pattern), recursive=True)
+    dangling = []
+    for path in sorted(set(paths)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [alias.name for alias in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                names = [node.module]
+            else:
+                continue
+            dangling += [
+                f"{os.path.relpath(path, REPO)}:{node.lineno} {name}"
+                for name in names
+                if name.split(".")[0] == PKG and name not in modules
+            ]
+    assert not dangling, "imports of no module: " + ", ".join(dangling)

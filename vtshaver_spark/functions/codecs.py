@@ -10,12 +10,12 @@ numpy — chunk parsing with CRC verification, all five scanline
 filters, gray/RGB/palette/alpha color types), so the most common
 lossless interchange format needs no third-party libs. The engine's
 own ``RAWI`` format (12-byte header + uint8 RGB payload) remains the
-zero-cost test interchange. JPEG (baseline AND progressive), GIF
-(real LZW, frames, interlace) and baseline TIFF (gray/RGB/palette,
-PackBits) also decode natively (functions/jpeg.py,
-functions/gif_tiff.py); remaining formats (WebP, JPEG 2000, ...)
-fall back to PIL when importable and raise NotImplementedError
-otherwise — ``decode_image`` is the sniffing router.
+zero-cost test interchange. GIF (real LZW, frames, interlace),
+baseline TIFF (gray/RGB/palette, PackBits) and WebP-lossless also
+decode natively (functions/gif_tiff.py, functions/webp.py); there is
+no JPEG decoder. Remaining formats (JPEG, lossy WebP, ...) fall back
+to PIL when importable and raise NotImplementedError otherwise —
+``decode_image`` is the sniffing router.
 """
 
 from __future__ import annotations
@@ -73,7 +73,7 @@ def is_gzip(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# RAWI image codec (deterministic; stands in for PNG/JPEG in-container)
+# RAWI image codec (deterministic; the in-container test interchange)
 # ---------------------------------------------------------------------------
 
 def rawi_encode(arr: np.ndarray) -> bytes:
@@ -367,18 +367,15 @@ def png_decode(b: bytes, max_pixels: int = 1 << 26) -> np.ndarray:
 
 def decode_image(b: bytes) -> np.ndarray:
     """Sniff-and-decode an image blob to (h, w, 3) uint8 RGB.
-    RAWI, PNG and baseline JPEG decode natively (no third-party
-    libs); anything else falls back to PIL when present, else raises
-    NotImplementedError naming the missing capability."""
+    RAWI, PNG, GIF, TIFF and WebP-lossless decode natively (no
+    third-party libs); anything else, JPEG included, falls back to PIL
+    when present, else raises NotImplementedError naming the missing
+    capability."""
     b = bytes(b)
     if b[:4] == RAWI_MAGIC:
         return rawi_decode(b)
     if b[:8] == PNG_MAGIC:
         return png_decode(b)
-    if b[:2] == b"\xff\xd8":
-        from vtshaver_spark.functions.jpeg import jpeg_decode
-
-        return jpeg_decode(b)
     if b[:6] in (b"GIF87a", b"GIF89a"):
         from vtshaver_spark.functions.gif_tiff import gif_decode
 
@@ -404,7 +401,7 @@ def decode_image(b: bytes) -> np.ndarray:
 
         return np.asarray(Image.open(io.BytesIO(b)).convert("RGB"))
     raise NotImplementedError(
-        "unrecognized image format (not RAWI/PNG/JPEG/GIF/TIFF/"
+        "unrecognized image format (not RAWI/PNG/GIF/TIFF/"
         "WebP-lossless) and PIL is unavailable"
     )
 

@@ -2,10 +2,10 @@
 
 Closes the last named image-format gap (r4 VERDICT: "WebP stays
 PIL-gated"): the engine's ``decode_image`` router now handles RAWI,
-PNG, JPEG (baseline + progressive), GIF, TIFF and WebP-lossless with
-zero third-party dependencies. Same edge discipline as every codec
-here — bytes are touched only inside Arrow-batched kernels after
-relational pruning (the reference keeps codecs at the pipeline edges,
+PNG, GIF, TIFF and WebP-lossless with zero third-party dependencies.
+Same edge discipline as every codec here — bytes are touched only
+inside Arrow-batched kernels after relational pruning (the reference
+keeps codecs at the pipeline edges,
 /root/reference/src/shave.cpp:242-247).
 
 Everything implements the PUBLIC WebP Lossless Bitstream Specification
@@ -29,8 +29,8 @@ Everything implements the PUBLIC WebP Lossless Bitstream Specification
 
 Lossless means the tests pin EXACT array equality through every
 feature combination; entropy loops are per-pixel Python (fine at
-kernel/test scale — the same contract as the GIF LZW and JPEG entropy
-layers, swappable for a native codec behind decode_image()).
+kernel/test scale — the same contract as the GIF LZW layer, swappable
+for a native codec behind decode_image()).
 """
 
 from __future__ import annotations
@@ -135,9 +135,9 @@ class _LSBWriter:
 
 
 class _PrefixDecoder:
-    """Canonical decode via per-length min/max ranges (same scheme as
-    the JPEG decoder, lengths up to 15). A zero-bit decoder (single
-    symbol) returns that symbol without consuming input."""
+    """Canonical decode via per-length min/max ranges (lengths up to
+    15). A zero-bit decoder (single symbol) returns that symbol
+    without consuming input."""
 
     def __init__(self, lengths):
         self.single = None

@@ -2,11 +2,12 @@
 
 Opaque ``binary`` columns + typed metadata, processed with
 ``mapInPandas`` kernels (Arrow batches, vectorized numpy inside — no
-per-row Python objects beyond the unavoidable bytes). PNG decodes
-natively (functions/codecs.py — pure stdlib zlib + numpy, no PIL);
-lossy formats (JPEG/audio/video containers) are stubbed behind
-import-tries. The engine's RAWI interchange format keeps the full
-pipeline executable and testable at zero codec cost:
+per-row Python objects beyond the unavoidable bytes). PNG and the
+other lossless image formats decode natively (functions/codecs.py —
+pure stdlib zlib + numpy, no PIL); no lossy image codec is native:
+JPEG and lossy WebP decode only through PIL when it is importable.
+The engine's RAWI interchange format keeps the full pipeline
+executable and testable at zero codec cost:
 
     generate -> decode -> feature-extract -> resize -> re-encode -> verify (PSNR)
 
@@ -220,18 +221,9 @@ def resize_images(
     out_w: int,
     out_h: int,
     bytes_col: str = "bytes",
-    jpeg_quality: int = 98,
 ) -> DataFrame:
     """Nearest-neighbor resize, bytes -> bytes (keeps schema, updates
-    w/h).
-
-    ``jpeg_quality`` controls the lossy re-encode on the
-    JPEG-preserving branch. The default (98) is the lowest Annex-K
-    quality at which a decode->re-encode round-trip of the synthetic
-    fixture corpus stays above the BASELINE.json per-row invariant of
-    PSNR >= 40 dB (measured: q=98 -> 44.5 dB, q=95 -> 36.8 dB on
-    synth_image; tests/test_jpeg.py pins the gate). Lower it only for
-    pipelines that do not need the reference-parity invariant."""
+    w/h)."""
     schema = df.schema
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -240,16 +232,11 @@ def resize_images(
                 continue
             pdf = pdf.copy()
             def _resized(b):
-                # format-preserving: PNG in -> PNG out, JPEG in ->
-                # JPEG out, WebP-lossless in -> WebP-lossless out,
-                # else RAWI
+                # format-preserving: PNG in -> PNG out,
+                # WebP-lossless in -> WebP-lossless out, else RAWI
                 arr = resize_nearest(decode_image(b), out_w, out_h)
                 if bytes(b[:8]) == PNG_MAGIC:
                     return png_encode(arr)
-                if bytes(b[:2]) == b"\xff\xd8":
-                    from vtshaver_spark.functions.jpeg import jpeg_encode
-
-                    return jpeg_encode(arr, quality=jpeg_quality)
                 if bytes(b[:4]) == b"RIFF" and bytes(b[8:12]) == b"WEBP" \
                         and bytes(b[12:16]) == b"VP8L":
                     from vtshaver_spark.functions.webp import webp_encode

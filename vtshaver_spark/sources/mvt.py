@@ -758,9 +758,8 @@ def register_sql_functions(spark) -> None:
     @udtf(returnType=MVT_ROW_SCHEMA)
     class MvtFeatures:
         def eval(self, tile):
-            if tile is None:
-                return
-            for r in tile_to_rows(bytes(tile)):
+            # a null tile raises MVTError, as decode_tiles does
+            for r in tile_to_rows(None if tile is None else bytes(tile)):
                 yield (
                     r["layer"],
                     r["layer_version"],
