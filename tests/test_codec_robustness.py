@@ -26,7 +26,6 @@ from vtshaver_spark.functions.codecs import (
     wav_decode,
     wav_encode,
 )
-from vtshaver_spark.functions.gif_tiff import gif_encode, tiff_encode
 from vtshaver_spark.functions.webp import webp_encode
 from vtshaver_spark.sources.mvt import (
     MVTError,
@@ -59,8 +58,6 @@ def _streams():
         "rawi": rawi_encode(img),
         "png": png_encode(img),
         "jpeg": flat_jpeg(),
-        "gif": gif_encode(pal3),
-        "tiff": tiff_encode(img),
         "webp": webp_encode(pal3, palette=True),
         "webp_pred": webp_encode(img, predictor=2, cache_bits=4),
     }

@@ -1,6 +1,7 @@
-"""Multimodal pipeline: generate -> decode -> resize -> verify (PSNR),
-plus codec unit checks. The RAWI codec is fully real; PIL-backed
-format decode is stubbed (import-gated) per the container constraints."""
+"""Multimodal pipeline: generate -> decode -> feature-extract, video
+frame sampling, plus codec unit checks. The RAWI codec is fully real;
+PIL-backed format decode is stubbed (import-gated) per the container
+constraints."""
 
 import numpy as np
 import pytest
@@ -23,8 +24,6 @@ from vtshaver_spark.operators.multimodal import (
     generate_image_bytes,
     generate_variant_images,
     phash_fingerprints,
-    resize_images,
-    verify_roundtrip_psnr,
 )
 
 
@@ -41,12 +40,18 @@ def test_rawi_rejects_unknown_format():
     with pytest.raises(ValueError):
         rawi_decode(b"JUNKxxxx")
     # the router itself: formats it cannot decode natively (unknown
-    # magic, or JPEG: the engine has no JPEG decoder) raise
-    # NotImplementedError unless PIL is importable
+    # magic, or JPEG/GIF/TIFF: the engine has no decoder for them)
+    # raise NotImplementedError unless PIL is importable
     from vtshaver_spark.functions.codecs import HAS_PIL, decode_image
 
     if not HAS_PIL:
-        for blob in (b"JUNKxxxx", b"\xff\xd8\xff\xd9"):
+        for blob in (
+            b"JUNKxxxx",
+            b"\xff\xd8\xff\xd9",
+            b"GIF89a\x01\x00\x01\x00\x00\x00\x00;",
+            b"II*\x00\x08\x00\x00\x00\x00\x00",
+            b"MM\x00*\x00\x00\x00\x08\x00\x00",
+        ):
             with pytest.raises(NotImplementedError):
                 decode_image(blob)
 
@@ -103,22 +108,6 @@ def test_decode_features(spark, images):
         assert r["phash_check"] == gen[r["image_id"]]
 
 
-def test_resize_and_psnr_gate(spark, images):
-    resized = resize_images(images, 32, 32).select(
-        "image_id", F.col("bytes").alias("bytes_small")
-    )
-    up = resize_images(
-        resized.withColumnRenamed("bytes_small", "bytes"), 64, 64
-    ).select("image_id", F.col("bytes").alias("bytes2"))
-    # identity round-trip: PSNR must be inf (reported 999) — the
-    # lossless gate from BASELINE.json input_hint
-    ident = verify_roundtrip_psnr(
-        images.select("image_id", "bytes").withColumn("bytes2", F.col("bytes"))
-    ).collect()
-    assert all(r["psnr_db"] == 999.0 for r in ident)
-    assert up.count() == 20
-
-
 def test_frame_sample(spark):
     frames = [rawi_encode(synth_image(f"f{i}", 8, 8)) for i in range(6)]
     video = b"".join(frames)
@@ -126,6 +115,17 @@ def test_frame_sample(spark):
     out = frame_sample(df, every_n=2).collect()
     assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] == [0, 2, 4]
     assert all(bytes(r["bytes"])[:4] == b"RAWI" for r in out)
+
+    # a cut-off last frame and a non-RAWI blob raise, naming the video
+    # id and the byte offset, instead of yielding short or garbage frames
+    video3 = b"".join(frames[:3])
+    for vid, blob, where in (
+        ("cut", video3[:-100], f"frame at byte {2 * len(frames[0])} needs"),
+        ("png", b"\x89PNG\r\n\x1a\n" + bytes(28), "no RAWI frame header at byte 0"),
+    ):
+        df = spark.createDataFrame([(vid, blob)], "video_id string, video_bytes binary")
+        with pytest.raises(Exception, match=f"ValueError: video '{vid}': {where}"):
+            frame_sample(df, every_n=2).collect()
 
 
 def test_generate_video_bytes_closed_form(spark):

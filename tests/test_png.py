@@ -241,13 +241,9 @@ def test_truncated_pass_data_rejected():
 
 def test_router_and_spark_pipeline_png(spark):
     """PNG blobs must flow through the SAME multimodal operators as
-    RAWI: identical phash (it is computed on decoded pixels), and
-    resize_images stays format-preserving (PNG in -> PNG out)."""
+    RAWI: identical phash (it is computed on decoded pixels)."""
     from vtshaver_spark.functions.codecs import rawi_encode
-    from vtshaver_spark.operators.multimodal import (
-        phash_fingerprints,
-        resize_images,
-    )
+    from vtshaver_spark.operators.multimodal import phash_fingerprints
 
     arrs = {f"i{i}": synth_image(f"i{i}", 24 + i, 18 + i) for i in range(4)}
     rows = [(k, png_encode(a)) for k, a in arrs.items()] + [
@@ -258,11 +254,3 @@ def test_router_and_spark_pipeline_png(spark):
     fps = {r["image_id"]: r["phash"] for r in phash_fingerprints(df).collect()}
     for k in arrs:
         assert fps[k] == fps[k + "_rawi"], k
-
-    out = {r["image_id"]: bytes(r["bytes"])
-           for r in resize_images(df, 8, 8).select("image_id", "bytes").collect()}
-    for k in arrs:
-        assert out[k][:8] == PNG_MAGIC
-        assert out[k + "_rawi"][:4] == b"RAWI"
-        assert np.array_equal(decode_image(out[k]), decode_image(out[k + "_rawi"]))
-        assert decode_image(out[k]).shape == (8, 8, 3)

@@ -168,7 +168,6 @@ def _eval_legacy(filt, row):
     return {"<": num < other, "<=": num <= other, ">": num > other, ">=": num >= other}[op]
 
 
-@pytest.mark.slow
 def test_legacy_filter_truth_tables(spark):
     from pyspark.sql import functions as F
 

@@ -5,6 +5,7 @@ the tools and the bench scripts. A module only tests reach is dead weight;
 this walk names it. Spark-free: it reads the sources with ``ast``."""
 
 import ast
+import functools
 import glob
 import os
 
@@ -81,12 +82,40 @@ def test_every_engine_module_is_reached():
     assert not unreached, f"only tests import: {', '.join(unreached)}"
 
 
+@functools.lru_cache(maxsize=None)
+def bound_names(path):
+    """Names a module binds at top level: defs, classes, assignment
+    targets and imports, also inside top-level ``if``/``try``/``with``
+    blocks, plus the keys of a ``_LAZY`` map (PEP 562 lazy names)."""
+    with open(path) as f:
+        todo = list(ast.parse(f.read(), path).body)
+    names = set()
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                names.update(n.id for n in ast.walk(target) if isinstance(n, ast.Name))
+                if isinstance(target, ast.Name) and target.id == "_LAZY":
+                    names.update(ast.literal_eval(node.value))
+        else:
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                for child in getattr(node, field, ()):
+                    todo += child.body if isinstance(child, ast.ExceptHandler) else [child]
+    return names
+
+
 def test_no_dangling_engine_imports():
     """Every absolute ``import vtshaver_spark.X`` and ``from
-    vtshaver_spark.X import ...``, function-local ones included,
-    names a module file. The walk above skips names that resolve to
-    no module, so a lazy import of a deleted module inside a kernel
-    would otherwise surface only when the kernel runs."""
+    vtshaver_spark.X import a``, function-local ones included, names a
+    module file, and X binds ``a`` at top level or has a submodule
+    ``a``. The walk above skips names that resolve to no module, so a
+    lazy import of a deleted module or function inside a kernel would
+    otherwise surface only when the kernel runs."""
     modules = package_modules()
     paths = [path for path, _ in modules.values()]
     for pattern in ROOT_FILES + ("tests/**/*.py",):
@@ -99,7 +128,16 @@ def test_no_dangling_engine_imports():
             if isinstance(node, ast.Import):
                 names = [alias.name for alias in node.names]
             elif isinstance(node, ast.ImportFrom) and not node.level:
-                names = [node.module]
+                mod = node.module
+                if mod not in modules:
+                    names = [mod]
+                else:
+                    bound = bound_names(modules[mod][0])
+                    names = [
+                        f"{mod}.{alias.name}"
+                        for alias in node.names
+                        if alias.name not in bound
+                    ]
             else:
                 continue
             dangling += [
@@ -107,4 +145,4 @@ def test_no_dangling_engine_imports():
                 for name in names
                 if name.split(".")[0] == PKG and name not in modules
             ]
-    assert not dangling, "imports of no module: " + ", ".join(dangling)
+    assert not dangling, "imports of nothing: " + ", ".join(dangling)

@@ -427,18 +427,6 @@ def test_router_does_not_confuse_wav_riff():
         decode_image(wav)
 
 
-def test_resize_preserves_webp(spark):
-    from vtshaver_spark.operators.multimodal import resize_images
-
-    arr = _grad(32, 24)
-    df = spark.createDataFrame(
-        [("a", webp_encode(arr))], "image_id string, bytes binary"
-    )
-    out = bytes(resize_images(df, 12, 10).collect()[0]["bytes"])
-    assert out[:4] == b"RIFF" and out[12:16] == b"VP8L"
-    assert webp_decode(out).shape == (10, 12, 4)
-
-
 @pytest.mark.skipif(not HAS_PIL, reason="PIL not installed")
 def test_pil_cross_decoder_parity():
     """Wire-level interop when libwebp (PIL) is present: our bytes

@@ -10,12 +10,11 @@ numpy — chunk parsing with CRC verification, all five scanline
 filters, gray/RGB/palette/alpha color types), so the most common
 lossless interchange format needs no third-party libs. The engine's
 own ``RAWI`` format (12-byte header + uint8 RGB payload) remains the
-zero-cost test interchange. GIF (real LZW, frames, interlace),
-baseline TIFF (gray/RGB/palette, PackBits) and WebP-lossless also
-decode natively (functions/gif_tiff.py, functions/webp.py); there is
-no JPEG decoder. Remaining formats (JPEG, lossy WebP, ...) fall back
-to PIL when importable and raise NotImplementedError otherwise —
-``decode_image`` is the sniffing router.
+zero-cost test interchange. WebP-lossless also decodes natively
+(functions/webp.py); there is no JPEG, GIF or TIFF decoder. Remaining
+formats (JPEG, GIF, TIFF, lossy WebP, ...) fall back to PIL when
+importable and raise NotImplementedError otherwise — ``decode_image``
+is the sniffing router.
 """
 
 from __future__ import annotations
@@ -316,7 +315,7 @@ def png_decode(b: bytes, max_pixels: int = 1 << 26) -> np.ndarray:
     if color == 3 and plte is None:
         raise ValueError("palette PNG missing PLTE")
     ch = _PNG_CHANNELS[color]
-    # decompression-bomb guards (same contract as the GIF canvas cap):
+    # decompression-bomb guards:
     # corrupt IHDR dims must not drive a multi-GB canvas allocation,
     # and IDAT must not inflate past the exact scanline budget — the
     # expected size is computable from the header, so decompress with
@@ -367,23 +366,15 @@ def png_decode(b: bytes, max_pixels: int = 1 << 26) -> np.ndarray:
 
 def decode_image(b: bytes) -> np.ndarray:
     """Sniff-and-decode an image blob to (h, w, 3) uint8 RGB.
-    RAWI, PNG, GIF, TIFF and WebP-lossless decode natively (no
-    third-party libs); anything else, JPEG included, falls back to PIL
-    when present, else raises NotImplementedError naming the missing
-    capability."""
+    RAWI, PNG and WebP-lossless decode natively (no third-party
+    libs); anything else, JPEG, GIF and TIFF included, falls back to
+    PIL when present, else raises NotImplementedError naming the
+    missing capability."""
     b = bytes(b)
     if b[:4] == RAWI_MAGIC:
         return rawi_decode(b)
     if b[:8] == PNG_MAGIC:
         return png_decode(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from vtshaver_spark.functions.gif_tiff import gif_decode
-
-        return gif_decode(b)
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        from vtshaver_spark.functions.gif_tiff import tiff_decode
-
-        return tiff_decode(b)
     if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
         if b[12:16] == b"VP8L":
             from vtshaver_spark.functions.webp import webp_decode
@@ -401,8 +392,8 @@ def decode_image(b: bytes) -> np.ndarray:
 
         return np.asarray(Image.open(io.BytesIO(b)).convert("RGB"))
     raise NotImplementedError(
-        "unrecognized image format (not RAWI/PNG/GIF/TIFF/"
-        "WebP-lossless) and PIL is unavailable"
+        "unrecognized image format (not RAWI/PNG/WebP-lossless) "
+        "and PIL is unavailable"
     )
 
 

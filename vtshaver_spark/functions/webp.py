@@ -1,8 +1,8 @@
 """WebP lossless (VP8L) codec — pure stdlib + numpy, no libwebp/PIL.
 
 Closes the last named image-format gap (r4 VERDICT: "WebP stays
-PIL-gated"): the engine's ``decode_image`` router now handles RAWI,
-PNG, GIF, TIFF and WebP-lossless with zero third-party dependencies.
+PIL-gated"): the engine's ``decode_image`` router handles RAWI, PNG
+and WebP-lossless with zero third-party dependencies.
 Same edge discipline as every codec here — bytes are touched only
 inside Arrow-batched kernels after relational pruning (the reference
 keeps codecs at the pipeline edges,
@@ -29,8 +29,8 @@ Everything implements the PUBLIC WebP Lossless Bitstream Specification
 
 Lossless means the tests pin EXACT array equality through every
 feature combination; entropy loops are per-pixel Python (fine at
-kernel/test scale — the same contract as the GIF LZW layer, swappable
-for a native codec behind decode_image()).
+kernel/test scale, swappable for a native codec behind
+decode_image()).
 """
 
 from __future__ import annotations

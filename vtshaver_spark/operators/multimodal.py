@@ -2,14 +2,13 @@
 
 Opaque ``binary`` columns + typed metadata, processed with
 ``mapInPandas`` kernels (Arrow batches, vectorized numpy inside — no
-per-row Python objects beyond the unavoidable bytes). PNG and the
-other lossless image formats decode natively (functions/codecs.py —
-pure stdlib zlib + numpy, no PIL); no lossy image codec is native:
-JPEG and lossy WebP decode only through PIL when it is importable.
-The engine's RAWI interchange format keeps the full pipeline
-executable and testable at zero codec cost:
+per-row Python objects beyond the unavoidable bytes). PNG and
+WebP-lossless decode natively (functions/codecs.py — pure stdlib zlib
++ numpy, no PIL); JPEG, GIF, TIFF and lossy WebP decode only through
+PIL when it is importable. The engine's RAWI interchange format keeps
+the full pipeline executable and testable at zero codec cost:
 
-    generate -> decode -> feature-extract -> resize -> re-encode -> verify (PSNR)
+    generate -> decode -> feature-extract (mean RGB, luma, phash)
 
 Scale notes: kernels are placed AFTER all relational pruning (decode-
 last discipline, mirroring the reference's layer-prune-before-feature-
@@ -20,6 +19,7 @@ bytes-per-image x batch, independent of partition row count.
 
 from __future__ import annotations
 
+import struct
 from typing import Iterator
 
 import numpy as np
@@ -29,11 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vtshaver_spark.functions.codecs import (
-    PNG_MAGIC,
+    RAWI_MAGIC,
     decode_image,
-    png_encode,
-    psnr,
-    rawi_decode,
     rawi_encode,
     resize_nearest,
     synth_gradient_image,
@@ -216,44 +213,6 @@ def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     return df.mapInPandas(kernel, schema=schema)
 
 
-def resize_images(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Nearest-neighbor resize, bytes -> bytes (keeps schema, updates
-    w/h)."""
-    schema = df.schema
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.copy()
-            def _resized(b):
-                # format-preserving: PNG in -> PNG out,
-                # WebP-lossless in -> WebP-lossless out, else RAWI
-                arr = resize_nearest(decode_image(b), out_w, out_h)
-                if bytes(b[:8]) == PNG_MAGIC:
-                    return png_encode(arr)
-                if bytes(b[:4]) == b"RIFF" and bytes(b[8:12]) == b"WEBP" \
-                        and bytes(b[12:16]) == b"VP8L":
-                    from vtshaver_spark.functions.webp import webp_encode
-
-                    return webp_encode(arr)
-                return rawi_encode(arr)
-
-            pdf[bytes_col] = [_resized(b) for b in pdf[bytes_col]]
-            if "w" in pdf.columns:
-                pdf["w"] = np.int32(out_w)
-            if "h" in pdf.columns:
-                pdf["h"] = np.int32(out_h)
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
 def frame_sample(
     df: DataFrame,
     every_n: int = 2,
@@ -262,15 +221,14 @@ def frame_sample(
 ) -> DataFrame:
     """Video frame sampling: emit every n-th frame as its own row.
 
-    Two container formats demux NATIVELY (r5): RAWI concatenations
-    (the deterministic test interchange) and animated GIF — a real
-    multi-frame wire format, decoded end-to-end by our own LZW/
-    compositing decoder (functions/gif_tiff.gif_frames); sampled GIF
-    frames are re-encoded as RAWI so every downstream stage (phash,
-    decode_features) sees one uniform frame format. Codec-bearing
-    containers (mp4/webm) would need libav — they raise through
-    decode_image's capability gate; the batching/explode shape is
-    identical either way."""
+    The one container demuxed is a RAWI concatenation (the
+    deterministic interchange ``generate_video_bytes`` writes): each
+    frame is a 12-byte ``RAWI`` header (magic, u32le w, u32le h) and
+    ``w*h*3`` RGB bytes. A frame without the magic, with a short
+    header or with a payload past the end of the blob raises
+    ValueError naming the video id and the frame's byte offset, so
+    other containers (GIF, mp4, ...) and truncated videos fail instead
+    of yielding garbage frames."""
     schema = T.StructType(
         [
             T.StructField(id_col, T.StringType()),
@@ -280,26 +238,25 @@ def frame_sample(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from vtshaver_spark.functions.gif_tiff import GIF_MAGICS, gif_frames
-
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for vid, blob in zip(pdf[id_col], pdf[video_col]):
                 blob = bytes(blob)
-                if blob[:6] in GIF_MAGICS:
-                    for i, arr in enumerate(gif_frames(blob)):
-                        if i % every_n == 0:
-                            ids.append(vid)
-                            idxs.append(i)
-                            frames.append(rawi_encode(arr))
-                    continue
                 off = 0
                 i = 0
                 while off < len(blob):
-                    import struct as _s
-
-                    w, h = _s.unpack("<II", blob[off + 4 : off + 12])
+                    head = blob[off : off + 12]
+                    if len(head) < 12 or head[:4] != RAWI_MAGIC:
+                        raise ValueError(
+                            f"video {vid!r}: no RAWI frame header at byte {off}"
+                        )
+                    w, h = struct.unpack("<II", head[4:])
                     size = 12 + w * h * 3
+                    if off + size > len(blob):
+                        raise ValueError(
+                            f"video {vid!r}: frame at byte {off} needs "
+                            f"{size} bytes, {len(blob) - off} left"
+                        )
                     if i % every_n == 0:
                         ids.append(vid)
                         idxs.append(i)
@@ -444,27 +401,3 @@ def audio_features(
 
     return df.mapInPandas(kernel, schema=schema)
 
-
-def verify_roundtrip_psnr(
-    df: DataFrame, original_col: str = "bytes", decoded_col: str = "bytes2"
-) -> DataFrame:
-    """Per-row decoded-pixel PSNR between two byte columns (the
-    BASELINE.json invariant: PSNR >= 40 dB for lossy round-trips;
-    lossless paths give inf, reported as 999.0)."""
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("psnr_db", T.DoubleType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = []
-            for a, b in zip(pdf[original_col], pdf[decoded_col]):
-                p = psnr(decode_image(a), decode_image(b))
-                vals.append(999.0 if p == float("inf") else p)
-            pdf = pdf.copy()
-            pdf["psnr_db"] = vals
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
