@@ -326,3 +326,55 @@ def flat_jpeg(sof: int = 0xC0) -> bytes:
         b"\x3f",  # bits 0 (DC diff 0), 0 (EOB), then 1-padding
         b"\xff\xd9",  # EOI
     ])
+
+
+def flat_gif() -> bytes:
+    """A complete 8x8 flat-gray GIF89a stream (value 128): a two-entry
+    global color table and one image whose 64 LZW codes are all index
+    0. A Clear code precedes every pair of literals, so the code width
+    stays at its initial 3 bits and no dictionary entry is ever used.
+    The engine has no GIF decoder; this is the input that checks how
+    the image router handles GIF bytes."""
+    import struct
+
+    clear, eoi, width = 4, 5, 3
+    codes = [clear, 0, 0] * 32 + [eoi]
+    acc = sum(c << (i * width) for i, c in enumerate(codes))
+    data = acc.to_bytes((len(codes) * width + 7) // 8, "little")
+    return b"".join([
+        b"GIF89a",
+        struct.pack("<HHBBB", 8, 8, 0x80, 0, 0),  # 2-entry global table
+        b"\x80\x80\x80\x00\x00\x00",
+        b"\x2c" + struct.pack("<HHHHB", 0, 0, 8, 8, 0),  # image descriptor
+        b"\x02",  # LZW minimum code size
+        bytes([len(data)]) + data + b"\x00",  # one sub-block, terminator
+        b"\x3b",  # trailer
+    ])
+
+
+def flat_tiff() -> bytes:
+    """A complete 8x8 flat-gray little-endian baseline TIFF (value
+    128): one uncompressed 8-bit BlackIsZero strip after a nine-entry
+    IFD. The engine has no TIFF decoder; this is the input that checks
+    how the image router handles TIFF bytes."""
+    import struct
+
+    short, long_ = 3, 4
+    entries = [
+        (256, short, 8),  # ImageWidth
+        (257, short, 8),  # ImageLength
+        (258, short, 8),  # BitsPerSample
+        (259, short, 1),  # Compression: none
+        (262, short, 1),  # PhotometricInterpretation: BlackIsZero
+        (273, long_, 8 + 2 + 9 * 12 + 4),  # StripOffsets: after the IFD
+        (277, short, 1),  # SamplesPerPixel
+        (278, short, 8),  # RowsPerStrip
+        (279, long_, 64),  # StripByteCounts
+    ]
+    ifd = struct.pack("<H", len(entries)) + b"".join(
+        struct.pack("<HHI", tag, typ, 1)
+        + (struct.pack("<HH", val, 0) if typ == short
+           else struct.pack("<I", val))
+        for tag, typ, val in entries
+    ) + struct.pack("<I", 0)  # no next IFD
+    return b"II*\x00" + struct.pack("<I", 8) + ifd + b"\x80" * 64

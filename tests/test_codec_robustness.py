@@ -16,7 +16,7 @@ import zlib
 
 import numpy as np
 import pytest
-from synthetic import flat_jpeg, sf_tile_rows
+from synthetic import flat_gif, flat_jpeg, flat_tiff, sf_tile_rows
 
 from vtshaver_spark.functions.codecs import (
     decode_image,
@@ -58,6 +58,8 @@ def _streams():
         "rawi": rawi_encode(img),
         "png": png_encode(img),
         "jpeg": flat_jpeg(),
+        "gif": flat_gif(),
+        "tiff": flat_tiff(),
         "webp": webp_encode(pal3, palette=True),
         "webp_pred": webp_encode(img, predictor=2, cache_bits=4),
     }
