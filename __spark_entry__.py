@@ -400,7 +400,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         register_views(spark, sf_dir)
         pts = spark.table("images_v").filter(F.col("k") % 97 == 0)
         lms = spark.table("landmarks_v")
-        out = knn_join_broadcast(pts, lms, k=3, metric="sqdeg")
+        out = knn_join_broadcast(pts, lms, k=3)
         return out.select(
             "image_id",
             "rank",

@@ -581,8 +581,9 @@ The structural findings (isolation-probed, then confirmed in-suite):
 ## Round-5 sessions (2026-08-18): s2 goes JVM, two harness artifacts rooted out
 
 The S2 encode was re-expressed as pure JVM Column math (functions/
-s2.py with_s2_cell_col — the Hilbert loop unrolled into materialized
-column steps; bit-parity with the numpy kernel pinned), removing the
+s2.py with_s2_cell_col, now with_s2_cell — the Hilbert loop unrolled
+into materialized column steps; bit-parity with the numpy kernel
+pinned), removing the
 Arrow transport floor entirely. Chasing its scaling number then
 exposed TWO harness artifacts that had nothing to do with the plan:
 

@@ -135,8 +135,6 @@ def test_s2_column_matches_numpy(spark):
     routing, quadratic st, truncating ij, unrolled Hilbert — across a
     deterministic global sweep including face boundaries and poles,
     at a mid level and at full level 30 (deepest unroll)."""
-    from vtshaver_spark.functions.s2 import with_s2_cell_col
-
     lons = np.array(
         [(-180.0 + (i * 360.0 * 0.6180339887) % 360.0) for i in range(400)]
         + [0.0, 90.0, 180.0, -90.0, -180.0, 45.0, -45.0]
@@ -153,7 +151,7 @@ def test_s2_column_matches_numpy(spark):
         want = s2_cell_id_np(lons, lats, level=level)
         got = {
             r["id"]: r["cell_s2"]
-            for r in with_s2_cell_col(df, level=level).collect()
+            for r in with_s2_cell(df, level=level).collect()
         }
         assert [got[i] for i in range(len(lons))] == want.tolist()
 
@@ -163,10 +161,6 @@ def test_s2_column_out_replacement_and_temp_collision(spark):
     withColumn contract the r6 SQL-string builder has to preserve),
     and input columns colliding with the _s2* temporaries must raise
     instead of being silently consumed."""
-    import pytest as _pytest
-
-    from vtshaver_spark.functions.s2 import with_s2_cell, with_s2_cell_col
-
     df = spark.createDataFrame(
         [("a", -122.4, 37.77)], "id string, lon double, lat double"
     )
@@ -178,20 +172,18 @@ def test_s2_column_out_replacement_and_temp_collision(spark):
         twice.select("cell_s2").first()[0]
         == direct.select("cell_s2").first()[0]
     )
-    with _pytest.raises(ValueError, match="_s2x"):
-        with_s2_cell_col(df.withColumnRenamed("id", "_s2x"), level=10)
+    with pytest.raises(ValueError, match="_s2x"):
+        with_s2_cell(df.withColumnRenamed("id", "_s2x"), level=10)
 
 
 def test_s2_column_plan_is_codegen(spark):
     """Plan contract for the Column path: no Arrow/Python eval node
     anywhere — the encode must live inside WholeStageCodegen."""
-    from vtshaver_spark.functions.s2 import with_s2_cell_col
-
     df = spark.range(4).selectExpr(
         "CAST(id AS DOUBLE) AS lon", "CAST(id AS DOUBLE) AS lat"
     )
     plan = (
-        with_s2_cell_col(df, level=10)
+        with_s2_cell(df, level=10)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -5,14 +5,9 @@ constraints."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from vtshaver_spark.functions.codecs import (
     HAS_PIL,
-    gzip_udf,
-    gunzip_udf,
-    is_gzip,
-    psnr,
     rawi_decode,
     rawi_encode,
     resize_nearest,
@@ -22,8 +17,6 @@ from vtshaver_spark.operators.multimodal import (
     decode_features,
     frame_sample,
     generate_image_bytes,
-    generate_variant_images,
-    phash_fingerprints,
 )
 
 
@@ -32,7 +25,6 @@ def test_rawi_roundtrip():
     assert arr.shape == (30, 40, 3)
     again = rawi_decode(rawi_encode(arr))
     assert np.array_equal(arr, again)
-    assert psnr(arr, again) == float("inf")
 
 
 def test_rawi_rejects_unknown_format():
@@ -57,26 +49,13 @@ def test_rawi_rejects_unknown_format():
 
 
 def test_resize_psnr():
+    # nearest-neighbour 2x down then 2x up keeps exactly the even
+    # pixels, each repeated into a 2x2 block
     arr = synth_image("img_y", 64, 64)
     down_up = resize_nearest(resize_nearest(arr, 32, 32), 64, 64)
-    # a smooth gradient survives 2x down/up well above the 40 dB gate?
-    # nearest-neighbor on gradients loses ~1 LSB-scale detail; assert
-    # the metric is computed sanely rather than a specific bar
-    p = psnr(arr, down_up)
-    assert 10 < p < 100
-
-
-def test_gzip_udfs(spark):
-    df = spark.createDataFrame([(b"hello world" * 20,)], "data binary")
-    zipped = df.select(gzip_udf("data").alias("z"))
-    row = zipped.select(
-        is_gzip(F.col("z")).alias("sniff"), gunzip_udf("z").alias("back")
-    ).collect()[0]
-    assert row["sniff"] is True
-    assert bytes(row["back"]) == b"hello world" * 20
-    # pass-through for non-gzip bytes
-    plain = df.select(gunzip_udf("data").alias("p")).collect()[0]
-    assert bytes(plain["p"]) == b"hello world" * 20
+    assert np.array_equal(
+        down_up, np.repeat(np.repeat(arr[::2, ::2], 2, 0), 2, 1)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -127,6 +106,12 @@ def test_frame_sample(spark):
         with pytest.raises(Exception, match=f"ValueError: video '{vid}': {where}"):
             frame_sample(df, every_n=2).collect()
 
+    # every_n < 1 samples nothing meaningful (0 divides by zero, -1
+    # matches every frame), so it is refused on the driver
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="every_n must be >= 1"):
+            frame_sample(df, every_n=n)
+
 
 def test_generate_video_bytes_closed_form(spark):
     """Video containers must hold exactly the per-frame closed-form
@@ -162,43 +147,3 @@ def test_generate_video_bytes_closed_form(spark):
 def test_pil_stub_flag():
     # container truth: PIL absent => decode path must be the gated stub
     assert HAS_PIL is False
-
-
-# ---------------------------------------------------------------------------
-# phash fingerprints (variant-pair corpus)
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def variant_corpus(spark):
-    rows = []
-    for k in range(1, 30):
-        w, h, seed = 16 + k % 17, 16 + (k * 7) % 13, (k * 48271) % 251
-        for v in ("a", "b"):
-            rows.append((k, f"img_{k:08d}_{v}", v, w, h, seed))
-    df = spark.createDataFrame(
-        rows, "k long, image_id string, variant string, w int, h int, seed int"
-    )
-    return generate_variant_images(df).cache()
-
-
-def test_variant_b_is_real_transform(variant_corpus):
-    # 'b' bytes differ from 'a' (channel roll + 2x dims) — it is a
-    # transformed image, not a copy
-    rows = {r["image_id"]: r for r in variant_corpus.collect()}
-    a, b = rows["img_00000003_a"], rows["img_00000003_b"]
-    assert (b["out_w"], b["out_h"]) == (2 * a["out_w"], 2 * a["out_h"])
-    arr_a = rawi_decode(bytes(a["bytes"]))
-    arr_b = rawi_decode(bytes(b["bytes"]))
-    # undo the transform: take every 2nd pixel, roll channels back
-    down = arr_b[::2, ::2][..., [1, 2, 0]]
-    assert np.array_equal(arr_a, down)
-
-
-def test_variant_phash_identity(variant_corpus):
-    # the planted-pair guarantee: phash('a') == phash('b') for every k
-    fps = {
-        r["image_id"]: r["phash"]
-        for r in phash_fingerprints(variant_corpus).collect()
-    }
-    for k in range(1, 30):
-        assert fps[f"img_{k:08d}_a"] == fps[f"img_{k:08d}_b"], k

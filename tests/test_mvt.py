@@ -22,7 +22,6 @@ from vtshaver_spark.sources.mvt import (
     decode_tile_points,
     decode_tiles,
     encode_tiles_mvt,
-    register_sql_functions,
     rows_to_tile,
     tile_to_rows,
 )
@@ -474,25 +473,6 @@ def test_decode_geometry_malformed():
         decode_geometry(bytes([0x0B]))  # op=3
 
 
-def test_mvt_features_udtf(spark):
-    # SQL-surface access to the codec: LATERAL mvt_features(tile)
-    register_sql_functions(spark)
-    with open(SF_TILE, "rb") as f:
-        blob = f.read()
-    spark.createDataFrame(
-        [(16, 10465, 25329, bytearray(blob))],
-        "z int, x bigint, y bigint, tile binary",
-    ).createOrReplaceTempView("_udtf_tiles")
-    out = {
-        r["layer"]: r["n"]
-        for r in spark.sql(
-            "SELECT f.layer, count(*) AS n "
-            "FROM _udtf_tiles, LATERAL mvt_features(tile) f GROUP BY f.layer"
-        ).collect()
-    }
-    assert out["poi_label"] == 13 and len(out) == 7
-
-
 def test_decode_tiles_carry_order_independent(spark):
     """mapInArrow binds output columns to the declared schema BY
     POSITION (r6): a tiles frame whose column order differs from
@@ -646,15 +626,6 @@ def test_null_tile_is_mvterror(spark):
     assert {r["x"] for r in out} == {1}
     with pytest.raises(Exception, match="MVTError: tile is null"):
         decode_tile_points(tiles).collect()
-    # the SQL UDTF yields decode_tiles' rows and fails the same way
-    register_sql_functions(spark)
-    udtf_sql = "SELECT t.z, t.x, t.y, f.* FROM {t} t, LATERAL mvt_features(t.tile) f"
-    good = tiles.where("tile IS NOT NULL")
-    udtf_rows = spark.sql(udtf_sql, t=good).collect()
-    assert len(udtf_rows) == 3
-    assert sorted(udtf_rows) == sorted(decode_tiles(good).collect())
-    with pytest.raises(Exception, match="MVTError: tile is null"):
-        spark.sql(udtf_sql, t=tiles).collect()
 
 
 def test_uint64_feature_id_roundtrips_through_spark(spark):

@@ -243,7 +243,7 @@ def test_router_and_spark_pipeline_png(spark):
     """PNG blobs must flow through the SAME multimodal operators as
     RAWI: identical phash (it is computed on decoded pixels)."""
     from vtshaver_spark.functions.codecs import rawi_encode
-    from vtshaver_spark.operators.multimodal import phash_fingerprints
+    from vtshaver_spark.operators.multimodal import decode_features
 
     arrs = {f"i{i}": synth_image(f"i{i}", 24 + i, 18 + i) for i in range(4)}
     rows = [(k, png_encode(a)) for k, a in arrs.items()] + [
@@ -251,6 +251,8 @@ def test_router_and_spark_pipeline_png(spark):
     ]
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
 
-    fps = {r["image_id"]: r["phash"] for r in phash_fingerprints(df).collect()}
+    fps = {
+        r["image_id"]: r["phash_check"] for r in decode_features(df).collect()
+    }
     for k in arrs:
         assert fps[k] == fps[k + "_rawi"], k

@@ -146,3 +146,37 @@ def test_no_dangling_engine_imports():
                 if name.split(".")[0] == PKG and name not in modules
             ]
     assert not dangling, "imports of nothing: " + ", ".join(dangling)
+
+
+def test_every_operator_is_reached():
+    """Every public top-level def or class in ``vtshaver_spark/operators``
+    is referenced (as a name, an attribute or a ``from ... import``
+    name) somewhere in the files the module walk reads: the package and
+    the non-test roots. An operator only tests call is a second path
+    nothing runs."""
+    paths = [path for path, _ in package_modules().values()]
+    for pattern in ROOT_FILES:
+        paths += glob.glob(os.path.join(REPO, pattern))
+    used = set()
+    for path in set(paths):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                used.update(alias.name for alias in node.names)
+    unused = []
+    for path in sorted(glob.glob(os.path.join(REPO, PKG, "operators", "*.py"))):
+        with open(path) as f:
+            body = ast.parse(f.read(), path).body
+        unused += [
+            f"{os.path.relpath(path, REPO)}:{node.lineno} {node.name}"
+            for node in body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and not node.name.startswith("_")
+            and node.name not in used
+        ]
+    assert not unused, "only tests call: " + ", ".join(unused)

@@ -11,7 +11,7 @@ a representative-point evaluation gets wrong.
 import pytest
 from pyspark.sql import functions as F
 
-from vtshaver_spark.operators.within import feature_within, shave_within
+from vtshaver_spark.operators.within import feature_within
 
 SF_TILE = "/root/reference/test/fixtures/tiles/sf_16_10465_25329.vector.pbf"
 
@@ -159,7 +159,10 @@ def test_real_tile_linestring_shave(spark):
     )
     n_roads = all_roads.count()
     assert n_roads > 0
-    kept_all = shave_within(all_roads, verts, cover, keys=keys)
+    kept_all = all_roads.join(
+        feature_within(verts, cover, keys=keys).filter("within"),
+        on=list(keys), how="left_semi",
+    )
     assert kept_all.count() == n_roads
 
     # polygon covering only the WESTERN half: strictly fewer roads
@@ -174,7 +177,10 @@ def test_real_tile_linestring_shave(spark):
             [lon_min - margin, lat_min - margin],
         ]],
     }
-    kept_half = shave_within(all_roads, verts, half, keys=keys)
+    kept_half = all_roads.join(
+        feature_within(verts, half, keys=keys).filter("within"),
+        on=list(keys), how="left_semi",
+    )
     n_half = kept_half.count()
     assert 0 < n_half < n_roads
     max_kept_lon = (

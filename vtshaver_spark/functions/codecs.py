@@ -1,9 +1,10 @@
-"""Byte-edge codecs: gzip, and a deterministic raw image codec.
+"""Byte-edge image and audio codecs, in plain numpy and stdlib.
 
 The reference touches bytes only at the edges (gzip sniff on input,
 optional gzip on output — /root/reference/src/shave.cpp:242-247,
-289-295); same discipline here: every codec is an Arrow-batched pandas
-UDF applied after all relational pruning.
+289-295; that gzip handling lives in sources/mvt.py). The functions
+here are called from the multimodal operators' Arrow-batched kernels,
+after all relational pruning.
 
 Image handling: PNG is decoded/encoded natively (pure stdlib zlib +
 numpy — chunk parsing with CRC verification, all five scanline
@@ -19,19 +20,11 @@ is the sniffing router.
 
 from __future__ import annotations
 
-import gzip as _gzip
 import struct
 import zlib
-from typing import Optional
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-GZIP_MAGIC = b"\x1f\x8b"
 RAWI_MAGIC = b"RAWI"
 
 try:  # optional real-format codecs (absent in this container)
@@ -40,35 +33,6 @@ try:  # optional real-format codecs (absent in this container)
     HAS_PIL = True
 except ImportError:
     HAS_PIL = False
-
-
-# ---------------------------------------------------------------------------
-# gzip (O9 / O20)
-# ---------------------------------------------------------------------------
-
-@pandas_udf(T.BinaryType())
-def gzip_udf(data: pd.Series) -> pd.Series:
-    return data.map(
-        lambda b: None if b is None else _gzip.compress(bytes(b), mtime=0)
-    )
-
-
-@pandas_udf(T.BinaryType())
-def gunzip_udf(data: pd.Series) -> pd.Series:
-    """Gzip sniff + decompress: non-gzip bytes pass through unchanged
-    (the reference's magic-byte check, src/shave.cpp:242-247)."""
-    def _un(b):
-        if b is None:
-            return None
-        b = bytes(b)
-        return _gzip.decompress(b) if b[:2] == GZIP_MAGIC else b
-
-    return data.map(_un)
-
-
-def is_gzip(col: Column) -> Column:
-    """Column-level gzip sniff (no UDF)."""
-    return F.startswith(col, F.lit(GZIP_MAGIC))
 
 
 # ---------------------------------------------------------------------------
@@ -466,14 +430,6 @@ def synth_wave(seed: int, n: int, sample_rate: int = 16000) -> np.ndarray:
     )
     noise = ((t.astype(np.int64) * 48271 + seed) % 997) - 498
     return np.clip(wave + noise * 4.0, -32768, 32767).astype(np.int16)
-
-
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB (inf for identical images)."""
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 * 255.0 / mse)
 
 
 def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:

@@ -45,26 +45,22 @@ def tile_y(lat: ColumnOrName, z: int) -> Column:
     return F.least(F.greatest(y, F.lit(0)), F.lit(int(n) - 1)).cast("long")
 
 
-def with_tile(df, lon: str = "lon", lat: str = "lat", z: int = 5):
-    """Adds z/x/y tile-address columns (pure Column math, no shuffle)."""
+def with_tile(df, z: int = 5):
+    """Adds z/x/y tile-address columns of the ``lon``/``lat`` columns
+    (pure Column math, no shuffle)."""
     return (
         df.withColumn("z", F.lit(z).cast("int"))
-        .withColumn("x", tile_x(lon, z))
-        .withColumn("y", tile_y(lat, z))
+        .withColumn("x", tile_x("lon", z))
+        .withColumn("y", tile_y("lat", z))
     )
 
 
-def tile_pyramid(
-    df,
-    z_base: int,
-    z_min: int,
-    lon: str = "lon",
-    lat: str = "lat",
-) -> "DataFrame":
-    """Hierarchical tile-count pyramid: point counts at ``z_base``,
-    then every coarser level down to ``z_min`` aggregated from the
-    PREVIOUS level (parent x = x >> 1, y = y >> 1) — the rollup a tile
-    server precomputes so low-zoom tiles don't re-scan the corpus.
+def tile_pyramid(df, z_base: int, z_min: int) -> "DataFrame":
+    """Hierarchical tile-count pyramid: ``lon``/``lat`` point counts
+    at ``z_base``, then every coarser level down to ``z_min``
+    aggregated from the PREVIOUS level (parent x = x >> 1,
+    y = y >> 1) — the rollup a tile server precomputes so low-zoom
+    tiles don't re-scan the corpus.
 
     100 TB shape: the raw corpus is scanned ONCE (a single hash agg
     shuffled on z_base tile keys, with map-side partial combine);
@@ -82,7 +78,7 @@ def tile_pyramid(
             f"need 0 <= z_min <= z_base, got z_min={z_min} z_base={z_base}"
         )
     level = (
-        with_tile(df, lon=lon, lat=lat, z=z_base)
+        with_tile(df, z=z_base)
         .groupBy("z", "x", "y")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )

@@ -1,4 +1,4 @@
-"""S2-style spherical cell index, vectorized in numpy (Arrow UDF).
+"""S2-style spherical cell index.
 
 Implements the public S2 geometry scheme from the published design
 (six cube faces -> quadratic (u,v)->(s,t) projection -> leaf (i,j) at
@@ -6,30 +6,19 @@ level 30 -> space-filling-curve position; 64-bit id = 3 face bits +
 2*level position bits + trailing 1, parents via low-bit clearing).
 The curve here is a per-face Hilbert ordering (classic xy2d rules,
 vectorized): it preserves S2's locality and hierarchy properties.
-Exact numeric parity with Google's liblib ids is NOT claimed (the s2
+Exact numeric parity with Google's library ids is NOT claimed (the s2
 library is unavailable in this container to calibrate orientation
-tables); when the real ``s2sphere``/``s2geometry`` package is present
-it is used instead, keeping the same DataFrame API.
+tables).
 
-Everything is batched numpy inside a pandas UDF (G1: no per-row
-Python), ~30 vector ops per batch for the level-30 curve.
+``with_s2_cell`` is the engine's encoder: JVM Column math rendered as
+one SQL string, no Python worker. ``s2_cell_id_np`` is the same
+encode in batched numpy, the independent answer the tests and the
+benchmark check it against.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-try:  # optional: real S2 bindings if present
-    import s2sphere  # noqa: F401
-
-    HAS_S2_LIB = True
-except ImportError:
-    HAS_S2_LIB = False
 
 MAX_LEVEL = 30
 
@@ -121,20 +110,19 @@ def s2_cell_id_np(lon: np.ndarray, lat: np.ndarray, level: int = MAX_LEVEL) -> n
     return cell.astype(np.int64)
 
 
-def s2_parent_np(cell: np.ndarray, level: int, child_level: int = MAX_LEVEL) -> np.ndarray:
+def s2_parent_np(cell: np.ndarray, level: int) -> np.ndarray:
     """Parent id at a coarser level (clear low bits, set sentinel)."""
     cell_u = cell.astype(np.uint64)
     new_lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
     return ((cell_u & ~(new_lsb - np.uint64(1))) | new_lsb).astype(np.int64)
 
 
-def with_s2_cell_col(
-    df, lon: str = "lon", lat: str = "lat", level: int = 12,
-    out: str = "cell_s2",
-):
-    """S2 cell-id encode as pure JVM Column math — zero Python, zero
-    Arrow transport; the whole encode stays inside one
-    WholeStageCodegen span next to the rest of the plan.
+def with_s2_cell(df, level: int = 12):
+    """Append (or replace in place) the ``cell_s2`` column: the S2
+    cell id of the ``lon``/``lat`` columns at ``level``, as pure JVM
+    Column math — zero Python, zero Arrow transport; the whole encode
+    stays inside one WholeStageCodegen span next to the rest of the
+    plan.
 
     Bit-for-bit the same ids as ``s2_cell_id_np`` (parity pinned in
     tests/test_geo.py on a deterministic global sweep): same cube-face
@@ -145,10 +133,9 @@ def with_s2_cell_col(
     the case Catalyst's CollapseProject declines to inline, so the
     plan stays a layered project chain — linear expression growth —
     small enough for the fused span to stay under codegen's
-    method-size limits. This is the scale path: the Arrow
-    variant pays a per-batch transport floor that cannot parallelize
-    in local mode (the r4 ``s2_cells`` 0.728 scaling leg); this one
-    scales like any other codegen map stage.
+    method-size limits. It scales like any other codegen map stage;
+    an Arrow kernel would pay a per-batch transport floor that does not
+    parallelize in local mode (the r4 ``s2_cells`` 0.728 scaling leg).
     """
     import math
 
@@ -172,7 +159,7 @@ def with_s2_cell_col(
         # the old withColumn form silently REPLACED (and then dropped)
         # such input columns — an explicit error is the honest contract
         raise ValueError(
-            f"with_s2_cell_col: input columns {sorted(clash)} collide "
+            f"with_s2_cell: input columns {sorted(clash)} collide "
             "with the encoder's internal _s2* temporaries; rename them"
         )
 
@@ -192,7 +179,7 @@ def with_s2_cell_col(
             + (q[0] if q[0] == "{df}" else f"({q[0]})")
         )
 
-    ln, lt = f"`{lon}`", f"`{lat}`"
+    ln, lt = "`lon`", "`lat`"
     layer(
         base_cols,
         f"cos({lt} * {d2r}) * cos({ln} * {d2r}) AS _s2x",
@@ -273,42 +260,16 @@ def with_s2_cell_col(
         f"shiftleft(_s2f, 61) | shiftleft(_s2d, {shift}) | "
         f"{1 << (shift - 1)}L"
     )
-    if out in df.columns:
+    if "cell_s2" in df.columns:
         # mimic withColumn's replace-in-place: the new expression takes
         # the existing column's position instead of appending a
         # duplicate name (re-encoding at another level is legal)
         final = [
-            f"{cell} AS `{out}`" if c == out else f"`{c}`"
+            f"{cell} AS `cell_s2`" if c == "cell_s2" else f"`{c}`"
             for c in df.columns
         ]
     else:
-        final = base_cols + [f"{cell} AS `{out}`"]
+        final = base_cols + [f"{cell} AS `cell_s2`"]
     layer(final)
     return df.sparkSession.sql(q[0], df=df)
 
-
-def s2_cell_udf(level: int = 12):
-    @pandas_udf(T.LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(
-            s2_cell_id_np(
-                lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), level
-            )
-        )
-
-    return _cell
-
-
-def with_s2_cell(
-    df, lon: str = "lon", lat: str = "lat", level: int = 12,
-    out: str = "cell_s2", impl: str = "column",
-):
-    """Append the S2 cell-id column. ``impl="column"`` (default) is the
-    JVM codegen path; ``impl="arrow"`` keeps the numpy/Arrow kernel
-    (same ids — parity-pinned — useful as the reference and wherever a
-    batch kernel is already paying the transport cost anyway)."""
-    if impl == "column":
-        return with_s2_cell_col(df, lon=lon, lat=lat, level=level, out=out)
-    if impl == "arrow":
-        return df.withColumn(out, s2_cell_udf(level)(F.col(lon), F.col(lat)))
-    raise ValueError(f"impl must be 'column' or 'arrow', got {impl!r}")

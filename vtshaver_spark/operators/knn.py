@@ -1,45 +1,20 @@
-"""kNN joins: every point row gets its k nearest landmarks.
+"""kNN join: every point row gets its k nearest landmarks.
 
-Two physical strategies, one logical contract (SURVEY §2.3 G4):
-
- - ``knn_join_broadcast``: exact. Broadcast the (small) landmark side,
-   cross-join, rank with a window. Right side must fit in one
-   executor's memory — the normal case for dimension-like landmark
-   tables even at 10^12 left rows (the left side never shuffles except
-   the per-point window, which AQE splits on skew).
- - ``knn_join_cells``: the scale path when BOTH sides are large.
-   Candidate generation via shared coarse tile cells (point's cell +
-   its 8 neighbors at a chosen zoom), cell-hash shuffle join, then
-   per-point top-k. Exact whenever the true k-th neighbor lies within
-   one cell ring (ring size is the precision/efficiency knob; the
-   pytest golden cross-checks recall against the exact join).
+``knn_join_broadcast`` is the one physical strategy: the landmark side
+is dimension-sized, so it is collected once and shipped to a
+``mapInArrow`` kernel that ranks each point's landmarks in numpy (a
+grid-candidate pass, with an exact full sweep as the fallback). The
+point side is never shuffled and no window runs; the k result columns
+are exploded JVM-side with ``stack``. Distances are squared planar
+degrees, the metric the DuckDB oracle replays bit-identically.
+``caption_landmark_join`` is the caption-to-landmark name join.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from vtshaver_spark.functions.geo import haversine_m, tile_x, tile_y
-
-
-def _sq_degree_dist(lon_a: Column, lat_a: Column, lon_b: Column, lat_b: Column) -> Column:
-    """Squared planar degree distance — exact IEEE arithmetic, used for
-    deterministic oracle-comparable ranking."""
-    dx = lon_a - lon_b
-    dy = lat_a - lat_b
-    return dx * dx + dy * dy
-
-
-def _dist(metric: str, lon_a, lat_a, lon_b, lat_b) -> Column:
-    if metric == "haversine":
-        return haversine_m(lon_a, lat_a, lon_b, lat_b)
-    if metric == "sqdeg":
-        return _sq_degree_dist(lon_a, lat_a, lon_b, lat_b)
-    raise ValueError(f"unknown metric {metric!r}")
 
 
 def _build_lm_grid(lon: np.ndarray, lat: np.ndarray, kpad: int):
@@ -146,16 +121,10 @@ def _build_lm_grid(lon: np.ndarray, lat: np.ndarray, kpad: int):
     return cand, sx0, sx1, sy0, sy1, (bx0, by0, 1.0 / cw, 1.0 / ch, gx, gy)
 
 
-def knn_join_broadcast(
-    points: DataFrame,
-    landmarks: DataFrame,
-    k: int = 3,
-    point_id: str = "image_id",
-    landmark_id: str = "landmark_id",
-    metric: str = "sqdeg",
-) -> DataFrame:
+def knn_join_broadcast(points: DataFrame, landmarks: DataFrame, k: int = 3) -> DataFrame:
     """Exact kNN with a dimension-sized right side — MAP-ONLY, Arrow-
-    vectorized.
+    vectorized. ``points`` and ``landmarks`` carry ``lon``/``lat``;
+    ``landmarks`` also ``landmark_id``.
 
     The landmark table (collected once; it is broadcast-sized by
     definition) rides into a ``mapInPandas`` kernel; each Arrow batch
@@ -170,7 +139,7 @@ def knn_join_broadcast(
     "vectorized pandas/Arrow UDF, no per-row Python" shape the scale
     design calls for.
 
-    Selection strategy (r6): for sqdeg with m >= 64 landmarks, a
+    Selection strategy (r6): with m >= 64 landmarks, a
     grid-candidate pass (``_build_lm_grid``) probes only the ~kpad
     landmarks near each point — O(1) in m instead of the full B x M
     GEMM, which made the knn leg O(sf²) (48s of the sf1.0 suite). A
@@ -178,25 +147,37 @@ def knn_join_broadcast(
     GEMM sweep, so emitted (id, dist, tie-order) stay bit-identical to
     the naive kernel and the SQL oracle in every case.
 
-    Output: point rows + rank (1..k), landmark_id, dist. Ties broken
-    by landmark id (landmarks pre-sorted by id + stable argsort).
+    Output: point rows + rank (1..k), landmark_id, dist (squared
+    degrees). Ties broken by landmark id (landmarks pre-sorted by id +
+    stable argsort). Fewer than k landmarks yield one row per
+    landmark; an empty landmark table yields no rows. ``k < 1`` raises
+    ValueError before any job runs.
     """
-    import pandas as pd
     from pyspark.sql import types as T
+
+    if k < 1:
+        raise ValueError(f"knn_join_broadcast: k must be >= 1, got {k}")
 
     # Arrow-path collect (r6): row-object collect() of the landmark
     # table paid ~0.15s of py4j deserialization per call at 10k rows;
     # toPandas rides one Arrow batch (guide §6 "Arrow for driver
     # transfers"). Values are bit-identical; the id sort happens in
     # numpy.
-    lm_pdf = landmarks.select(landmark_id, "lon", "lat").toPandas()
-    order = np.argsort(lm_pdf[landmark_id].to_numpy(np.int64), kind="stable")
-    lm_id = lm_pdf[landmark_id].to_numpy(np.int64)[order]
+    lm_pdf = landmarks.select("landmark_id", "lon", "lat").toPandas()
+    order = np.argsort(lm_pdf["landmark_id"].to_numpy(np.int64), kind="stable")
+    lm_id = lm_pdf["landmark_id"].to_numpy(np.int64)[order]
     lm_lon = lm_pdf["lon"].to_numpy(np.float64)[order]
     lm_lat = lm_pdf["lat"].to_numpy(np.float64)[order]
     kk = min(k, len(lm_id))
-
     m = len(lm_id)
+    if m == 0:
+        # stack(0, ...) does not parse: answer with the output schema
+        return points.where(F.lit(False)).select(
+            *points.columns,
+            F.lit(1).alias("rank"),
+            F.lit(0).cast("long").alias("landmark_id"),
+            F.lit(0.0).alias("dist"),
+        )
 
     wide_fields = list(points.schema.fields)
     for j in range(kk):
@@ -218,7 +199,7 @@ def knn_join_broadcast(
     # fp-epsilon boundary swaps inside the padded candidate set
 
     grid = None
-    if metric == "sqdeg" and m >= 64:
+    if m >= 64:
         grid = _build_lm_grid(lm_lon, lm_lat, kpad)
 
     # closure capture below 4 MB, torrent broadcast above (per-task
@@ -348,26 +329,17 @@ def knn_join_broadcast(
                         SEL[s:e][bi] = np.take_along_axis(idxb, ob, axis=1)
                         DSEL[s:e][bi] = np.take_along_axis(deb, ob, axis=1)
                     continue
-                if metric == "haversine":
-                    d = G[:n]
-                    d[:] = _haversine_np(
-                        plon[s:e, None], plat[s:e, None],
-                        lm_lon[None, :], lm_lat[None, :],
-                    )
-                    idx = np.argpartition(d, kpad - 1, axis=1)[:, :kpad]
-                    de = np.take_along_axis(d, idx, axis=1)
-                else:
-                    p = P[:n]
-                    p[:, 0] = plon[s:e]
-                    p[:, 1] = plat[s:e]
-                    g = G[:n]
-                    np.matmul(p, lm_ops, out=g)
-                    g += lm_sq[None, :]
-                    idx = np.argpartition(g, kpad - 1, axis=1)[:, :kpad]
-                    # exact difference-form distances for the candidates
-                    dxs = plon[s:e, None] - lm_lon[idx]
-                    dys = plat[s:e, None] - lm_lat[idx]
-                    de = dxs * dxs + dys * dys
+                p = P[:n]
+                p[:, 0] = plon[s:e]
+                p[:, 1] = plat[s:e]
+                g = G[:n]
+                np.matmul(p, lm_ops, out=g)
+                g += lm_sq[None, :]
+                idx = np.argpartition(g, kpad - 1, axis=1)[:, :kpad]
+                # exact difference-form distances for the candidates
+                dxs = plon[s:e, None] - lm_lon[idx]
+                dys = plat[s:e, None] - lm_lat[idx]
+                de = dxs * dxs + dys * dys
                 order = np.lexsort((idx, de), axis=1)[:, :kk]
                 SEL[s:e] = np.take_along_axis(idx, order, axis=1)
                 DSEL[s:e] = np.take_along_axis(de, order, axis=1)
@@ -384,100 +356,28 @@ def knn_join_broadcast(
     )
     return wide.selectExpr(
         *points.columns,
-        f"stack({kk}, {stack_args}) AS (rank, {landmark_id}, dist)",
+        f"stack({kk}, {stack_args}) AS (rank, landmark_id, dist)",
     ).withColumn("rank", F.col("rank").cast("int"))
 
 
-def _haversine_np(lon1, lat1, lon2, lat2):
-    r = 6371000.0
-    p1, p2 = np.radians(lat1), np.radians(lat2)
-    dphi = p2 - p1
-    dlmb = np.radians(lon2 - lon1)
-    a = np.sin(dphi / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlmb / 2) ** 2
-    return 2 * r * np.arcsin(np.sqrt(a))
-
-
-def knn_join_cells(
-    points: DataFrame,
-    landmarks: DataFrame,
-    k: int = 3,
-    cell_zoom: int = 4,
-    point_id: str = "image_id",
-    landmark_id: str = "landmark_id",
-    metric: str = "sqdeg",
-) -> DataFrame:
-    """Cell-bucketed kNN for large×large joins.
-
-    Each landmark is replicated into its cell and the 8 surrounding
-    cells (x wraps around the antimeridian, y clamps at the poles);
-    each point probes only its own cell. The join is a plain hash join
-    on the packed cell key — shuffle is bounded by 9x the landmark
-    side, points never replicate.
-    """
-    n = 1 << cell_zoom
-
-    lm = landmarks.select(
-        F.col(landmark_id),
-        F.col("lon").alias("_lm_lon"),
-        F.col("lat").alias("_lm_lat"),
-        tile_x("lon", cell_zoom).alias("_cx"),
-        tile_y("lat", cell_zoom).alias("_cy"),
-    )
-    offsets = F.expr(
-        "array(array(-1,-1),array(-1,0),array(-1,1),array(0,-1),array(0,0),"
-        "array(0,1),array(1,-1),array(1,0),array(1,1))"
-    )
-    lm_repl = (
-        lm.withColumn("_off", F.explode(offsets))
-        .withColumn("_nx", F.pmod(F.col("_cx") + F.col("_off")[0], F.lit(n)))
-        .withColumn("_ny", F.col("_cy") + F.col("_off")[1])
-        .filter((F.col("_ny") >= 0) & (F.col("_ny") < n))
-        .withColumn("_cell", F.col("_nx") * F.lit(n) + F.col("_ny"))
-        .drop("_off", "_cx", "_cy", "_nx", "_ny")
-    )
-    pts = points.withColumn(
-        "_cell",
-        tile_x("lon", cell_zoom) * F.lit(n) + tile_y("lat", cell_zoom),
-    )
-    joined = pts.join(lm_repl, "_cell").withColumn(
-        "dist",
-        _dist(metric, F.col("lon"), F.col("lat"), F.col("_lm_lon"), F.col("_lm_lat")),
-    )
-    w = Window.partitionBy(point_id).orderBy(F.col("dist").asc(), F.col(landmark_id).asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("_lm_lon", "_lm_lat", "_cell")
-    )
-
-
-def caption_landmark_join(
-    images: DataFrame,
-    landmarks: DataFrame,
-    caption_col: str = "caption",
-    name_col: str = "name",
-    max_name_words: int | None = None,
-) -> DataFrame:
+def caption_landmark_join(images: DataFrame, landmarks: DataFrame) -> DataFrame:
     """Caption-to-landmark entity join: image rows whose caption
     mentions a landmark name.
 
     Scale-safe plan: explode each caption into its word windows of
-    length 1..max_name_words (bounded fan-out, ~n_tokens rows per
+    length 1..max_name_words (the longest landmark name; bounded fan-out, ~n_tokens rows per
     image) and BroadcastHashJoin them against the landmark names — an
     exact-match probe per window. The naive crossJoin+contains BNL is
     O(rows x landmarks) substring scans and dies as the entity table
     grows; this plan is O(rows x caption_words) hash probes,
     independent of landmark count.
     """
-    lm = landmarks.select(F.col("landmark_id"), F.col(name_col).alias("_lm_name"))
-    if max_name_words is None:
-        max_name_words = (
-            landmarks.select(
-                F.max(F.size(F.split(F.col(name_col), " ")))
-            ).first()[0]
-            or 1
-        )
-    toks = F.split(F.col(caption_col), " ")
+    lm = landmarks.select(F.col("landmark_id"), F.col("name").alias("_lm_name"))
+    max_name_words = (
+        landmarks.select(F.max(F.size(F.split(F.col("name"), " ")))).first()[0]
+        or 1
+    )
+    toks = F.split(F.col("caption"), " ")
     windows = []
     for n in range(1, max_name_words + 1):
         idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))

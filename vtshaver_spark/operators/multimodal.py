@@ -25,7 +25,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vtshaver_spark.functions.codecs import (
@@ -38,10 +37,10 @@ from vtshaver_spark.functions.codecs import (
 )
 
 
-def generate_image_bytes(df: DataFrame, id_col: str = "image_id") -> DataFrame:
+def generate_image_bytes(df: DataFrame) -> DataFrame:
     """Materialize deterministic RAWI bytes + dims for each row
     (synthetic corpus bootstrap; real pipelines read bytes from the
-    lake). Adds: bytes, w, h, fmt, phash."""
+    lake). Reads ``image_id``; adds: bytes, w, h, fmt, phash."""
     schema = T.StructType(
         df.schema.fields
         + [
@@ -58,7 +57,7 @@ def generate_image_bytes(df: DataFrame, id_col: str = "image_id") -> DataFrame:
             if pdf.empty:
                 continue
             blobs, ws, hs, phs = [], [], [], []
-            for iid in pdf[id_col].astype(str):
+            for iid in pdf["image_id"].astype(str):
                 w = 32 + (int.from_bytes(iid.encode()[-4:], "big") % 97)
                 h = 32 + (int.from_bytes(iid.encode()[-4:], "little") % 73)
                 arr = synth_image(iid, w, h)
@@ -90,99 +89,12 @@ def _phash64(arr: np.ndarray) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def generate_variant_images(
-    df: DataFrame,
-    variant_col: str = "variant",
-    seed_col: str = "seed",
-    w_col: str = "w",
-    h_col: str = "h",
-) -> DataFrame:
-    """Materialize RAWI bytes for a variant-pair image corpus: variant
-    ``'a'`` is the seeded gradient image at (w, h); variant ``'b'`` is
-    a genuinely TRANSFORMED derivative — a channel-rolled 2x
-    nearest-neighbor upscale of ``a`` — not a formula re-evaluation.
-
-    ``b`` is provably phash-identical to ``a``: luma (the channel
-    mean) is invariant under channel permutation, and the 8x8
-    average-hash sample grid of an exact-2x nearest upscale lands on
-    the same source pixels (floor identity: for integer ``i,h``,
-    ``(i*2h//8)//2 == i*h//8``), so each corpus row plants one
-    guaranteed Hamming-0 duplicate pair (pinned by the phash tests).
-
-    Adds: bytes (RAWI), out_w, out_h, fmt.
-    """
+def decode_features(df: DataFrame) -> DataFrame:
+    """Decode the ``bytes`` column and feature-extract: mean RGB, luma
+    stats, phash — the typed-metadata extraction stage. Every other
+    column rides through; ``bytes`` is dropped."""
     schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("out_w", T.IntegerType()),
-            T.StructField("out_h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            blobs, ows, ohs = [], [], []
-            for seed, w, h, variant in zip(
-                pdf[seed_col], pdf[w_col], pdf[h_col], pdf[variant_col]
-            ):
-                arr = synth_gradient_image(int(seed), int(w), int(h))
-                if variant == "b":
-                    arr = resize_nearest(arr, 2 * int(w), 2 * int(h))
-                    arr = arr[..., [2, 0, 1]]
-                blobs.append(rawi_encode(arr))
-                ohs.append(arr.shape[0])
-                ows.append(arr.shape[1])
-            pdf = pdf.copy()
-            pdf["bytes"] = blobs
-            pdf["out_w"] = np.array(ows, dtype=np.int32)
-            pdf["out_h"] = np.array(ohs, dtype=np.int32)
-            pdf["fmt"] = "rawi"
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
-def phash_fingerprints(
-    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """Decode each image and emit its 64-bit average-hash: (id, phash).
-
-    Projection happens BEFORE the kernel so only (id, bytes) cross the
-    Arrow boundary; executor memory per task is bytes-per-image x
-    arrow batch size, independent of partition row count."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("phash", T.LongType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "phash": np.array(
-                        [_phash64(decode_image(b)) for b in pdf[bytes_col]],
-                        dtype=np.int64,
-                    ),
-                }
-            )
-
-    return df.select(id_col, bytes_col).mapInPandas(kernel, schema=schema)
-
-
-def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Decode + feature-extract: mean RGB, luma stats, phash — the
-    typed-metadata extraction stage."""
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != bytes_col]
+        [f for f in df.schema.fields if f.name != "bytes"]
         + [
             T.StructField("mean_r", T.DoubleType()),
             T.StructField("mean_g", T.DoubleType()),
@@ -197,7 +109,7 @@ def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
             if pdf.empty:
                 continue
             stats = {k: [] for k in ("mean_r", "mean_g", "mean_b", "luma_std", "phash_check")}
-            for blob in pdf[bytes_col]:
+            for blob in pdf["bytes"]:
                 arr = decode_image(blob)
                 means = arr.reshape(-1, 3).mean(axis=0)
                 stats["mean_r"].append(float(means[0]))
@@ -205,7 +117,7 @@ def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
                 stats["mean_b"].append(float(means[2]))
                 stats["luma_std"].append(float(arr.astype(np.float64).mean(axis=2).std()))
                 stats["phash_check"].append(_phash64(arr))
-            out = pdf.drop(columns=[bytes_col]).copy()
+            out = pdf.drop(columns=["bytes"]).copy()
             for k, v in stats.items():
                 out[k] = v
             yield out
@@ -213,13 +125,10 @@ def decode_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     return df.mapInPandas(kernel, schema=schema)
 
 
-def frame_sample(
-    df: DataFrame,
-    every_n: int = 2,
-    video_col: str = "video_bytes",
-    id_col: str = "video_id",
-) -> DataFrame:
-    """Video frame sampling: emit every n-th frame as its own row.
+def frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
+    """Video frame sampling: emit every n-th frame of each
+    ``video_bytes`` blob as its own (video_id, frame_idx, bytes) row;
+    ``every_n < 1`` raises ValueError before any job runs.
 
     The one container demuxed is a RAWI concatenation (the
     deterministic interchange ``generate_video_bytes`` writes): each
@@ -229,9 +138,11 @@ def frame_sample(
     ValueError naming the video id and the frame's byte offset, so
     other containers (GIF, mp4, ...) and truncated videos fail instead
     of yielding garbage frames."""
+    if every_n < 1:
+        raise ValueError(f"frame_sample: every_n must be >= 1, got {every_n}")
     schema = T.StructType(
         [
-            T.StructField(id_col, T.StringType()),
+            T.StructField("video_id", T.StringType()),
             T.StructField("frame_idx", T.IntegerType()),
             T.StructField("bytes", T.BinaryType()),
         ]
@@ -240,7 +151,7 @@ def frame_sample(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for vid, blob in zip(pdf[id_col], pdf[video_col]):
+            for vid, blob in zip(pdf["video_id"], pdf["video_bytes"]):
                 blob = bytes(blob)
                 off = 0
                 i = 0
@@ -265,7 +176,7 @@ def frame_sample(
                     i += 1
             if ids:
                 yield pd.DataFrame(
-                    {id_col: ids, "frame_idx": np.array(idxs, dtype=np.int32), "bytes": frames}
+                    {"video_id": ids, "frame_idx": np.array(idxs, dtype=np.int32), "bytes": frames}
                 )
 
     return df.mapInPandas(kernel, schema=schema)
@@ -344,16 +255,15 @@ def generate_audio_bytes(df: DataFrame) -> DataFrame:
     return df.mapInPandas(kernel, schema=schema)
 
 
-def audio_features(
-    df: DataFrame, bytes_col: str = "audio_bytes"
-) -> DataFrame:
-    """Decode WAV blobs (native RIFF/PCM codec — no third-party libs)
+def audio_features(df: DataFrame) -> DataFrame:
+    """Decode ``audio_bytes`` WAV blobs (native RIFF/PCM codec — no
+    third-party libs)
     and emit typed audio metadata: sample rate, channels, duration,
     RMS level, zero-crossing rate, clipping ratio. The audio member of
     the decode-last multimodal family: runs AFTER relational pruning,
     Arrow-batched, executor memory bounded by bytes-per-clip x batch."""
     schema = T.StructType(
-        [f for f in df.schema.fields if f.name != bytes_col]
+        [f for f in df.schema.fields if f.name != "audio_bytes"]
         + [
             T.StructField("sample_rate", T.IntegerType()),
             T.StructField("n_channels", T.IntegerType()),
@@ -375,7 +285,7 @@ def audio_features(
                 "sample_rate", "n_channels", "n_samples", "duration_s",
                 "rms", "zero_cross_rate", "clip_ratio",
             )}
-            for blob in pdf[bytes_col]:
+            for blob in pdf["audio_bytes"]:
                 arr, rate = wav_decode(blob)
                 mono = arr.astype(np.float64).mean(axis=1)
                 n = len(mono)
@@ -394,7 +304,7 @@ def audio_features(
                     float(np.mean(np.abs(arr.astype(np.int32)) >= 32767))
                     if n else 0.0
                 )
-            out = pdf.drop(columns=[bytes_col]).copy()
+            out = pdf.drop(columns=["audio_bytes"]).copy()
             for k, v in cols.items():
                 out[k] = v
             yield out

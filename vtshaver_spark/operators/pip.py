@@ -1,4 +1,5 @@
-"""Point-in-polygon joins (SURVEY §2.3 G3).
+"""Point-in-polygon joins (SURVEY §2.3 G3). One physical shape, two
+polygon forms:
 
  - ``pip_rect_join``: rectangles (the common style-extent case) as a
    cell-keyed broadcast HASH join — pure Catalyst, no UDF. Each rect
@@ -9,23 +10,20 @@
    plan is BroadcastHashJoin — per-point cost is O(rects sharing the
    point's cell), not O(all rects) as the former inequality-only
    BroadcastNestedLoopJoin was.
- - ``pip_polygon_join``: arbitrary rings via a vectorized numpy
-   ray-casting kernel inside ``mapInPandas``. The polygon set is
-   broadcast to every partition as plain Python data (the style-
-   relevant polygon side is dimension-sized); candidates are first
-   pruned by bounding box WITHIN the kernel, so the Python cost is
-   O(points x candidate polygons) on numpy arrays, not per-row
-   Python objects.
+ - ``pip_cell_join``: general polygons (concave, with holes) in the
+   same cell-keyed join on their bounding boxes, then an exact
+   even-odd ray cast over the surviving candidates in a vectorized
+   Arrow kernel.
 
-Scale note: both paths keep the big (point) side un-shuffled — the
-polygon side replicates, matching the reference's broadcast-filters
-execution shape (one immutable Filters shared by all workers,
+Scale note: both keep the big (point) side un-shuffled — the polygon
+side replicates, matching the reference's broadcast-filters execution
+shape (one immutable Filters shared by all workers,
 /root/reference/src/shave.cpp:470-471).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -34,13 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def pip_rect_join(
-    points: DataFrame,
-    rects: DataFrame,
-    point_id: str = "image_id",
-    poly_id: str = "polygon_id",
-    cell_zoom: int = 5,
-) -> DataFrame:
+def pip_rect_join(points: DataFrame, rects: DataFrame, cell_zoom: int = 5) -> DataFrame:
     """Cell-keyed broadcast hash join: point in
     [lon_min,lon_max) x [lat_min,lat_max).
 
@@ -74,7 +66,7 @@ def pip_rect_join(
         return cx * F.lit(1 << 30) + cy
 
     cover = rects.select(
-        poly_id, "lon_min", "lat_min", "lon_max", "lat_max"
+        "polygon_id", "lon_min", "lat_min", "lon_max", "lat_max"
     ).select(
         "*",
         F.explode(
@@ -123,27 +115,17 @@ def _ray_cast_parity(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nda
     return inside
 
 
-def pip_cell_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    point_id: str = "image_id",
-    poly_id: str = "polygon_id",
-    rings_col: str = "rings",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    cell_zoom: int = 5,
-) -> DataFrame:
+def pip_cell_join(points: DataFrame, polygons: DataFrame, cell_zoom: int = 5) -> DataFrame:
     """General-polygon PIP with the SAME physical shape as
-    ``pip_rect_join`` — the r5 generalization that removes the
-    driver-side list contract of ``pip_polygon_join``: the polygon side
-    stays a DataFrame end-to-end, so it can be any dimension-sized
-    table (admin boundaries, style extents) without a guarded collect.
+    ``pip_rect_join``: the polygon side stays a DataFrame end-to-end,
+    so it can be any dimension-sized table (admin boundaries, style
+    extents) without a driver-side collect.
 
-    ``points``: must carry ``point_id``, ``lon_col`` and ``lat_col``
-    (validated up front — every point column rides through to the
-    output). ``polygons``: (poly_id, rings) where rings is
-    ``array<array<array<double>>>`` — closed [[lon,lat],...] rings,
-    ring 0 the exterior, the rest holes (even-odd).
+    ``points``: must carry ``lon`` and ``lat`` (validated up front —
+    every point column rides through to the output). ``polygons``:
+    (polygon_id, rings) where rings is ``array<array<array<double>>>``
+    — closed [[lon,lat],...] rings, ring 0 the exterior, the rest
+    holes (even-odd).
 
     Physical plan (the 100 TB shape):
       1. polygon side (small): vertex double-explode -> per-polygon
@@ -163,8 +145,7 @@ def pip_cell_join(
          pruning is O(points in polygon bboxes), the same residual
          work ``pip_rect_join`` does in its range filter.
     """
-    missing = [c for c in (point_id, lon_col, lat_col)
-               if c not in points.columns]
+    missing = [c for c in ("lon", "lat") if c not in points.columns]
     if missing:
         raise ValueError(f"pip_cell_join: points side missing {missing}")
 
@@ -174,24 +155,24 @@ def pip_cell_join(
         return cx * F.lit(1 << 30) + cy
 
     verts = (
-        polygons.select(poly_id, rings_col)
-        .select(poly_id, F.explode(rings_col).alias("_r"))
-        .select(poly_id, F.explode("_r").alias("_v"))
+        polygons.select("polygon_id", "rings")
+        .select("polygon_id", F.explode("rings").alias("_r"))
+        .select("polygon_id", F.explode("_r").alias("_v"))
         .select(
-            poly_id,
+            "polygon_id",
             F.col("_v")[0].alias("_vx"),
             F.col("_v")[1].alias("_vy"),
         )
     )
-    bbox = verts.groupBy(poly_id).agg(
+    bbox = verts.groupBy("polygon_id").agg(
         F.min("_vx").alias("lon_min"),
         F.min("_vy").alias("lat_min"),
         F.max("_vx").alias("lon_max"),
         F.max("_vy").alias("lat_max"),
     )
     cover = (
-        polygons.select(poly_id, rings_col)
-        .join(bbox, poly_id)
+        polygons.select("polygon_id", "rings")
+        .join(bbox, "polygon_id")
         .select(
             "*",
             F.explode(
@@ -213,16 +194,16 @@ def pip_cell_join(
     )
     r = F.broadcast(cover)
     p = points.withColumn(
-        "_ck", packed(tile_x(lon_col, cell_zoom), tile_y(lat_col, cell_zoom))
+        "_ck", packed(tile_x("lon", cell_zoom), tile_y("lat", cell_zoom))
     )
     cond = (
         (p["_ck"] == r["_ck"])
         # closed bbox: never excludes a boundary point the exact
         # ray-cast would admit
-        & (p[lon_col] >= r["lon_min"])
-        & (p[lon_col] <= r["lon_max"])
-        & (p[lat_col] >= r["lat_min"])
-        & (p[lat_col] <= r["lat_max"])
+        & (p["lon"] >= r["lon_min"])
+        & (p["lon"] <= r["lon_max"])
+        & (p["lat"] >= r["lat_min"])
+        & (p["lat"] <= r["lat_max"])
     )
     cand = (
         p.join(r, cond)
@@ -230,7 +211,7 @@ def pip_cell_join(
         .drop("lon_min", "lat_min", "lon_max", "lat_max", "_ck")
     )
 
-    out_fields = [f for f in cand.schema.fields if f.name != rings_col]
+    out_fields = [f for f in cand.schema.fields if f.name != "rings"]
     out_schema = T.StructType(out_fields)
     out_cols = [f.name for f in out_fields]
 
@@ -239,13 +220,13 @@ def pip_cell_join(
             if pdf.empty:
                 continue
             outs = []
-            for _pid, grp in pdf.groupby(poly_id, sort=False):
+            for _pid, grp in pdf.groupby("polygon_id", sort=False):
                 rings = [
                     np.array([list(v) for v in ring], dtype=np.float64)
-                    for ring in grp[rings_col].iloc[0]
+                    for ring in grp["rings"].iloc[0]
                 ]
-                px = grp[lon_col].to_numpy(dtype=np.float64)
-                py = grp[lat_col].to_numpy(dtype=np.float64)
+                px = grp["lon"].to_numpy(dtype=np.float64)
+                py = grp["lat"].to_numpy(dtype=np.float64)
                 inside = np.zeros(px.shape[0], dtype=bool)
                 for ring in rings:  # even-odd XOR across all rings
                     inside ^= _ray_cast_parity(px, py, ring)
@@ -255,122 +236,3 @@ def pip_cell_join(
                 yield pd.concat(outs, ignore_index=True)
 
     return cand.mapInPandas(kernel, schema=out_schema)
-
-
-def _ray_cast(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd rule: for each point, count edge crossings of
-    a horizontal ray. ring: (m,2) closed coordinate array."""
-    inside = np.zeros(px.shape[0], dtype=bool)
-    x0, y0 = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    for j in range(x0.shape[0]):
-        ax, ay, bx, by = x0[j], y0[j], x1[j], y1[j]
-        crosses = ((ay > py) != (by > py)) & (
-            px < (bx - ax) * (py - ay) / (by - ay + 1e-300) + ax
-        )
-        inside ^= crosses
-    return inside
-
-
-def pip_polygon_join(
-    points: DataFrame,
-    polygons: list,
-    point_id: str = "image_id",
-) -> DataFrame:
-    """Generic PIP: ``polygons`` is a driver-side list of
-    ``(polygon_id, ring)`` where ring is a closed [[lon,lat],...] list
-    — or ``(polygon_id, [ring, hole_ring, ...])`` for polygons with
-    interior rings: the even-odd rule over the COMBINED edge set makes
-    points inside a hole fall outside the polygon (two crossings),
-    matching the GL fill rule the within operator uses.
-
-    Output: the point rows with an added ``polygon_id`` (one row per
-    containing polygon). Executed as mapInPandas: bbox prune first,
-    then the numpy ray-cast on survivors only.
-    """
-
-    def _as_rings(spec):
-        # single ring = [[x,y],...]; multi-ring = [[[x,y],...], ...]
-        first = spec[0]
-        if first and isinstance(first[0], (list, tuple, np.ndarray)):
-            return [np.asarray(r, dtype=np.float64) for r in spec]
-        return [np.asarray(spec, dtype=np.float64)]
-
-    polys = [(int(pid), _as_rings(spec)) for pid, spec in polygons]
-    # bbox of the OUTER ring (ring 0) bounds the polygon; holes are
-    # interior by definition
-    bboxes = [
-        (
-            pid,
-            rings[0][:, 0].min(), rings[0][:, 1].min(),
-            rings[0][:, 0].max(), rings[0][:, 1].max(),
-        )
-        for pid, rings in polys
-    ]
-    out_schema = T.StructType(
-        points.schema.fields + [T.StructField("polygon_id", T.LongType(), False)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            px = pdf["lon"].to_numpy(dtype=np.float64)
-            py = pdf["lat"].to_numpy(dtype=np.float64)
-            outs = []
-            for (pid, rings), (_, x0, y0, x1, y1) in zip(polys, bboxes):
-                cand = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-                if not cand.any():
-                    continue
-                idx = np.flatnonzero(cand)
-                inside = np.zeros(idx.shape[0], dtype=bool)
-                for ring in rings:  # even-odd XOR across all rings
-                    inside ^= _ray_cast(px[idx], py[idx], ring)
-                hit = idx[inside]
-                if hit.size:
-                    sub = pdf.iloc[hit].copy()
-                    sub["polygon_id"] = pid
-                    outs.append(sub)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return points.mapInPandas(kernel, schema=out_schema)
-
-
-def from_polygons_df(
-    polygons: DataFrame,
-    poly_id: str = "polygon_id",
-    ring_col: str = "ring",
-    max_polygons: int = 100_000,
-) -> list:
-    """Bridge a polygons DataFrame to ``pip_polygon_join``'s
-    driver-side list contract.
-
-    ``ring_col`` must be ``array<array<double>>`` (closed
-    [[lon,lat],...] ring). The collect is guarded: polygon sets are
-    dimension-sized by contract (style extents, admin boundaries —
-    thousands, not billions); a side bigger than ``max_polygons``
-    raises instead of silently flooding the driver. For genuinely
-    large polygon sides, pre-partition by covering cell and run the
-    cell-local join instead (see pip_rect_join's cell-cover shape).
-    """
-    n = polygons.limit(max_polygons + 1).count()
-    if n > max_polygons:
-        raise ValueError(
-            f"polygon side exceeds max_polygons={max_polygons}; "
-            "pip_polygon_join broadcasts the polygon set to every task — "
-            "use a cell-keyed join for non-dimension-sized polygon tables"
-        )
-    rows = polygons.select(poly_id, ring_col).collect()
-    return [(row[0], row[1]) for row in rows]
-
-
-def rect_rings(rects: list) -> list:
-    """Convenience: (pid, lon_min, lat_min, lon_max, lat_max) ->
-    (pid, closed ring) for cross-checking the two PIP paths."""
-    out = []
-    for pid, x0, y0, x1, y1 in rects:
-        out.append(
-            (pid, [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
-        )
-    return out

@@ -194,18 +194,3 @@ def feature_within(
     (single-polygon form of ``feature_within_multi``)."""
     return feature_within_multi(vertex_df, [geom], keys=keys, out_cols=["within"])
 
-
-def shave_within(
-    features_df: DataFrame,
-    vertex_df: DataFrame,
-    geom: dict,
-    keys: Sequence[str] = FEATURE_KEY,
-) -> DataFrame:
-    """Keep only features whose full geometry is within the polygon —
-    a left-semi join of the feature rows against the per-feature
-    verdicts (the same layer-semi-join shape shave() uses, O12)."""
-    keys = [k for k in keys if k in features_df.columns]
-    verdicts = feature_within(vertex_df, geom, keys=keys)
-    return features_df.join(
-        verdicts.filter(F.col("within")).select(*keys), on=keys, how="left_semi"
-    )

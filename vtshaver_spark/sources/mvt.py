@@ -745,30 +745,3 @@ def decode_tile_points(df):
         kernel, schema=VERTEX_ROW_SCHEMA
     )
 
-
-def register_sql_functions(spark) -> None:
-    """Expose the codec to pure-SQL users:
-
-      SELECT f.* FROM tiles, LATERAL mvt_features(tile) f
-
-    via a Python UDTF (Spark 3.5+). The UDTF yields the same rows as
-    ``decode_tiles``."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType=MVT_ROW_SCHEMA)
-    class MvtFeatures:
-        def eval(self, tile):
-            # a null tile raises MVTError, as decode_tiles does
-            for r in tile_to_rows(None if tile is None else bytes(tile)):
-                yield (
-                    r["layer"],
-                    r["layer_version"],
-                    r["layer_extent"],
-                    r["feature_id"],
-                    r["geom_type"],
-                    r["geometry"],
-                    r["props"],
-                    r["prop_types"],
-                )
-
-    spark.udtf.register("mvt_features", MvtFeatures)

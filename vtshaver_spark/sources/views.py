@@ -208,7 +208,7 @@ DERIVED_VIEWS = {
     "landmarks_v": LANDMARKS_SQL,
     "features_v": FEATURES_SQL,
     # vertices_v references features_v: keep it AFTER features_v (both
-    # in Spark registration order and in with_cte CTE order)
+    # in Spark registration order and in the oracle's CTE order)
     "vertices_v": VERTICES_SQL,
     "polygons_v": POLYGONS_SQL,
     "audio_clips_v": AUDIO_CLIPS_SQL,
@@ -225,12 +225,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     register_base(spark, sf_dir)
     for name, sql in DERIVED_VIEWS.items():
         spark.sql(sql).createOrReplaceTempView(name)
-
-
-def with_cte(view_sqls: dict, body: str) -> str:
-    """Embed the given derived views as CTEs around an oracle body."""
-    ctes = ",\n".join(f"{name} AS ({sql})" for name, sql in view_sqls.items())
-    return f"WITH {ctes}\n{body}"
 
 
 def features_with_props(spark: SparkSession) -> DataFrame:
