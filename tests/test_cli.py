@@ -147,6 +147,47 @@ def test_shave_cli_with_vertices(spark, tmp_path, capsys):
     assert kept == {3}
 
 
+def test_shave_cli_jobs_and_observed_summary(spark, features, style_file, tmp_path, capsys):
+    """``cli shave`` runs 4 Spark jobs (input schema, shaved write, the
+    metrics write's shuffle and result stages): the printed summary is
+    observed on the metrics write, not read back. Two calls in one
+    session each print the sums of the metrics parquet they wrote."""
+    from pyspark.sql import functions as F
+
+    cols = ("features_before", "features_after", "prop_bytes_before", "prop_bytes_after")
+    fin = str(tmp_path / "feats.parquet")
+    features.write.parquet(fin)
+    road_p = tmp_path / "road.json"
+    road_p.write_text(json.dumps({"layers": [{
+        "source-layer": "road", "filter": ["==", "class", "street"],
+        "paint": {"line-width": ["get", "type"]},
+    }]}))
+    sc = spark.sparkContext
+    summaries, jobs = [], []
+    for i, style in enumerate((style_file, str(road_p))):
+        out = str(tmp_path / f"out{i}")
+        group = f"cli-shave-jobs-{i}"
+        sc.setJobGroup(group, "cli shave")
+        try:
+            rc = main([
+                "shave", "--style", style, "--input", fin, "--output", out,
+                "--zoom", "16",
+            ])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rc == 0
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        written = spark.read.parquet(out + "/metrics").agg(
+            *[F.sum(c).alias(c) for c in cols]
+        ).first().asDict()
+        assert summary == written
+        summaries.append(summary)
+    assert jobs == [4, 4]
+    assert summaries[0] != summaries[1]
+    assert summaries[0]["features_before"] == features.count()
+
+
 def test_shave_tile_cli_matches_shave(spark, style_file, tmp_path, capsys):
     """shave-tile on an in-repo multi-layer tile: the written tile
     decodes to exactly what ``shave`` keeps of the same rows, and the

@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 
 from vtshaver_spark import Filters, style_to_filters
 from vtshaver_spark.errors import FilterError, ShaveError
-from vtshaver_spark.operators.shave import shave, shave_with_metrics, tile_layer_summary
+from vtshaver_spark.operators.shave import (
+    compile_shave_columns,
+    shave,
+    shave_with_metrics,
+    tile_layer_summary,
+)
 from synthetic import SF_TILE
 
 
@@ -289,6 +294,74 @@ def test_metrics(spark, features):
 
     assert census(shaved) == census(shave(features, filters, zoom=16))
     assert metrics.agg(F.sum("features_after")).first()[0] == shaved.count()
+
+
+def test_kept_bytes_match_projection(spark):
+    """The metrics' codegen byte count of the kept properties equals
+    the byte count of the ``map_filter`` projection, row by row: NULL
+    and absent allowlisted keys, non-ASCII keys and values (length
+    counts characters), keys and layers with a quote or a backslash, an
+    allowlist that names a key twice, empty-allowlist, keep-all and
+    unstyled layers, a NULL and an empty map, and a feature the keep
+    predicate drops."""
+
+    def prop_bytes(col):
+        return F.coalesce(
+            F.length(F.concat_ws("", F.map_keys(col)))
+            + F.length(F.concat_ws("", F.map_values(col))),
+            F.lit(0),
+        )
+
+    filters = Filters({
+        "poi": {
+            "filters": ["==", "kind", "keep"], "minzoom": 0, "maxzoom": 22,
+            "properties": ["name", "café", "kind", "missing", "name"],
+        },
+        "tag's": {
+            "filters": True, "minzoom": 0, "maxzoom": 22, "properties": ["ß", "it's", "a\\b"],
+        },
+        "empty": {"filters": True, "minzoom": 0, "maxzoom": 22, "properties": []},
+        "all": {"filters": True, "minzoom": 0, "maxzoom": 22, "properties": True},
+    })
+    rows = [
+        (1, "poi", "Point", {"name": "Zürich", "café": "ja", "kind": "keep", "x": "y"}),
+        (2, "poi", "Point", {"name": None, "kind": "keep"}),
+        (3, "poi", "Point", {"kind": "keep"}),
+        (4, "poi", "Point", {"kind": "drop", "name": "n"}),
+        (5, "poi", "Point", {}),
+        (6, "tag's", "Point", None),
+        (7, "tag's", "Point", {"ß": "straße", "x": "y", "it's": "o'k", "a\\b": "\\"}),
+        (8, "empty", "Polygon", {"a": "b"}),
+        (9, "all", "LineString", {"ключ": "значение", "k": None}),
+        (10, "water", "Polygon", {"x": "yz"}),
+    ]
+    df = spark.createDataFrame(
+        [(16, 0, 0, *r) for r in rows],
+        "z int, x bigint, y bigint, feature_id bigint, layer string, "
+        "geom_type string, props map<string,string>",
+    )
+    keep, projected, kept_bytes = compile_shave_columns(filters, zoom=16)
+    got = {
+        r["feature_id"]: (r["keep"], r["kept"], r["want"])
+        for r in df.select(
+            "feature_id",
+            keep.alias("keep"),
+            kept_bytes.alias("kept"),
+            prop_bytes(projected).alias("want"),
+        ).collect()
+    }
+    assert {fid: kept for fid, (_, kept, _) in got.items()} == {
+        fid: want for fid, (_, _, want) in got.items()
+    }
+    assert {fid: kept for fid, (_, kept, _) in got.items()} == {
+        1: 4 + 6 + 4 + 2 + 4 + 4, 2: 4 + 4 + 4, 3: 8, 4: 4 + 4 + 4 + 1, 5: 0,
+        6: 0, 7: 1 + 6 + 4 + 3 + 3 + 1, 8: 0, 9: 4 + 8 + 1, 10: 1 + 2,
+    }
+    assert {fid for fid, (k, _, _) in got.items() if k} == {1, 2, 3, 6, 7, 8, 9}
+
+    _, metrics = shave_with_metrics(df, filters, zoom=16)
+    (after,) = metrics.select("prop_bytes_after").collect()[0]
+    assert after == sum(want for k, _, want in got.values() if k)
 
 
 def test_tile_layer_summary(spark, features):

@@ -1,6 +1,8 @@
 """kNN + point-in-polygon goldens (FIXTURES.md §4-5): engine results
 must equal brute-force numpy references row-for-row."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -165,6 +167,31 @@ def test_caption_landmark_join(spark, landmarks):
     )
     out = caption_landmark_join(imgs, landmarks).select("image_id", "landmark_id").collect()
     assert {(r["image_id"], r["landmark_id"]) for r in out} == {("i1", 7), ("i2", 17)}
+
+
+def test_caption_landmark_join_plans_without_jobs(spark, landmarks):
+    """Building the plan launches no Spark job, the name probe is a
+    broadcast hash join, and a name said twice in one caption still
+    gives one row per (image row, landmark)."""
+    imgs = spark.createDataFrame(
+        [
+            ("i1", "landmark_7 then landmark_7 and landmark_70"),
+            ("i1", "landmark_7 then landmark_7 and landmark_70"),
+            ("i2", "landmark_ 7 landmark_77x"),
+        ],
+        "image_id string, caption string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("caption-plan", "caption_landmark_join plan")
+    try:
+        out = caption_landmark_join(imgs, landmarks)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("caption-plan") == []
+    assert "BroadcastHashJoin" in plan
+    got = Counter((r["image_id"], r["landmark_id"]) for r in out.collect())
+    assert got == Counter({("i1", 7): 2})
 
 
 def _chevrons_df(spark, n=10):

@@ -7,6 +7,9 @@
    --zoom Z [--maxzoom M] --output <dir>`` — batch shave job with
    per-tile metrics (the vtshave contract: before/after sizes,
    /root/reference/bin/vtshave.js:75-93), runnable under spark-submit.
+   The printed summary (the four totals over all tiles) is observed on
+   the metrics write with ``Dataset.observe``, not read back from the
+   written parquet: the job runs no extra Spark jobs for it.
 """
 
 from __future__ import annotations
@@ -37,14 +40,13 @@ def cmd_filters(args) -> int:
 
 
 def cmd_shave(args) -> int:
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     from vtshaver_spark.operators.shave import shave_with_metrics
     from vtshaver_spark.session import build_session
     from vtshaver_spark.style.compile import style_to_filters
     from vtshaver_spark.style.filters import Filters
-
-    from pyspark.sql import SparkSession
 
     with open(args.style) as f:
         style = json.load(f)
@@ -65,13 +67,12 @@ def cmd_shave(args) -> int:
             df, filters, zoom=args.zoom, maxzoom=args.maxzoom, vertex_df=vertex_df
         )
         shaved.write.mode("overwrite").parquet(f"{args.output}/shaved")
-        metrics.write.mode("overwrite").parquet(f"{args.output}/metrics")
-        # aggregate the ~1 row per tile just written, not the lazy
-        # metrics plan (that would re-run the per-tile groupBy over the
-        # full input)
-        summary = spark.read.parquet(f"{args.output}/metrics").agg(
-            *[F.sum(c).alias(c) for c in summary_cols]
-        ).collect()[0]
+        # the totals ride along the metrics write (an unnamed
+        # Observation is unique per call)
+        obs = Observation()
+        observed = metrics.observe(obs, *[F.sum(c).alias(c) for c in summary_cols])
+        observed.write.mode("overwrite").parquet(f"{args.output}/metrics")
+        summary = obs.get
     finally:
         if owns:
             spark.stop()

@@ -361,35 +361,35 @@ def knn_join_broadcast(points: DataFrame, landmarks: DataFrame, k: int = 3) -> D
 
 
 def caption_landmark_join(images: DataFrame, landmarks: DataFrame) -> DataFrame:
-    """Caption-to-landmark entity join: image rows whose caption
-    mentions a landmark name.
+    """Caption-to-landmark entity join: one row per image row and
+    landmark whose name is a run of the caption's words (both split on
+    single spaces).
 
-    Scale-safe plan: explode each caption into its word windows of
-    length 1..max_name_words (the longest landmark name; bounded fan-out, ~n_tokens rows per
-    image) and BroadcastHashJoin them against the landmark names — an
-    exact-match probe per window. The naive crossJoin+contains BNL is
-    O(rows x landmarks) substring scans and dies as the entity table
-    grows; this plan is O(rows x caption_words) hash probes,
-    independent of landmark count.
+    Scale-safe plan, built without running a job: explode each
+    caption's distinct words (~n_tokens rows per image) and
+    BroadcastHashJoin them against each landmark name's first word,
+    then check the whole name on the matched pairs. A name's words are
+    a run of the caption's words exactly when " name " is a substring of
+    " caption ". Distinct words give each (image row, landmark) pair at
+    most one candidate, however often the name recurs. The naive
+    crossJoin+contains BNL is O(rows x landmarks) substring scans; this
+    plan is O(rows x caption_words) hash probes, independent of
+    landmark count.
     """
-    lm = landmarks.select(F.col("landmark_id"), F.col("name").alias("_lm_name"))
-    max_name_words = (
-        landmarks.select(F.max(F.size(F.split(F.col("name"), " ")))).first()[0]
-        or 1
+    lm = landmarks.select(
+        F.col("landmark_id"),
+        F.col("name").alias("_lm_name"),
+        F.split(F.col("name"), " ")[0].alias("_lm_first"),
     )
-    toks = F.split(F.col("caption"), " ")
-    windows = []
-    for n in range(1, max_name_words + 1):
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-        windows.append(
-            F.when(
-                F.size(toks) >= n,
-                F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
-            ).otherwise(F.array().cast("array<string>"))
-        )
-    phrases = F.array_distinct(F.flatten(F.array(*windows)))
-    cand = images.withColumn("_phrase", F.explode(phrases))
+    cand = images.withColumn(
+        "_word", F.explode(F.array_distinct(F.split(F.col("caption"), " ")))
+    )
+    padded_caption = F.concat(F.lit(" "), cand["caption"], F.lit(" "))
+    padded_name = F.concat(F.lit(" "), lm["_lm_name"], F.lit(" "))
     return (
-        cand.join(F.broadcast(lm), cand["_phrase"] == lm["_lm_name"])
-        .drop("_phrase", "_lm_name")
+        cand.join(
+            F.broadcast(lm),
+            (cand["_word"] == lm["_lm_first"]) & padded_caption.contains(padded_name),
+        )
+        .drop("_word", "_lm_name", "_lm_first")
     )
