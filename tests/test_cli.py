@@ -318,3 +318,44 @@ def test_shave_tile_cli_malformed_tile(damage, style_file, tmp_path, capsys, mon
     assert captured.err == f"Error: {ex.value}\n"
     assert captured.out == ""
     assert not out_file.exists()
+
+
+@pytest.mark.parametrize("cmd", ["shave", "shave-tile"])
+@pytest.mark.parametrize(
+    "layer,message",
+    [
+        ({"filter": ["==", ["slice"], "x"]}, "'slice' expects 2 to 3 argument(s)"),
+        ({"minzoom": -1}, E.MSG_MINZOOM_POSITIVE),
+        ({"filter": ["all", ["==", "class", "river"], ["==", ["get", "x"], 1]]}, E.MSG_MIXED_FILTER),
+    ],
+    ids=["filter-error", "shave-error", "mixed-filter"],
+)
+def test_cli_bad_style_is_an_error_line(cmd, layer, message, tmp_path, capsys, monkeypatch):
+    """A style ``Filters`` rejects is reported as ``Error: <message>``
+    with exit status 1, before any Spark session starts."""
+    from pyspark.sql import SparkSession
+
+    import vtshaver_spark.session as session_mod
+    from vtshaver_spark.sources.mvt import rows_to_tile
+
+    style = tmp_path / "bad.json"
+    style.write_text(json.dumps({"layers": [{"source-layer": "poi_label", **layer}]}))
+    tile = tmp_path / "ok.mvt"
+    tile.write_bytes(rows_to_tile([{
+        "layer": "poi_label", "feature_id": 1, "geom_type": "Point",
+        "geometry": bytes([0x09, 2, 2]), "props": {}, "prop_types": {},
+    }]))
+
+    def no_session(**kw):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    monkeypatch.setattr(session_mod, "build_session", no_session)
+    if cmd == "shave":
+        argv = ["shave", "--input", str(tmp_path / "in"), "--output", str(tmp_path / "out")]
+    else:
+        argv = ["shave-tile", "--tile", str(tile), "--zoom", "16"]
+    assert main([*argv, "--style", str(style)]) == 1
+    captured = capsys.readouterr()
+    assert captured.err == f"Error: {message}\n"
+    assert captured.out == ""

@@ -318,3 +318,75 @@ def test_in_expression_with_dynamic_haystack(spark):
     assert _eval_expr(
         spark, ["in", "poi", ["downcase", ["get", "t"]]], {"t": "POInt"}
     )
+
+
+# ---------------------------------------------------------------------------
+# feature properties cannot fail the query under ANSI mode
+# ---------------------------------------------------------------------------
+
+_ANSI_ROWS = [(1, "Point", {"rank": "1e30", "n": "0"}), (2, "Point", {"rank": "3", "n": "2"})]
+_RANK = ["to-number", ["get", "rank"]]
+_N = ["to-number", ["get", "n"]]
+
+
+@pytest.mark.parametrize(
+    "filt,want",
+    [
+        # try_cast to BIGINT, not an overflowing cast
+        (["==", ["to-string", _RANK], "3"], {2}),
+        (["==", ["number-format", _RANK, {}], "3"], {2}),
+        (["==", ["slice", "abcdef", _RANK], "def"], {2}),
+        # C++ doubles: 1/0 = Infinity, 1%0 = NaN
+        ([">", ["/", 1, _N], 1e308], {1}),
+        (["==", ["to-string", ["%", 1, _N]], "NaN"], {1}),
+        # out-of-range and negative indexes are NULL, not an error
+        (["==", ["at", 5, ["literal", [1, 2]]], 1], set()),
+        (["==", ["at", -1, ["literal", [1, 2]]], 2], set()),
+    ],
+    ids=["to-string", "number-format", "slice", "div-zero", "mod-zero", "at-past-end", "at-negative"],
+)
+def test_properties_cannot_fail_the_query(spark, filt, want):
+    df = spark.createDataFrame(
+        _ANSI_ROWS, "feature_id bigint, geom_type string, props map<string,string>"
+    )
+    got = {r["feature_id"] for r in df.filter(filter_to_column(filt, FilterContext())).collect()}
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# style strings become SQL literals: escaping
+# ---------------------------------------------------------------------------
+
+_HOSTILE = ["it's", "back\\slash", "new\nline", "a -- b", "x' OR true OR 'y"]
+_ESCAPE_ROWS = [
+    {"feature_id": i, "geom_type": "Point", "props": {s: s}}
+    for i, s in enumerate(_HOSTILE, start=1)
+] + [
+    {"feature_id": 6, "geom_type": "Point", "props": {"x": "y", "k": "v"}},
+    {"feature_id": 7, "geom_type": "Point", "props": {"it's": "its", "a -- b": "a"}},
+]
+
+
+@pytest.mark.parametrize("s", _HOSTILE, ids=["quote", "backslash", "newline", "comment", "injection"])
+def test_literal_escaping(spark, s):
+    from test_property_based import _eval_legacy
+
+    df = spark.createDataFrame(
+        [(r["feature_id"], r["geom_type"], r["props"]) for r in _ESCAPE_ROWS],
+        "feature_id bigint, geom_type string, props map<string,string>",
+    )
+
+    def kept(filt):
+        col = filter_to_column(filt, FilterContext())
+        return {r["feature_id"] for r in df.filter(col).collect()}
+
+    for filt in (["==", s, s], ["!=", s, s], ["in", s, s, "zzz"], ["!in", s, "zzz"], ["has", s]):
+        assert kept(filt) == {r["feature_id"] for r in _ESCAPE_ROWS if _eval_legacy(filt, r)}, filt
+    equal = {r["feature_id"] for r in _ESCAPE_ROWS if r["props"].get(s) == s}
+    assert len(equal) == 1
+    for filt in (
+        ["==", ["get", s], s],
+        ["in", ["get", s], ["literal", [s, "zzz"]]],
+        ["match", ["get", s], s, True, False],
+    ):
+        assert kept(filt) == equal, filt

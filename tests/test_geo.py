@@ -267,7 +267,7 @@ def test_point_in_polygon_many_vertices_plan_builds(spark):
         [(10.0, 50.0), (10.0, 53.0)], "lon double, lat double"
     )
     got = df.select(
-        geo.point_in_polygon_col(F.col("lon"), F.col("lat"), geom)
+        F.expr(geo.point_in_polygon_col("lon", "lat", geom))
         .alias("w")
     ).collect()
     assert [r["w"] for r in got] == [True, False]
@@ -295,7 +295,7 @@ def test_point_on_boundary_is_not_within(spark):
     got = [
         r["w"]
         for r in df.select(
-            geo.point_in_polygon_col(F.col("lon"), F.col("lat"), geom)
+            F.expr(geo.point_in_polygon_col("lon", "lat", geom))
             .alias("w")
         ).collect()
     ]

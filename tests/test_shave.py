@@ -270,7 +270,7 @@ def test_per_row_zoom_binding(spark, features):
             {"layers": [{"source-layer": "poi_label", "minzoom": 10, "maxzoom": 22}]}
         )
     )
-    out = shave(features, filters, zoom=F.col("z").cast("double"))
+    out = shave(features, filters, zoom=None)
     assert out.filter(F.col("z") == 0).count() == 0
     assert out.filter(F.col("z") == 16).count() > 0
 
@@ -392,6 +392,46 @@ def test_validation_errors():
         Filters({"water": {"filters": False, "minzoom": 0, "maxzoom": 22, "properties": True}})
     with pytest.raises(ShaveError, match="Property-Filters is not properly constructed"):
         Filters({"water": {"filters": True, "minzoom": 0, "maxzoom": 22}})
+
+
+@pytest.mark.parametrize(
+    "filt",
+    [
+        ["==", ["slice"], "x"],
+        ["==", ["at", 1], 1],
+        ["==", ["to-rgba"], "x"],
+        ["==", ["var", "nope"], 1],
+        ["==", ["interpolate", ["bogus"], ["zoom"], 0, 0, 10, 1], 1],
+    ],
+    ids=["slice-arity", "at-arity", "to-rgba-arity", "unbound-var", "interpolate-type"],
+)
+def test_malformed_expression_rejected_at_construction(filt):
+    # rejected by Filters itself, not by the shave job that renders it
+    with pytest.raises(FilterError):
+        Filters({"road": {"filters": filt, "minzoom": 0, "maxzoom": 22, "properties": True}})
+
+
+def test_shave_plan_shape(spark, features, tmp_path):
+    """PLANS.md "Shave pipeline": over parquet, the road style is one
+    Filter + Project, with the layer and geometry-type conjuncts pushed
+    to the scan and no Exchange."""
+    import __spark_entry__ as entry
+
+    path = str(tmp_path / "features.parquet")
+    features.write.parquet(path)
+    filters = Filters(style_to_filters(entry.EXPRESSION_ROAD_STYLE))
+    out = shave(spark.read.parquet(path), filters, zoom=16, maxzoom=16)
+    qe = out._jdf.queryExecution()
+    nodes = [
+        line.lstrip(" :+-").split(" ")[0]
+        for line in qe.optimizedPlan().toString().splitlines()
+    ]
+    assert nodes == ["Project", "Filter", "Relation"]
+    physical = qe.executedPlan()
+    assert "Exchange" not in physical.toString()
+    pushed = physical.collectLeaves().head().metadata().apply("PushedFilters")
+    assert "EqualTo(layer,road)" in pushed
+    assert "In(geom_type, [LineString,Point,Polygon])" in pushed
 
 
 def test_floating_point_zoom(spark, features):

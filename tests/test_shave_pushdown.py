@@ -140,7 +140,7 @@ def _sorted_rows(df) -> list:
     ids=["zoom-number", "zoom-column", "zoom-column-vertex-df"],
 )
 def test_pushdown_equals_cached_decode(spark, tiles, zoom, with_vertices):
-    zoom = F.col("z") if zoom == "z" else zoom
+    zoom = None if zoom == "z" else zoom
     vertex_df = decode_tile_points(tiles) if with_vertices else None
     filters = WITHIN_FILTERS if with_vertices else FILTERS
     cached = decode_tiles(tiles).cache()

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from vtshaver_spark.errors import FilterError
 from vtshaver_spark.functions.expr import FilterContext, filter_to_column
 
 
@@ -45,5 +46,8 @@ def test_within_feature_wrapper(spark, pts):
 
 
 def test_distance_expression(spark, pts):
+    # ["distance"] is a whole-geometry measure with no row-level form:
+    # without the per-vertex table it is refused, naming what to pass
     filt = ["<", ["distance", {"type": "Point", "coordinates": [5.0, 2.0]}], 100000]
-    assert names(pts, filt) == {"in_box"}  # others are >200 km away
+    with pytest.raises(FilterError, match="vertex_df.*--vertices"):
+        names(pts, filt)

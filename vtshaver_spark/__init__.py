@@ -2,13 +2,13 @@
 
 Built from scratch with the query/data-processing capabilities of
 mapbox/vtshaver (reference at /root/reference, studied for semantics only):
-Mapbox-GL style compilation -> Spark Column predicates, per-tile shaving
+Mapbox-GL style filters rendered to Spark SQL text, per-tile shaving
 (layer semi-join, zoom gating, feature filtering, property projection),
 plus web-scale additions: S2 cell indexing, point-in-polygon, kNN
 joins, full-geometry ``within`` and MVT decode/encode.
 
-Everything is DataFrame-first: predicates compile to Catalyst expressions
-(whole-stage codegen), joins broadcast small sides, and Python only runs
+Everything is DataFrame-first: GL filters render to Spark SQL text that
+Catalyst parses once into codegen'd expressions, joins broadcast small sides, and Python only runs
 inside Arrow-batched pandas UDFs at the edges.
 
 Every kernel unpickled in a Python worker imports this package first,

@@ -10,6 +10,10 @@
    The printed summary (the four totals over all tiles) is observed on
    the metrics write with ``Dataset.observe``, not read back from the
    written parquet: the job runs no extra Spark jobs for it.
+
+A style, tile or option the engine rejects (``FilterError``,
+``ShaveError``, ``MVTError``) prints ``Error: <message>`` and exits 1;
+a bad style or tile is caught before any Spark session starts.
 """
 
 from __future__ import annotations
@@ -39,10 +43,17 @@ def cmd_filters(args) -> int:
     return 0
 
 
+def _error(ex: Exception) -> int:
+    """Report a rejected input as ``Error: <message>``; exit status 1."""
+    sys.stderr.write(f"Error: {ex}\n")
+    return 1
+
+
 def cmd_shave(args) -> int:
     from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
+    from vtshaver_spark.errors import FilterError, ShaveError
     from vtshaver_spark.operators.shave import shave_with_metrics
     from vtshaver_spark.session import build_session
     from vtshaver_spark.style.compile import style_to_filters
@@ -50,7 +61,10 @@ def cmd_shave(args) -> int:
 
     with open(args.style) as f:
         style = json.load(f)
-    filters = Filters(style_to_filters(style))
+    try:
+        filters = Filters(style_to_filters(style))
+    except (FilterError, ShaveError) as ex:
+        return _error(ex)
     summary_cols = (
         "features_before", "features_after", "prop_bytes_before", "prop_bytes_after",
     )
@@ -73,6 +87,10 @@ def cmd_shave(args) -> int:
         observed = metrics.observe(obs, *[F.sum(c).alias(c) for c in summary_cols])
         observed.write.mode("overwrite").parquet(f"{args.output}/metrics")
         summary = obs.get
+    except (FilterError, ShaveError) as ex:
+        # options or filters the plan refuses (a bad --zoom, a
+        # ["distance"] without --vertices)
+        return _error(ex)
     finally:
         if owns:
             spark.stop()
@@ -87,7 +105,7 @@ def cmd_shave_tile(args) -> int:
     write)."""
     import gzip as _gzip
 
-    from vtshaver_spark.errors import ShaveError, validate_compress
+    from vtshaver_spark.errors import FilterError, ShaveError, validate_compress
     from vtshaver_spark.operators.shave import shave
     from vtshaver_spark.session import build_session
     from vtshaver_spark.sources.mvt import (
@@ -109,10 +127,9 @@ def cmd_shave_tile(args) -> int:
             {"type": args.compress} if args.compress else None
         )
         rows = tile_to_rows(buf)
-    except (ShaveError, MVTError) as ex:
-        sys.stderr.write(f"Error: {ex}\n")
-        return 1
-    filters = Filters(style_to_filters(style))
+        filters = Filters(style_to_filters(style))
+    except (FilterError, ShaveError, MVTError) as ex:
+        return _error(ex)
     from pyspark.sql import SparkSession
 
     # only stop a session we created: getOrCreate() reuses any active
@@ -133,6 +150,8 @@ def cmd_shave_tile(args) -> int:
                 df, filters, zoom=args.zoom, maxzoom=args.maxzoom
             ).collect()
         ]
+    except (FilterError, ShaveError) as ex:
+        return _error(ex)
     finally:
         if owns:
             spark.stop()

@@ -17,6 +17,8 @@ from typing import Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vtshaver_spark.functions.expr import double_sql
+
 # Web-Mercator latitude clamp (where the projection diverges).
 MAX_LAT = 85.05112878
 
@@ -216,53 +218,52 @@ def _ring_edges(ring: list):
     return zip(ring[:-1], ring[1:])
 
 
-def point_in_polygon_col(lon: Column, lat: Column, geom: dict) -> Column:
-    """Even-odd ray cast against a LITERAL polygon, unrolled at plan
-    build into one fixed Column expression per non-horizontal edge —
-    fully whole-stage-codegen'd, no UDF. Counting EVERY ring (exterior
-    + holes) makes interior rings flip the parity back out (GeoJSON
-    hole semantics). MultiPolygon = OR over member polygons. A point
-    exactly ON a ring edge is NOT within — gl-js pointWithinPolygon
-    short-circuits its onBoundary test to false before ray casting,
-    and boundary-sharing integer tile coordinates make this case
-    reachable in practice."""
-    any_poly = F.lit(False)
-    on_boundary = F.lit(False)
+def point_in_polygon_col(lon: str, lat: str, geom: dict) -> str:
+    """Spark SQL text of an even-odd ray cast against a LITERAL
+    polygon, unrolled at plan build into one fixed term per
+    non-horizontal edge — fully whole-stage-codegen'd, no UDF (wrap it
+    in ``F.expr``). Counting EVERY ring (exterior + holes) makes
+    interior rings flip the parity back out (GeoJSON hole semantics).
+    MultiPolygon = OR over member polygons. A point exactly ON a ring
+    edge is NOT within — gl-js pointWithinPolygon short-circuits its
+    onBoundary test to false before ray casting, and boundary-sharing
+    integer tile coordinates make this case reachable in practice. A
+    NULL ``lon``/``lat`` is false, not NULL.
+
+    Integer crossing COUNT + parity, like the DuckDB twin
+    ``point_in_polygon_sql`` (same edges, slopes and comparisons; this
+    form writes DOUBLE literals, which Spark needs and DuckDB rejects):
+    NOT a chained boolean XOR, whose plan build is O(2^edges) because
+    Catalyst traverses expression trees structurally."""
+    d = double_sql
+    boundary_terms = []
+    poly_terms = []
     for rings in geojson_polygons(geom):
+        terms = []
         for ring in rings:
             for (ax, ay), (bx, by) in _ring_edges(ring):
                 # collinear cross-product + between-endpoints, the
                 # gl-js onBoundary formula (horizontal edges included)
-                on_b = (
-                    ((F.lit(ax) - lon) * (F.lit(by) - lat)
-                     == (F.lit(bx) - lon) * (F.lit(ay) - lat))
-                    & ((F.lit(ax) - lon) * (F.lit(bx) - lon) <= 0)
-                    & ((F.lit(ay) - lat) * (F.lit(by) - lat) <= 0)
+                boundary_terms.append(
+                    f"(({d(ax)} - {lon}) * ({d(by)} - {lat}) = "
+                    f"({d(bx)} - {lon}) * ({d(ay)} - {lat}) "
+                    f"AND ({d(ax)} - {lon}) * ({d(bx)} - {lon}) <= 0 "
+                    f"AND ({d(ay)} - {lat}) * ({d(by)} - {lat}) <= 0)"
                 )
-                on_boundary = on_boundary | on_b
-    for rings in geojson_polygons(geom):
-        # integer crossing COUNT + parity, exactly like the SQL twin —
-        # NOT a chained boolean XOR: `(inside | c) & ~(inside & c)`
-        # references `inside` twice per edge, and Catalyst traverses
-        # expression trees structurally (no memoization), so the
-        # XOR-chain's plan build is O(2^edges) — a ~40-vertex real
-        # geofence would hang the driver in analysis before any task
-        # runs
-        terms = []
-        for ring in rings:
-            for (ax, ay), (bx, by) in _ring_edges(ring):
                 if ay == by:
                     continue  # horizontal edge never crosses the ray
-                crosses = ((F.lit(ay) > lat) != (F.lit(by) > lat)) & (
-                    lon < (lat - F.lit(ay)) * F.lit((bx - ax) / (by - ay)) + F.lit(ax)
+                terms.append(
+                    f"CASE WHEN ({d(ay)} > {lat}) != ({d(by)} > {lat}) "
+                    f"AND {lon} < ({lat} - {d(ay)}) * {d((bx - ax) / (by - ay))} + {d(ax)} "
+                    f"THEN 1 ELSE 0 END"
                 )
-                terms.append(F.when(crosses, 1).otherwise(0))
         if terms:
-            count = terms[0]
-            for t in terms[1:]:
-                count = count + t
-            any_poly = any_poly | (count % 2 == 1)
-    return lon.isNotNull() & lat.isNotNull() & ~on_boundary & any_poly
+            poly_terms.append("(" + " + ".join(terms) + ") % 2 = 1")
+    return (
+        f"({lon} IS NOT NULL AND {lat} IS NOT NULL"
+        f" AND NOT ({' OR '.join(boundary_terms)})"
+        f" AND ({' OR '.join(poly_terms) or 'false'}))"
+    )
 
 
 def point_in_polygon_sql(geom: dict, lon: str = "lon", lat: str = "lat") -> str:

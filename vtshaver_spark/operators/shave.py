@@ -20,10 +20,11 @@ Semantics parity with the reference worker loop
 Spark-first design: the whole thing is a single ``filter`` +
 ``withColumn`` pair over the features DataFrame — an OR-of-layers
 predicate plus a CASE-of-layers map projection (and, for the metrics,
-a CASE-of-layers count of the bytes that projection keeps). No
-shuffle, no UDFs; the style table is folded into the plan as
-literals (it is tiny), so Catalyst constant-folds keep-all branches
-and pushes the layer/zoom conjuncts down to the scan. Scale note: at
+a CASE-of-layers count of the bytes that projection keeps), each
+rendered as Spark SQL text and parsed once. No shuffle, no UDFs; the
+style table is folded into the plan as literals (it is tiny), so
+Catalyst constant-folds keep-all branches and pushes the layer/zoom
+conjuncts down to the scan. Scale note: at
 10^12 rows this remains a map-only stage; with z/layer as partition
 columns of the source table the layer+zoom conjuncts become partition
 pruning.
@@ -31,28 +32,25 @@ pruning.
 
 from __future__ import annotations
 
-from typing import Optional, Union
+from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from vtshaver_spark.errors import ShaveError
 from vtshaver_spark import errors as E
-from vtshaver_spark.functions.expr import FilterContext, filter_to_column
+from vtshaver_spark.functions.expr import (
+    FilterContext,
+    double_sql,
+    render_filter,
+    sql_string,
+)
 from vtshaver_spark.sources.mvt import FEATURE_KEY, TILE_KEY, _decode_tiles
-from vtshaver_spark.style.filters import Filters, LayerFilter
+from vtshaver_spark.style.filters import Filters
 
-_GEOM_TYPES = ("Point", "LineString", "Polygon")
-
-
-def _layer_zoom_pred(
-    lf: LayerFilter, zoom: Column, maxzoom: Optional[float]
-) -> Column:
-    in_range = (zoom >= F.lit(lf.minzoom)) & (zoom <= F.lit(lf.maxzoom))
-    if maxzoom is not None:
-        return in_range | F.lit(float(maxzoom) < lf.minzoom)
-    return in_range
+# the filtered path drops Unknown geometries (O15)
+_KNOWN_GEOMETRY = "geom_type IN ('Point', 'LineString', 'Polygon')"
 
 
 # Approximate encoded size of a row's ``props``: the summed character
@@ -66,15 +64,9 @@ _PROP_BYTES_SQL = (
 )
 
 
-def _sql_string(s: str) -> str:
-    """``s`` as a Spark SQL string literal (backslash escapes, the
-    parser's default)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def compile_shave_columns(
     filters: Filters,
-    zoom: Union[float, Column, None] = None,
+    zoom: Optional[float] = None,
     maxzoom: Optional[float] = None,
     within_resolver=None,
     distance_resolver=None,
@@ -86,95 +78,78 @@ def compile_shave_columns(
     ``shave_with_metrics`` (ONE conditional aggregation over all three)
     — the compile happens once, the data is scanned once either way.
 
-    The kept-bytes Column is ``_PROP_BYTES_SQL`` of the projection, but
-    runs in codegen: an allowlist layer sums the allowlisted keys the
-    map holds and their values, so no ``map_filter`` lambda
-    (interpreted) runs for it. It is one SQL expression, which builds
-    in under a millisecond; the same Column tree took ~10 ms of py4j
-    calls per key (PySpark 4.1, 4 vCPU). The projection itself stays
-    ``map_filter``: its entry order sets the shaved parquet bytes.
+    Each of the three is rendered as Spark SQL text and parsed with one
+    ``F.expr``: building the same trees from py4j Column calls cost
+    tens of milliseconds per style. The projection is a CASE-of-layers
+    ``map_filter``: its entry order sets the shaved parquet bytes. The
+    kept-bytes count is ``_PROP_BYTES_SQL`` of that projection, but an
+    allowlist layer sums the allowlisted keys the map holds and their
+    values, so no ``map_filter`` lambda (interpreted) runs for it.
     """
     if not isinstance(filters, Filters):
         raise ShaveError(
             "filters option must be a shaver.Filters object"
         )
-    if isinstance(zoom, (int, float)) and not isinstance(zoom, bool):
-        if zoom < 0:
-            raise ShaveError(E.MSG_ZOOM_TYPE)
-        zoom_col: Column = F.lit(float(zoom))
-    elif isinstance(zoom, Column):
-        zoom_col = zoom
-    elif zoom is None:
-        zoom_col = F.col(TILE_KEY[0]).cast("double")  # the tile's own z
-    else:
-        raise ShaveError(E.MSG_ZOOM_TYPE)
-    if maxzoom is not None and (
-        not isinstance(maxzoom, (int, float)) or isinstance(maxzoom, bool) or maxzoom < 0
-    ):
-        raise ShaveError(E.MSG_MAXZOOM_TYPE)
+    for value, message in ((zoom, E.MSG_ZOOM_TYPE), (maxzoom, E.MSG_MAXZOOM_TYPE)):
+        if value is not None and (
+            not isinstance(value, (int, float)) or isinstance(value, bool) or value < 0
+        ):
+            raise ShaveError(message)
 
     ctx = FilterContext(
-        zoom=zoom_col,
+        zoom=zoom,
         within_resolver=within_resolver,
         distance_resolver=distance_resolver,
     )
-    layer = F.col("layer")
+    z = ctx.zoom_sql()
 
     # OR-of-layers row predicate (inlined broadcast semi-join).
-    keep: Optional[Column] = None
+    keep = []
     for lf in filters:
-        branch = (layer == F.lit(lf.layer)) & _layer_zoom_pred(
-            lf, zoom_col, maxzoom
-        )
-        if lf.keep_all_filter and lf.keep_all_properties:
-            # O14 fast path: verbatim copy — Unknown geometries survive.
-            pass
-        else:
-            feature_pred = filter_to_column(lf.filter, ctx)
-            branch = (
-                branch
-                & F.col("geom_type").isin(*_GEOM_TYPES)
-                & feature_pred
-            )
-        keep = branch if keep is None else (keep | branch)
-    if keep is None:
-        keep = F.lit(False)  # empty style shaves everything
+        in_range = f"{z} >= {double_sql(lf.minzoom)} AND {z} <= {double_sql(lf.maxzoom)}"
+        if maxzoom is not None:
+            # overzoom: the tileset stops below the style's minzoom
+            in_range = f"{in_range} OR {str(float(maxzoom) < lf.minzoom).lower()}"
+        branch = [f"layer = {sql_string(lf.layer)}", f"({in_range})"]
+        if not (lf.keep_all_filter and lf.keep_all_properties):
+            # the filtered path; keep-all layers are copied verbatim,
+            # Unknown geometries included (O14 fast path)
+            branch += [_KNOWN_GEOMETRY, render_filter(lf.filter, ctx)]
+        keep.append("(" + " AND ".join(branch) + ")")
 
     # CASE-of-layers property projection (O17) and the byte count of
     # what it keeps. Keep-all layers fall through to the identity branch.
-    proj: Optional[Column] = None
-    kept_cases = []
-    props = F.col("props")
+    projected, kept_bytes = [], []
     for lf in filters:
         if lf.keep_all_properties:
             continue
-        if lf.properties:
-            allow = F.array([F.lit(k) for k in lf.properties])
-            pruned = F.map_filter(props, lambda k, _v: F.array_contains(allow, k))
-            # map keys are unique, so each allowlisted key counts once
-            pruned_bytes = " + ".join(
-                f"CASE WHEN map_contains_key(props, {k}) THEN length({k})"
-                f" + coalesce(length(props[{k}]), 0) ELSE 0 END"
-                for k in map(_sql_string, dict.fromkeys(lf.properties))
-            )
-        else:
-            # empty allowlist (styled but no property references): all
-            # feature properties are stripped
-            pruned = F.map_filter(props, lambda _k, _v: F.lit(False))
-            pruned_bytes = "0"
-        cond = layer == F.lit(lf.layer)
-        proj = F.when(cond, pruned) if proj is None else proj.when(cond, pruned)
-        kept_cases.append(f"WHEN layer = {_sql_string(lf.layer)} THEN {pruned_bytes}")
-    if proj is None:
-        return keep, props, F.expr(_PROP_BYTES_SQL)
-    kept_bytes = F.expr(f"CASE {' '.join(kept_cases)} ELSE {_PROP_BYTES_SQL} END")
-    return keep, proj.otherwise(props), kept_bytes
+        when = f"WHEN layer = {sql_string(lf.layer)} THEN"
+        allow = ", ".join(map(sql_string, lf.properties))
+        # an empty allowlist (styled but no property references) strips
+        # every feature property
+        kept = f"array_contains(array({allow}), k)" if allow else "false"
+        projected.append(f"{when} map_filter(props, (k, v) -> {kept})")
+        # map keys are unique, so each allowlisted key counts once
+        key_bytes = [
+            f"CASE WHEN map_contains_key(props, {k}) THEN length({k})"
+            f" + coalesce(length(props[{k}]), 0) ELSE 0 END"
+            for k in map(sql_string, dict.fromkeys(lf.properties))
+        ]
+        kept_bytes.append(f"{when} {' + '.join(key_bytes) or '0'}")
+    keep_sql = " OR ".join(keep) or "false"  # empty style shaves everything
+    if not projected:
+        return F.expr(keep_sql), F.expr("props"), F.expr(_PROP_BYTES_SQL)
+    return (
+        F.expr(keep_sql),
+        F.expr(f"CASE {' '.join(projected)} ELSE props END"),
+        F.expr(f"CASE {' '.join(kept_bytes)} ELSE {_PROP_BYTES_SQL} END"),
+    )
 
 
 def shave(
     df: DataFrame,
     filters: Filters,
-    zoom: Union[float, Column, None] = None,
+    zoom: Optional[float] = None,
     maxzoom: Optional[float] = None,
     vertex_df: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -182,9 +157,9 @@ def shave(
     plus any other columns, e.g. the ``TILE_KEY``) with a compiled
     style.
 
-    ``zoom`` may be a number (whole-job binding, reference parity), a
-    Column (per-row, e.g. ``F.col("z")`` to shave every zoom level in
-    one pass — the scale path), or None (defaults to ``F.col("z")``).
+    ``zoom`` is a number (whole-job binding, reference parity) or None
+    (each row's own ``z``: every zoom level in one pass — the scale
+    path).
     ``maxzoom`` is the *tileset* maxzoom for the overzoom rule.
 
     ``vertex_df``: pass the per-vertex table (one row per decoded
@@ -194,7 +169,8 @@ def shave(
     inherits (/root/reference/src/filters.cpp:108-121): every vertex
     inside AND no segment properly crossing the polygon boundary.
     Without it, ``within`` falls back to the row-level point form
-    (documented in functions/expr._op_within). All distinct within
+    (documented in functions/expr._op_within) and ``["distance"]``
+    raises ``FilterError``: it has no row-level form. All distinct within
     geometries share ONE window+aggregate pass over the vertex table
     and ONE equi-join on the ``FEATURE_KEY`` columns both tables have —
     two keyed shuffles total at any style complexity; features with
@@ -251,19 +227,15 @@ def _plan(
     geoms: list = []
     points: list = []
 
-    def resolver(geom: dict) -> Column:
-        for i, g in enumerate(geoms):
-            if g == geom:
-                return F.col(f"_within_{i}")
-        geoms.append(geom)
-        return F.col(f"_within_{len(geoms) - 1}")
+    def resolver(geom: dict) -> str:
+        if geom not in geoms:
+            geoms.append(geom)
+        return f"_within_{geoms.index(geom)}"
 
-    def dist_resolver(plon: float, plat: float) -> Column:
-        for j, p in enumerate(points):
-            if p == (plon, plat):
-                return F.col(f"_dist_{j}")
-        points.append((plon, plat))
-        return F.col(f"_dist_{len(points) - 1}")
+    def dist_resolver(plon: float, plat: float) -> str:
+        if (plon, plat) not in points:
+            points.append((plon, plat))
+        return f"_dist_{points.index((plon, plat))}"
 
     routed = vertex_df is not None
     keep, projected, kept_bytes = compile_shave_columns(
@@ -293,7 +265,7 @@ def _plan(
 def shave_with_metrics(
     df: DataFrame,
     filters: Filters,
-    zoom: Union[float, Column, None] = None,
+    zoom: Optional[float] = None,
     maxzoom: Optional[float] = None,
     vertex_df: Optional[DataFrame] = None,
 ) -> tuple:

@@ -17,9 +17,9 @@ decoded geometry vertex, exactly what ``sources.mvt.decode_tile_points``
 emits — so the whole evaluation is relational:
 
 1. per-vertex inside flag and per-segment crossing flag are LITERAL
-   unrolled Column math (functions/geo.point_in_polygon_col /
-   segment_crosses_col): whole-stage codegen, no UDF, no interpreted
-   higher-order lambdas;
+   unrolled expressions (the SQL text of functions/geo.point_in_polygon_col,
+   the Column math of segment_crosses_col): whole-stage codegen, no
+   UDF, no interpreted higher-order lambdas;
 2. segments come from ``lead()`` over a window partitioned by the
    FEATURE key (ordered by path_idx, vertex_idx, masked at path
    boundaries) — NOT by (feature, path) — so the grouped reduction in
@@ -125,7 +125,7 @@ def feature_within_multi(
             segment_crosses_col(lon_c, lat_c, nlon, nlat, geom),
         ).otherwise(F.lit(False))
         flags = flags.withColumn(
-            f"_in_{i}", point_in_polygon_col(lon_c, lat_c, geom)
+            f"_in_{i}", F.expr(point_in_polygon_col(_LON, _LAT, geom))
         ).withColumn(f"_cross_{i}", seg_cross)
 
     for j, (plon, plat) in enumerate(distance_points):
