@@ -24,7 +24,8 @@ counts and property keys the reference's tests pin (FIXTURES.md §2):
  - housenum_label 8 rows (minzoom-17 gating cases :569-613)
 
 Geometry positions are laid out deterministically inside the tile's
-lon/lat bounds.
+lon/lat bounds. ``sf_tile_bytes()`` writes the census as an MVT blob
+with a test-side writer that is independent of the engine's codec.
 """
 
 from __future__ import annotations
@@ -203,6 +204,135 @@ def value_types_tile_rows() -> list:
         (3, "Unknown", {"ghost": "yes"}),
     ]
     return _rows(t, "hello", specs)
+
+
+# ---------------------------------------------------------------------------
+# Test-side MVT writer (FIXTURES.md §2). It shares no code with
+# vtshaver_spark.sources.mvt and lays a layer's fields out in another
+# order than rows_to_tile, so a fault common to the engine's encoder and
+# decoder cannot cancel out in a roundtrip.
+# ---------------------------------------------------------------------------
+
+MVT_EXTENT = 4096
+_MVT_GEOM_TYPES = {"Point": 1, "LineString": 2, "Polygon": 3}
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while n >= 0x80:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def _varint_field(field: int, n: int) -> bytes:
+    return _varint(field << 3) + _varint(n)
+
+
+def _bytes_field(field: int, payload: bytes) -> bytes:
+    return _varint(field << 3 | 2) + _varint(len(payload)) + payload
+
+
+def _zigzag(n: int) -> int:
+    return n << 1 if n >= 0 else (-n << 1) - 1
+
+
+def _tile_px(tile: tuple, lon: float, lat: float) -> tuple:
+    """Web-Mercator lon/lat -> integer coordinates inside ``tile``."""
+    import math
+
+    z, x, y = tile
+    n = 1 << z
+    gx = (lon + 180.0) / 360.0 * n
+    gy = (1.0 - math.asinh(math.tan(math.radians(lat))) / math.pi) / 2.0 * n
+
+    def clamp(v: float) -> int:
+        return min(MVT_EXTENT - 1, max(0, int(v * MVT_EXTENT)))
+
+    return clamp(gx - x), clamp(gy - y)
+
+
+def _command_stream(geom_type: str, px: int, py: int) -> bytes:
+    """MoveTo (px, py), then for a LineString two LineTo and for a
+    Polygon a 16-unit square ring with positive area in tile
+    coordinates (an exterior ring, MVT spec 4.3.4.4), each step
+    heading toward the tile's centre so every vertex stays inside."""
+    out = _varint(1 << 3 | 1) + _varint(_zigzag(px)) + _varint(_zigzag(py))
+    if geom_type == "Point":
+        return out
+    sx = 16 if px < MVT_EXTENT // 2 else -16
+    sy = 16 if py < MVT_EXTENT // 2 else -16
+    if geom_type == "LineString":
+        steps = [(sx, 0), (0, sy)]
+    else:
+        steps = [(sx, 0), (0, sy), (-sx, 0)]
+        if sx * sy < 0:  # keep the surveyor's area positive
+            steps = [(0, sy), (sx, 0), (0, -sy)]
+    out += _varint(len(steps) << 3 | 2)
+    for dx, dy in steps:
+        out += _varint(_zigzag(dx)) + _varint(_zigzag(dy))
+    if geom_type == "Polygon":
+        out += _varint(1 << 3 | 7)
+    return out
+
+
+def _mvt_value(v: str) -> bytes:
+    """A digit string becomes ``int_value`` (field 4), anything else
+    ``string_value`` (field 1)."""
+    if v.isascii() and v.isdigit():
+        return _varint_field(4, int(v))
+    return _bytes_field(1, v.encode("utf-8"))
+
+
+def mvt_tile_bytes(rows: list) -> bytes:
+    """Encode ``FEATURES_SCHEMA`` rows of one tile as an uncompressed
+    MVT (version 2, extent 4096). Layers keep their first-seen order and
+    features their row order. Each layer is written as name, keys,
+    values, extent, features and, last, version. A feature is written
+    as id (absent when ``feature_id`` is None), tags, type and a command
+    stream placed at the row's lon/lat. Geometry types are Point,
+    LineString and Polygon."""
+    tile = tuple(rows[0][:3])
+    layers: dict = {}
+    for r in rows:
+        layers.setdefault(r[3], []).append(r)
+    out = bytearray()
+    for name, lrows in layers.items():
+        keys: dict = {}
+        values: dict = {}
+        feats = []
+        for _, _, _, _, fid, geom_type, lon, lat, _, props, _ in lrows:
+            tags = bytearray()
+            for k, v in props.items():
+                ki = keys.setdefault(k, len(keys))
+                vi = values.setdefault(_mvt_value(v), len(values))
+                tags += _varint(ki) + _varint(vi)
+            feat = bytearray()
+            if fid is not None:
+                feat += _varint_field(1, fid)
+            if tags:
+                feat += _bytes_field(2, bytes(tags))
+            feat += _varint_field(3, _MVT_GEOM_TYPES[geom_type])
+            feat += _bytes_field(4, _command_stream(geom_type, *_tile_px(tile, lon, lat)))
+            feats.append(bytes(feat))
+        layer = bytearray(_bytes_field(1, name.encode("utf-8")))
+        for k in keys:
+            layer += _bytes_field(3, k.encode("utf-8"))
+        for v in values:
+            layer += _bytes_field(4, v)
+        layer += _varint_field(5, MVT_EXTENT)
+        for feat in feats:
+            layer += _bytes_field(2, feat)
+        layer += _varint_field(15, 2)
+        out += _bytes_field(3, bytes(layer))
+    return bytes(out)
+
+
+def sf_tile_bytes() -> bytes:
+    """The ``sf_tile_rows()`` census as an uncompressed MVT at
+    16/10465/25329: 7 layers, 49 features, one without an id."""
+    return mvt_tile_bytes(sf_tile_rows())
 
 
 def features_df(spark: SparkSession, extra_rows: Optional[list] = None) -> DataFrame:

@@ -5,10 +5,30 @@ Pins mirror the reference's own assertions over the same tile
 1 feature; :464-486 ``!=`` -> 12; :406-420 water keep-all; pre-test
 :55-59 7-layer census) — decoded row-set equality replacing byte
 equality per SURVEY §1.2.
+
+Two inputs:
+
+- The in-repo census tile, ``synthetic.sf_tile_bytes()``: the
+  ``sf_tile_rows()`` census (7 layers, 49 features, one without an id)
+  written by a test-side MVT writer that shares no code with
+  ``sources.mvt`` (FIXTURES.md §2). The tests that check a property of
+  the codec or of the Spark operators that any valid tile has run on
+  it: row-equality, gzip and gzip-level roundtrips, the Spark decode ->
+  encode roundtrip, carry order, ``on_error="skip"``,
+  ``decode_tile_points`` and the id-less feature.
+- The reference checkout's own fixtures (``SF_TILE``, the ``sf_rows``
+  fixture, ``z16-housenum.mvt``, ``invalid.mvt`` and the
+  bright-v9/expressions/properties styles). The tests whose expected
+  values are that content stay on them, and fail where the checkout is
+  absent: the census (13 poi_label, 3 water, 20 road), ``localrank``,
+  the Sutro Baths coordinates, the four ``*_on_real_tile`` shave
+  counts, the 5514/16780/6609-byte size pins, the two style end-to-end
+  tests and the mvt-fixtures ``invalid.mvt``.
 """
 
 import gzip
 import zlib
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +45,7 @@ from vtshaver_spark.sources.mvt import (
     rows_to_tile,
     tile_to_rows,
 )
+from synthetic import mvt_tile_bytes, sf_tile_bytes, sf_tile_rows
 
 SF_TILE = "/root/reference/test/fixtures/tiles/sf_16_10465_25329.vector.pbf"
 
@@ -33,6 +54,20 @@ SF_TILE = "/root/reference/test/fixtures/tiles/sf_16_10465_25329.vector.pbf"
 def sf_rows():
     with open(SF_TILE, "rb") as f:
         return tile_to_rows(f.read())
+
+
+@pytest.fixture(scope="module")
+def census_rows():
+    """The in-repo census tile, decoded. Its per-layer counts and its
+    id-less count must be the census table's, so the totals the tests
+    below expect come from ``sf_tile_rows()``, not from the decoder."""
+    rows = tile_to_rows(sf_tile_bytes())
+    census = sf_tile_rows()
+    assert Counter(r["layer"] for r in rows) == Counter(c[3] for c in census)
+    assert sum(r["feature_id"] is None for r in rows) == sum(
+        c[4] is None for c in census
+    )
+    return rows
 
 
 def test_decode_reference_census(sf_rows):
@@ -51,7 +86,7 @@ def test_decode_value_types(sf_rows):
     assert poi[0]["prop_types"]["localrank"] == "int"
 
 
-def test_roundtrip_row_equality(sf_rows):
+def test_roundtrip_row_equality(census_rows):
     def key(r):
         return (
             r["layer"],
@@ -61,16 +96,16 @@ def test_roundtrip_row_equality(sf_rows):
             r["geometry"],
         )
 
-    again = tile_to_rows(rows_to_tile(sf_rows))
-    assert sorted(map(key, again)) == sorted(map(key, sf_rows))
+    again = tile_to_rows(rows_to_tile(census_rows))
+    assert sorted(map(key, again)) == sorted(map(key, census_rows))
 
 
-def test_gzip_sniff_roundtrip(sf_rows):
-    blob = rows_to_tile(sf_rows, compress=True)
+def test_gzip_sniff_roundtrip(census_rows):
+    blob = rows_to_tile(census_rows, compress=True)
     assert blob[:2] == b"\x1f\x8b"
-    assert len(tile_to_rows(blob)) == len(sf_rows)
+    assert len(tile_to_rows(blob)) == len(census_rows)
     # double-check plain decode of an uncompressed re-encode
-    assert len(tile_to_rows(rows_to_tile(sf_rows))) == len(sf_rows)
+    assert len(tile_to_rows(rows_to_tile(census_rows))) == len(census_rows)
 
 
 def test_malformed_tiles_error():
@@ -86,9 +121,10 @@ def test_malformed_tiles_error():
 
 
 def test_feature_without_id():
-    p = "/root/reference/test/fixtures/tiles/feature-single-point-no-id.mvt"
-    with open(p, "rb") as f:
-        rows = tile_to_rows(f.read())
+    # a one-layer, one-Point tile without an id field: the census's
+    # id-less poi_label row
+    no_id = [c for c in sf_tile_rows() if c[4] is None]
+    rows = tile_to_rows(mvt_tile_bytes(no_id))
     assert len(rows) == 1 and rows[0]["feature_id"] is None
     # id stays absent across a roundtrip
     again = tile_to_rows(rows_to_tile(rows))
@@ -167,13 +203,12 @@ def test_shave_two_layers_on_real_tile(spark, sf_rows):
 
 
 def test_spark_decode_encode_roundtrip(spark):
-    with open(SF_TILE, "rb") as f:
-        blob = f.read()
+    blob = sf_tile_bytes()
     tiles = spark.createDataFrame(
         [(16, 10465, 25329, bytearray(blob))], "z int, x bigint, y bigint, tile binary"
     )
     rows = decode_tiles(tiles)
-    assert rows.count() == 58  # 7-layer census total
+    assert rows.count() == 49  # 7-layer census total (sf_tile_rows)
     re_enc = encode_tiles_mvt(rows)
     assert re_enc.count() == 1
     again = decode_tiles(re_enc)
@@ -447,8 +482,7 @@ def test_decode_geometry_real_tile(sf_rows):
 
 
 def test_decode_tile_points_spark(spark):
-    with open(SF_TILE, "rb") as f:
-        blob = f.read()
+    blob = sf_tile_bytes()
     tiles = spark.createDataFrame(
         [(16, 10465, 25329, bytearray(blob))],
         "z int, x bigint, y bigint, tile binary",
@@ -478,8 +512,7 @@ def test_decode_tiles_carry_order_independent(spark):
     POSITION (r6): a tiles frame whose column order differs from
     carry_cols must still land each carry value in its own column —
     the schema must follow carry order, not df.schema order."""
-    with open(SF_TILE, "rb") as f:
-        good = f.read()
+    good = sf_tile_bytes()
     tiles = spark.createDataFrame(
         [(7, 9, 16, bytearray(good))],
         "x bigint, y bigint, z bigint, tile binary",  # NOT (z, x, y)
@@ -489,8 +522,7 @@ def test_decode_tiles_carry_order_independent(spark):
 
 
 def test_decode_tiles_on_error_skip(spark):
-    with open(SF_TILE, "rb") as f:
-        good = f.read()
+    good = sf_tile_bytes()
     # a layer whose name bytes are invalid UTF-8
     bad_utf8 = bytes([0x1A, 0x04, 0x0A, 0x02, 0xFF, 0xFE])
     tiles = spark.createDataFrame(
@@ -510,7 +542,7 @@ def test_decode_tiles_on_error_skip(spark):
         decode_tiles(tiles).count()
     # skip mode: good tile decodes, all corruption classes are dropped
     out = decode_tiles(tiles, on_error="skip")
-    assert out.count() == 58
+    assert out.count() == 49  # census total (sf_tile_rows)
     assert out.select("x").distinct().collect()[0]["x"] == 1
 
 
@@ -519,8 +551,7 @@ def test_gzip_level_changes_output(spark):
     level must actually reach zlib, not just validate (r2 gap)."""
     from vtshaver_spark.sources.mvt import rows_to_tile
 
-    with open(SF_TILE, "rb") as f:
-        rows = tile_to_rows(f.read())
+    rows = tile_to_rows(sf_tile_bytes())
     b1 = rows_to_tile(rows, compress=True, level=1)
     b9 = rows_to_tile(rows, compress=True, level=9)
     bd = rows_to_tile(rows, compress=True)  # default = best (9)
