@@ -458,6 +458,28 @@ def flat_jpeg(sof: int = 0xC0) -> bytes:
     ])
 
 
+def flat_png() -> bytes:
+    """A complete 8x8 flat-gray PNG stream (value 128): IHDR (8-bit
+    grayscale, not interlaced), one zlib IDAT of eight scanlines with
+    filter byte 0, and IEND, each chunk with its CRC-32. The engine has
+    no PNG decoder; this is the input that checks how the image router
+    handles PNG bytes."""
+    import struct
+    import zlib
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+        return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
+
+    scanlines = (b"\x00" + b"\x80" * 8) * 8
+    return b"".join([
+        b"\x89PNG\r\n\x1a\n",
+        chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0)),
+        chunk(b"IDAT", zlib.compress(scanlines)),
+        chunk(b"IEND", b""),
+    ])
+
+
 def flat_gif() -> bytes:
     """A complete 8x8 flat-gray GIF89a stream (value 128): a two-entry
     global color table and one image whose 64 LZW codes are all index

@@ -16,11 +16,10 @@ import zlib
 
 import numpy as np
 import pytest
-from synthetic import flat_gif, flat_jpeg, flat_tiff, sf_tile_rows
+from synthetic import flat_gif, flat_jpeg, flat_png, flat_tiff, sf_tile_rows
 
 from vtshaver_spark.functions.codecs import (
     decode_image,
-    png_encode,
     rawi_encode,
     synth_image,
     wav_decode,
@@ -56,7 +55,7 @@ def _streams():
     pal3 = np.stack([pal, pal, pal], axis=2)
     return {
         "rawi": rawi_encode(img),
-        "png": png_encode(img),
+        "png": flat_png(),
         "jpeg": flat_jpeg(),
         "gif": flat_gif(),
         "tiff": flat_tiff(),

@@ -86,6 +86,19 @@ def test_legacy_type_and_id(df):
     assert ids(df, ["==", "$type", "Point"]) == {1, 2}
     assert ids(df, ["!=", "$type", "Point"]) == {3, None}
     assert ids(df, ["==", "$id", 2]) == {2}
+    # a literal of the other type is a mismatch, not a failed cast:
+    # false for ==, ordered and in, true for != and !in
+    every = {1, 2, 3, None}
+    assert ids(df, ["==", "$type", 1]) == set()
+    assert ids(df, ["!=", "$type", 1]) == every
+    assert ids(df, ["==", "$type", True]) == set()
+    assert ids(df, ["!=", "$type", False]) == every
+    assert ids(df, ["==", "$id", "x"]) == set()
+    assert ids(df, ["!=", "$id", "x"]) == every
+    assert ids(df, ["<", "$id", "x"]) == set()
+    assert ids(df, ["in", "$id", "x", 2]) == {2}
+    assert ids(df, ["!in", "$id", "x", True]) == every
+    assert ids(df, ["in", "$type", 1, "LineString"]) == {3}
 
 
 def test_legacy_combinators(df):

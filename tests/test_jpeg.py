@@ -30,5 +30,5 @@ def test_unsupported_modes_named():
         with pytest.raises(NotImplementedError) as exc:
             decode_image(flat_jpeg(sof))
         msg = str(exc.value)
-        assert "RAWI/PNG/WebP-lossless" in msg
+        assert "RAWI/WebP-lossless" in msg
         assert "JPEG" not in msg

@@ -119,8 +119,7 @@ def test_palette_rejects_too_many_colors_and_transform_mix():
 
 def test_encode_deterministic_golden():
     """Byte-level determinism pin: the encoder has no entropy source,
-    so a fixed input must produce fixed bytes across calls (the same
-    contract as the PNG size pins)."""
+    so a fixed input must produce fixed bytes across calls."""
     arr = _grad(24, 40)
     e1, e2 = webp_encode(arr), webp_encode(arr)
     assert e1 == e2

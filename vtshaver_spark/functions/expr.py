@@ -218,14 +218,24 @@ def validate_filter(filt: Any) -> None:
 # Legacy filter syntax
 # ---------------------------------------------------------------------------
 
+def _other_type(key: str, value: Any) -> bool:
+    """``value`` can never equal ``$type`` (a string) or ``$id`` (a
+    number); comparing would cast across types, an ANSI job failure."""
+    if isinstance(value, (list, dict)):
+        raise FilterError("filter value must be a string, number, or boolean")
+    if value is None:
+        return False
+    if key == "$type":
+        return not isinstance(value, str)
+    return key == "$id" and not _is_number(value)
+
+
 def _typed_eq(prop: str, value: Any) -> str:
     """One typed null-safe equality term (never NULL)."""
     if isinstance(value, bool):
         return f"({prop} <=> {_lit('true' if value else 'false')})"
     if _is_number(value):
         return f"(try_cast({prop} AS DOUBLE) <=> {double_sql(value)})"
-    if isinstance(value, (list, dict)):
-        raise FilterError("filter value must be a string, number, or boolean")
     return f"({prop} <=> {_lit(value)})"
 
 
@@ -252,15 +262,12 @@ def _legacy(filt: Any, ctx: FilterContext) -> str:
             raise FilterError(MSG_LEGACY_PROPERTY)
         key, value = filt[1], filt[2]
         lhs = _legacy_key(key, ctx)
-        if isinstance(value, (list, dict)):
-            raise FilterError("filter value must be a string, number, or boolean")
-        if key == "$type":
-            if op == "==":
-                return f"coalesce({lhs} = {_lit(value)}, false)"
-            if op == "!=":
-                return f"(NOT ({lhs} <=> {_lit(value)}))"
+        mismatch = _other_type(key, value)
+        if key == "$type" and op not in ("==", "!="):
             raise FilterError("ordered comparison not supported on $type")
-        if key == "$id" and _is_number(value):
+        if mismatch:
+            return _lit(op == "!=")
+        if key in ("$type", "$id"):
             rhs = _lit(value)
         elif isinstance(value, bool):
             rhs = _lit("true" if value else "false")
@@ -283,7 +290,7 @@ def _legacy(filt: Any, ctx: FilterContext) -> str:
         if len(filt) < 2 or not isinstance(filt[1], str):
             raise FilterError(MSG_LEGACY_PROPERTY)
         lhs = _legacy_key(filt[1], ctx)
-        terms = [_typed_eq(lhs, v) for v in filt[2:]]
+        terms = ["false" if _other_type(filt[1], v) else _typed_eq(lhs, v) for v in filt[2:]]
         membership = "(" + " OR ".join(terms) + ")" if terms else "false"
         return f"(NOT {membership})" if op == "!in" else membership
 

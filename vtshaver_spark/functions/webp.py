@@ -1,8 +1,8 @@
 """WebP lossless (VP8L) codec — pure stdlib + numpy, no libwebp/PIL.
 
 Closes the last named image-format gap (r4 VERDICT: "WebP stays
-PIL-gated"): the engine's ``decode_image`` router handles RAWI, PNG
-and WebP-lossless with zero third-party dependencies.
+PIL-gated"): the engine's ``decode_image`` router handles RAWI and
+WebP-lossless with zero third-party dependencies.
 Same edge discipline as every codec here — bytes are touched only
 inside Arrow-batched kernels after relational pruning (the reference
 keeps codecs at the pipeline edges,

@@ -2,11 +2,12 @@
 
 Opaque ``binary`` columns + typed metadata, processed with
 ``mapInPandas`` kernels (Arrow batches, vectorized numpy inside — no
-per-row Python objects beyond the unavoidable bytes). PNG and
-WebP-lossless decode natively (functions/codecs.py — pure stdlib zlib
-+ numpy, no PIL); JPEG, GIF, TIFF and lossy WebP decode only through
-PIL when it is importable. The engine's RAWI interchange format keeps
-the full pipeline executable and testable at zero codec cost:
+per-row Python objects beyond the unavoidable bytes). RAWI and
+WebP-lossless decode natively (functions/codecs.py, functions/webp.py
+— stdlib + numpy, no PIL); PNG, JPEG, GIF, TIFF and lossy WebP decode
+only through PIL when it is importable. The engine's RAWI interchange
+format keeps the full pipeline executable and testable at zero codec
+cost:
 
     generate -> decode -> feature-extract (mean RGB, luma, phash)
 
